@@ -17,12 +17,18 @@ module recreates that surface on Spark:
 
 The UDTF path is row-at-a-time Python — it is the *compatibility* surface.
 The DataFrame API (``operators/``) is the performance path; the two share
-the model library so results are identical.
+the model library so results are identical. Every forecast UDTF fits
+through the DataFrame path's forecast kernel (``operators/forecast.py``:
+``forecast_spec``, ``fit_one``, ``forecast_block``), and its ``analyze``
+parses the literal arguments with the same ``forecast_spec``: a bad literal
+argument fails at analysis, when ``spark.sql()`` is called on the driver.
 """
 
 from __future__ import annotations
 
+import json
 import math
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -30,18 +36,69 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult
 from pyspark.sql.functions import OrderingColumn, PartitioningColumn, udtf
 
-from . import models as M
-
-_FORECAST_TAIL = [
-    ("forecast_step", T.IntegerType()),
-    ("yhat", T.DoubleType()),
-    ("yhat_lower", T.DoubleType()),
-    ("yhat_upper", T.DoubleType()),
-    ("model_name", T.StringType()),
-]
+from ..operators.forecast import (ForecastSpec, fit_one, forecast_block,
+                                  forecast_schema, forecast_spec)
+from ..operators.forecast_ext import (explain_decompose, explainable,
+                                      inspect_result)
 
 
-class ForecastUDTF:
+# ---------------------------------------------------------------------------
+# Forecast UDTFs: every one parses its literal arguments in ``analyze``
+# through the kernel's forecast_spec (a bad argument fails ``spark.sql()``
+# on the driver) and fits through the kernel's fit_one.
+# ---------------------------------------------------------------------------
+
+@dataclass
+class _KernelAnalysis(AnalyzeResult):
+    """``analyze`` result carrying the parsed literal arguments; Spark
+    hands it to every UDTF instance's ``__init__``."""
+
+    spec: ForecastSpec | None = None
+    args: tuple = ()
+
+
+def _lit(arg: AnalyzeArgument | None):
+    """Literal value of an optional argument."""
+    return None if arg is None else arg.value
+
+
+def _spec(method, horizon=1, frequency=None, params_json=None,
+          level=None) -> ForecastSpec:
+    """:func:`forecast_spec` over UDTF literals: ``params_json`` is a JSON
+    object of model params; an explicit ``confidence_level`` argument wins
+    over its key."""
+    params = dict(json.loads(params_json)) if params_json else {}
+    if level is not None:
+        params["confidence_level"] = level
+    return forecast_spec(method, horizon, frequency, params)
+
+
+def _block_rows(block):
+    """Row tuples of a forecast block; numpy scalars become Python floats
+    for the UDTF row serializer."""
+    for g, step, ds, p, lo, up, name in zip(*block):
+        yield (g, step, ds, float(p), float(lo), float(up), name)
+
+
+class _KernelUDTF:
+    """Base of the forecast UDTFs: each instance takes the parsed
+    ``analyze`` result, buffers its partition's rows and hands them to
+    ``emit``."""
+
+    def __init__(self, analyze_result: _KernelAnalysis):
+        self.spec = analyze_result.spec
+        self.args = analyze_result.args
+        self._rows: list = []
+
+    def eval(self, row, *_):
+        self._rows.append(row)
+
+    def terminate(self):
+        if self._rows:
+            yield from self.emit(self._rows)
+
+
+class ForecastUDTF(_KernelUDTF):
     """``ts_forecast_by(TABLE(t), group_col, ds_col, y_col, method, horizon,
     frequency[, confidence_level[, params_json]])`` — SQL form of the
     forecasting operator. The two trailing arguments are optional, matching
@@ -56,55 +113,22 @@ class ForecastUDTF:
                 frequency: AnalyzeArgument,
                 confidence_level: AnalyzeArgument | None = None,
                 params_json: AnalyzeArgument | None = None) -> AnalyzeResult:
-        schema = table.dataType
         g, d = group_col.value, ds_col.value
-        out = T.StructType(
-            [T.StructField(g, schema[g].dataType),
-             T.StructField("forecast_step", T.IntegerType()),
-             T.StructField(d, schema[d].dataType)]
-            + [T.StructField(n, t) for n, t in _FORECAST_TAIL[1:]])
-        return AnalyzeResult(
-            schema=out,
+        return _KernelAnalysis(
+            schema=forecast_schema(table.dataType, g, d),
             partitionBy=[PartitioningColumn(g)],
             orderBy=[OrderingColumn(d)],
-        )
+            spec=_spec(method.value, horizon.value, frequency.value,
+                       _lit(params_json), _lit(confidence_level)),
+            args=(g, d, y_col.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method, horizon, frequency,
-             confidence_level=None, params_json=None):
-        self._args = (group_col, ds_col, y_col, method, int(horizon),
-                      frequency, confidence_level, params_json)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import json
-
-        from ..frequency import parse_frequency
-        from ..operators.forecast import _future_dates_pd
-        (group_col, ds_col, y_col, method, h, frequency, level,
-         params_json) = self._args
-        freq = parse_frequency(frequency)
-        pars = dict(json.loads(params_json)) if params_json else {}
-        season = int(pars.pop("seasonal_period", 0) or 0)
-        rows = self._rows
-        g = rows[0][group_col]
-        ds_vals = [r[ds_col] for r in rows]
-        y_vals = [r[y_col] if r[y_col] is not None else math.nan for r in rows]
-        try:
-            r = M.forecast(y_vals, h, method, season_length=season,
-                           level=float(level) if level is not None else 0.90,
-                           params=pars)
-        except Exception:
-            return  # error isolation: skip failing series
-        is_int = isinstance(ds_vals[-1], int)
-        future = _future_dates_pd(ds_vals[-1], h, freq, is_int)
-        for i in range(h):
-            yield (g, i + 1, future[i], float(r.point[i]), float(r.lower[i]),
-                   float(r.upper[i]), r.model_name)
+    def emit(self, rows):
+        g, d, y = self.args
+        r = fit_one(self.spec, _nan_y(rows, y))
+        if r is not None:
+            last = rows[-1][d]
+            yield from _block_rows(forecast_block(
+                self.spec, rows[0][g], last, r, isinstance(last, int)))
 
 
 class FillGapsUDTF:
@@ -1278,7 +1302,7 @@ def _cv_udtfs():
                     elif pos <= te + h:
                         yield (g, r[ds_col], r[y_col], fold_id, "test")
 
-    class BacktestAutoUDTF:
+    class BacktestAutoUDTF(_KernelUDTF):
         """``ts_backtest_auto_by(TABLE(t), 'id', 'ds', 'y', 'Naive', '7',
         '2')`` — expanding-window folds + per-fold fit + error columns
         (mirror of cv.ts_backtest_auto_by; fold boundaries match
@@ -1288,7 +1312,7 @@ def _cv_udtfs():
         def analyze(table, group_col, ds_col, y_col, method, horizon,
                     n_folds):
             g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
+            return _KernelAnalysis(schema=T.StructType([
                 _f(g, table.dataType[g].dataType),
                 _f("fold_id", T.LongType()),
                 _f(ds_col.value, table.dataType[ds_col.value].dataType),
@@ -1296,28 +1320,18 @@ def _cv_udtfs():
                 _f("abs_error", D), _f("yhat_lower", D), _f("yhat_upper", D),
                 _f("model_name", T.StringType())]),
                 partitionBy=[PartitioningColumn(g)],
-                orderBy=[OrderingColumn(ds_col.value)])
+                orderBy=[OrderingColumn(ds_col.value)],
+                spec=_spec(method.value, horizon.value),
+                args=(g, ds_col.value, y_col.value, int(n_folds.value)))
 
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, ds_col, y_col, method, horizon,
-                 n_folds):
-            self._args = (group_col, ds_col, y_col, str(method),
-                          int(horizon), int(n_folds))
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
+        def emit(self, rows):
             import numpy as np
 
-            from . import models as M
-            group_col, ds_col, y_col, method, h, folds = self._args
-            g = self._rows[0][group_col]
-            y = _nan_y(self._rows, y_col)
+            group_col, ds_col, y_col, folds = self.args
+            h = self.spec.horizon
+            g = rows[0][group_col]
+            y = _nan_y(rows, y_col)
             n = len(y)
-            model = M.canonical_model(method)
             for fold_id in range(folds):
                 train_end = max(n - folds * h, 1) - 1 + fold_id * h
                 if train_end + h >= n or train_end < 0:
@@ -1325,13 +1339,11 @@ def _cv_udtfs():
                 train = y[:train_end + 1]
                 if np.isfinite(train).sum() < 3:
                     continue
-                try:
-                    r = M.forecast(train, h, model, season_length=0,
-                                   level=0.90, params={})
-                except Exception:
+                r = fit_one(self.spec, train)
+                if r is None:
                     continue
                 for s in range(1, h + 1):
-                    row = self._rows[train_end + s]
+                    row = rows[train_end + s]
                     actual = row[y_col]
                     yhat = float(r.point[s - 1])
                     err = None if actual is None else float(actual) - yhat
@@ -1913,271 +1925,172 @@ class FeaturesTableUDTF(FeaturesByUDTF):
         return FeaturesByUDTF._analyze(table, False, *args)
 
 
-class ForecastInspectUDTF:
+class ForecastInspectUDTF(_KernelUDTF):
     """``ts_forecast_inspect_by(TABLE(t), 'id', 'ds', 'y', 'SES'[,
     params_json])`` — fitted-parameter scalars (the DataFrame op's
     ``inspection`` struct flattened; array diagnostics live on the
     DataFrame path)."""
 
     @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, *rest):
+    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
         g = group_col.value
         D = T.DoubleType()
-        return AnalyzeResult(schema=T.StructType([
+        return _KernelAnalysis(schema=T.StructType([
             _f(g, table.dataType[g].dataType),
             _f("model_family", T.StringType()), _f("spec", T.StringType()),
             _f("alpha", D), _f("beta", D), _f("gamma", D), _f("phi", D),
             _f("theta", D), _f("aic", D), _f("bic", D),
             _f("seasonal_period", T.LongType())]),
             partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)])
+            orderBy=[OrderingColumn(ds_col.value)],
+            spec=_spec(method.value, params_json=_lit(params_json)),
+            args=(g, y_col.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method, *rest):
-        self._args = (group_col, ds_col, y_col, str(method),
-                      str(rest[0]) if rest else None)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import json
-
-        from ..operators.forecast_ext import inspect_result
-        group_col, _ds, y_col, method, params_json = self._args
-        pars = dict(json.loads(params_json)) if params_json else {}
-        season = int(pars.pop("seasonal_period", 0) or 0)
-        level = float(pars.pop("confidence_level", 0.90))
-        g = self._rows[0][group_col]
-        y = _nan_y(self._rows, y_col)
-        try:
-            r = M.forecast(y, 1, M.canonical_model(method),
-                           season_length=season, level=level, params=pars)
-        except Exception:
+    def emit(self, rows):
+        group_col, y_col = self.args
+        r = fit_one(self.spec, _nan_y(rows, y_col))
+        if r is None:
             return
         i = inspect_result(r)
-        yield (g, i["model_family"], i["spec"], i["alpha"], i["beta"],
-               i["gamma"], i["phi"], i["theta"], i["aic"], i["bic"],
-               i["seasonal_period"])
+        yield (rows[0][group_col], i["model_family"], i["spec"], i["alpha"],
+               i["beta"], i["gamma"], i["phi"], i["theta"], i["aic"],
+               i["bic"], i["seasonal_period"])
 
 
-class ForecastExplainUDTF:
+class ForecastExplainUDTF(_KernelUDTF):
     """``ts_forecast_explain_by(TABLE(t), 'id', 'ds', 'y', 'ETS', '7'[,
     params_json])`` — per-horizon additive decomposition, one row per step
     (the DataFrame op's struct arrays unrolled)."""
 
     @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, horizon, *rest):
+    def analyze(table, group_col, ds_col, y_col, method, horizon,
+                params_json=None):
         g = group_col.value
         D = T.DoubleType()
-        return AnalyzeResult(schema=T.StructType([
+        return _KernelAnalysis(schema=T.StructType([
             _f(g, table.dataType[g].dataType),
             _f("forecast_step", T.IntegerType()), _f("level", D),
             _f("trend", D), _f("seasonal", D), _f("residual", D)]),
             partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)])
+            orderBy=[OrderingColumn(ds_col.value)],
+            spec=explainable(_spec(method.value, horizon.value,
+                                   params_json=_lit(params_json))),
+            args=(g, y_col.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method, horizon, *rest):
-        self._args = (group_col, ds_col, y_col, str(method), int(horizon),
-                      str(rest[0]) if rest else None)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
+    def emit(self, rows):
+        group_col, y_col = self.args
+        spec = self.spec
+        y = _nan_y(rows, y_col)
+        r = fit_one(spec, y)
+        if r is None:
             return
-        import json
-
-        from ..operators.forecast_ext import _EXPLAINABLE, explain_decompose
-        group_col, _ds, y_col, method, h, params_json = self._args
-        model = M.canonical_model(method)
-        if model not in _EXPLAINABLE:
-            raise ValueError(f"Model {model} does not support explanation "
-                             "(ETS/MSTL/Theta only)")
-        pars = dict(json.loads(params_json)) if params_json else {}
-        season = int(pars.pop("seasonal_period", 0) or 0)
-        level = float(pars.pop("confidence_level", 0.90))
-        g = self._rows[0][group_col]
-        y = _nan_y(self._rows, y_col)
-        try:
-            r = M.forecast(y, h, model, season_length=season, level=level,
-                           params=pars)
-        except Exception:
-            return
-        dec = explain_decompose(y, r, h, season)
-        for i in range(h):
-            yield (g, i + 1, dec["level"][i], dec["trend"][i],
-                   dec["seasonal"][i], dec["residual"][i])
+        dec = explain_decompose(y, r, spec.horizon, spec.season)
+        for i in range(spec.horizon):
+            yield (rows[0][group_col], i + 1, dec["level"][i],
+                   dec["trend"][i], dec["seasonal"][i], dec["residual"][i])
 
 
-class ForecastExogByUDTF:
+class ForecastExogByUDTF(_KernelUDTF):
     """``ts_forecast_exog_by(TABLE(t), 'id', 'ds', 'y', 'x1,x2', '1d',
     'Naive', '7'[, params_json])`` — union-convention exog forecast: trailing
     rows with NULL y are the future rows carrying regressor values (the
     reference's two-table macro collapsed into the standard panel-future
-    layout). Mirror of forecast_ext.ts_forecast_exog_by's OLS +
-    model-on-residuals compute."""
-
-    grouped = True
+    layout). Fits through the kernel's regression with model errors, like
+    forecast_ext.ts_forecast_exog_by."""
 
     @staticmethod
-    def analyze(table, *args):
-        g, d = args[0].value, args[1].value
-        s = table.dataType
-        D = T.DoubleType()
-        return AnalyzeResult(schema=T.StructType([
-            _f(g, s[g].dataType), _f("forecast_step", T.IntegerType()),
-            _f(d, s[d].dataType), _f("yhat", D), _f("yhat_lower", D),
-            _f("yhat_upper", D), _f("model_name", T.StringType())]),
+    def analyze(table, group_col, ds_col, y_col, xreg_csv, frequency, method,
+                horizon, params_json=None):
+        g, d = group_col.value, ds_col.value
+        return _KernelAnalysis(
+            schema=forecast_schema(table.dataType, g, d),
             partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)])
+            orderBy=[OrderingColumn(d)],
+            spec=_spec(method.value, horizon.value, frequency.value,
+                       _lit(params_json)),
+            args=(g, d, y_col.value, xreg_csv.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, *args):
-        self._args = args
-        self._rows.append(row)
-
-    def _compute(self):
-        """Yields (group, step, ds, yhat, lower, upper, model_name)."""
-        import json
-
+    def _block(self, rows):
+        """The forecast block of the union-convention series, or None when
+        the series is skipped."""
         import numpy as np
-
-        from ..frequency import parse_frequency
-        from ..operators.forecast import _future_dates_pd
-        from ..operators.forecast_ext import _ols
-        args = self._args
-        if self.grouped:
-            g_col, ds_col, y_col = args[0], args[1], args[2]
-            xreg_csv, frequency, method, horizon = args[3:7]
-            params_json = args[7] if len(args) > 7 else None
-            g = self._rows[0][g_col]
-        else:
-            ds_col, y_col = args[0], args[1]
-            xreg_csv, method, horizon = args[2:5]
-            frequency = "1d"
-            params_json = args[5] if len(args) > 5 else None
-            g = None
-        pars = dict(json.loads(params_json)) if params_json else {}
-        season = int(pars.pop("seasonal_period", 0) or 0)
-        level = float(pars.pop("confidence_level", 0.90))
-        h = int(horizon)
+        g, ds_col, y_col, xreg_csv = self.args
         xcols = [c for c in str(xreg_csv).split(",") if c.strip()]
-        model = M.canonical_model(str(method))
-        freq = parse_frequency(str(frequency))
-        nn = [i for i, r in enumerate(self._rows) if r[y_col] is not None]
+        nn = [i for i, r in enumerate(rows) if r[y_col] is not None]
         if not nn:
-            return
+            return None
         split = nn[-1] + 1
-        hist, fut = self._rows[:split], self._rows[split:split + h]
+        hist, fut = rows[:split], rows[split:split + self.spec.horizon]
         if not fut or len(hist) < 3:
-            return
+            return None
 
-        def xmat(rows):
+        def xmat(rs):
             return np.array([[math.nan if r[c] is None else float(r[c])
-                              for c in xcols] for r in rows])
+                              for c in xcols] for r in rs])
 
-        yv = _nan_y(hist, y_col)
-        try:
-            yv = M.validate_series(yv)
-            beta, b0, fitted = _ols(xmat(hist), yv)
-            resid = yv - fitted
-            r = M.forecast(resid, len(fut), model, season_length=season,
-                           level=level, params=pars)
-        except Exception:
-            return  # error isolation, matching the DataFrame op
-        reg_future = xmat(fut) @ beta + b0
-        is_int = isinstance(hist[-1][ds_col], int)
-        future_ds = _future_dates_pd(hist[-1][ds_col], len(fut), freq, is_int)
-        for i in range(len(fut)):
-            yield (g, i + 1, future_ds[i],
-                   float(reg_future[i] + r.point[i]),
-                   float(reg_future[i] + r.lower[i]),
-                   float(reg_future[i] + r.upper[i]), r.model_name + "X")
+        r = fit_one(self.spec, _nan_y(hist, y_col), len(fut),
+                    (xmat(hist), xmat(fut)))
+        if r is None:
+            return None  # error isolation, matching the DataFrame op
+        last = hist[-1][ds_col]
+        return forecast_block(self.spec, None if g is None else rows[0][g],
+                              last, r, isinstance(last, int))
 
-    def terminate(self):
-        if not self._rows:
-            return
-        for g, step, ds, p, lo, up, name in self._compute():
-            yield (g, step, ds, p, lo, up, name)
+    def emit(self, rows):
+        block = self._block(rows)
+        if block is not None:
+            yield from _block_rows(block)
 
 
 class ForecastExogUDTF(ForecastExogByUDTF):
-    """``ts_forecast_exog(TABLE(t), 'ds', 'y', 'x1,x2', 'Naive', '7')`` —
-    single-series array-valued form (mirror of
+    """``ts_forecast_exog(TABLE(t), 'ds', 'y', 'x1,x2', 'Naive', '7'[,
+    params_json])`` — single-series array-valued form (mirror of
     forecast_ext.ts_forecast_exog)."""
 
-    grouped = False
-
     @staticmethod
-    def analyze(table, *args):
+    def analyze(table, ds_col, y_col, xreg_csv, method, horizon,
+                params_json=None):
         arr = T.ArrayType(T.DoubleType())
-        return AnalyzeResult(schema=T.StructType([
+        return _KernelAnalysis(schema=T.StructType([
             _f("point_forecasts", arr), _f("lower_bounds", arr),
             _f("upper_bounds", arr), _f("model_name", T.StringType())]),
             withSinglePartition=True,
-            orderBy=[OrderingColumn(args[0].value)])
+            orderBy=[OrderingColumn(ds_col.value)],
+            spec=_spec(method.value, horizon.value, "1d", _lit(params_json)),
+            args=(None, ds_col.value, y_col.value, xreg_csv.value))
 
-    def terminate(self):
-        if not self._rows:
-            return
-        out = list(self._compute())
-        if not out:
-            return
-        yield ([v[3] for v in out], [v[4] for v in out],
-               [v[5] for v in out], out[0][6])
+    def emit(self, rows):
+        block = self._block(rows)
+        if block is not None:
+            yield tuple([float(v) for v in col] for col in block[3:6]) \
+                + (block[6][0],)
 
 
-class ForecastSingleUDTF:
+class ForecastSingleUDTF(_KernelUDTF):
     """``ts_forecast(TABLE(t), 'ds', 'y', 'Naive', '7'[, frequency,
     confidence_level, params_json])`` — single-series form of
     ts_forecast_by (ref macro takes no group column)."""
 
     @staticmethod
-    def analyze(table, ds_col, y_col, method, horizon, *rest):
+    def analyze(table, ds_col, y_col, method, horizon, frequency=None,
+                confidence_level=None, params_json=None):
         d = ds_col.value
-        return AnalyzeResult(schema=T.StructType(
-            [_f("forecast_step", T.IntegerType()),
-             _f(d, table.dataType[d].dataType)]
-            + [_f(n, t) for n, t in _FORECAST_TAIL[1:]]),
-            withSinglePartition=True, orderBy=[OrderingColumn(d)])
+        return _KernelAnalysis(
+            schema=forecast_schema(table.dataType, None, d),
+            withSinglePartition=True, orderBy=[OrderingColumn(d)],
+            spec=_spec(method.value, horizon.value,
+                       "1d" if frequency is None else frequency.value,
+                       _lit(params_json), _lit(confidence_level)),
+            args=(d, y_col.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, ds_col, y_col, method, horizon, *rest):
-        self._args = (ds_col, y_col, str(method), int(horizon), *rest)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import json
-
-        from ..frequency import parse_frequency
-        from ..operators.forecast import _future_dates_pd
-        ds_col, y_col, method, h, *rest = self._args
-        freq = parse_frequency(str(rest[0]) if rest else "1d")
-        level = float(rest[1]) if len(rest) > 1 else 0.90
-        pars = dict(json.loads(str(rest[2]))) if len(rest) > 2 else {}
-        season = int(pars.pop("seasonal_period", 0) or 0)
-        y = _nan_y(self._rows, y_col)
-        try:
-            r = M.forecast(y, h, method, season_length=season, level=level,
-                           params=pars)
-        except Exception:
-            return
-        last = self._rows[-1][ds_col]
-        future = _future_dates_pd(last, h, freq, isinstance(last, int))
-        for i in range(h):
-            yield (i + 1, future[i], float(r.point[i]), float(r.lower[i]),
-                   float(r.upper[i]), r.model_name)
+    def emit(self, rows):
+        ds_col, y_col = self.args
+        r = fit_one(self.spec, _nan_y(rows, y_col))
+        if r is not None:
+            last = rows[-1][ds_col]
+            for row in _block_rows(forecast_block(self.spec, None, last, r,
+                                                  isinstance(last, int))):
+                yield row[1:]
 
 
 class CvSplitFoldsUDTF:
@@ -2262,62 +2175,41 @@ class CvSplitUDTF:
                     yield (g, r[ds_col], r[y_col], fold_id, "test")
 
 
-class CvForecastUDTF:
+class CvForecastUDTF(_KernelUDTF):
     """``ts_cv_forecast_by(TABLE(folds), 'id', 'ds', 'y', 'Naive'[,
     params_json])`` — fit per (group, fold) train slice, predict the test
     rows (mirror of cv.ts_cv_forecast_by; the folds table carries fold_id
     and split columns from ts_cv_folds_by)."""
 
     @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, *rest):
+    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
         s = table.dataType
         g, d = group_col.value, ds_col.value
         D = T.DoubleType()
-        return AnalyzeResult(schema=T.StructType([
+        return _KernelAnalysis(schema=T.StructType([
             _f("fold_id", T.LongType()), _f(g, s[g].dataType),
             _f(d, s[d].dataType), _f(y_col.value, D),
             _f("split", T.StringType()), _f("yhat", D), _f("yhat_lower", D),
             _f("yhat_upper", D), _f("model_name", T.StringType())]),
             partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)])
+            orderBy=[OrderingColumn(d)],
+            spec=_spec(method.value, params_json=_lit(params_json)),
+            args=(g, d, y_col.value))
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method, *rest):
-        self._args = (group_col, ds_col, y_col, str(method),
-                      str(rest[0]) if rest else None)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import json
-
-        import numpy as np
-        group_col, ds_col, y_col, method, params_json = self._args
-        pars = dict(json.loads(params_json)) if params_json else {}
-        level = float(pars.get("confidence_level", 0.90))
-        season = int(pars.get("seasonal_period", 0) or 0)
-        model = M.canonical_model(method)
-        g = self._rows[0][group_col]
+    def emit(self, rows):
+        group_col, ds_col, y_col = self.args
+        g = rows[0][group_col]
         folds: dict = {}
-        for r in self._rows:
+        for r in rows:
             folds.setdefault(r["fold_id"], []).append(r)
         for fold in sorted(folds):
-            rows = folds[fold]
-            train = [r for r in rows if r["split"] == "train"]
-            test = [r for r in rows if r["split"] == "test"]
+            train = [r for r in folds[fold] if r["split"] == "train"]
+            test = [r for r in folds[fold] if r["split"] == "test"]
             h = len(test)
             if h == 0 or len(train) < 3:
                 continue
-            try:
-                r = M.forecast(np.array([math.nan if t[y_col] is None
-                                         else float(t[y_col])
-                                         for t in train]),
-                               h, model, season_length=season, level=level,
-                               params=pars)
-            except Exception:
+            r = fit_one(self.spec, _nan_y(train, y_col), h)
+            if r is None:
                 continue
             for i, t in enumerate(test):
                 yield (fold, g, t[ds_col],

@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import parse_frequency
-from ..functions import models as M
+from ..functions.batched import batched_grouped_map
+from .forecast import fit_one, forecast_spec
 
 
 def _fold_params(params: dict | None) -> dict:
@@ -215,10 +216,7 @@ def ts_cv_forecast_by(folds_df: DataFrame, group_col: str, ds_col: str,
     rows. Output ``(fold_id, <group>, <ds>, <y>, split='test', yhat,
     yhat_lower, yhat_upper, model_name)`` — ref
     ``ts_cv_forecast_native.cpp:461-485``."""
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    level = float(params.get("confidence_level", 0.90))
-    season = int(params.get("seasonal_period", 0) or 0)
+    spec = forecast_spec(method, params=params)
     gtype = folds_df.schema[group_col].dataType
     ds_type = folds_df.schema[ds_col].dataType
     schema = T.StructType([
@@ -239,19 +237,15 @@ def ts_cv_forecast_by(folds_df: DataFrame, group_col: str, ds_col: str,
         test = pdf[pdf["split"] == "test"]
         h = len(test)
         if h == 0 or len(train) < 3:
-            return None  # skip — same effect as the old empty DataFrame
-        try:
-            r = M.forecast(train[y_col].astype(float).to_numpy(), h, model,
-                           season_length=season, level=level, params=params)
-        except Exception:
             return None
-        # columnar return (see batched_grouped_map): same column values
-        # in the same schema order as the previous per-fold DataFrame
+        r = fit_one(spec, train[y_col].astype(float).to_numpy(), h)
+        if r is None:
+            return None
+        # columnar return (see batched_grouped_map)
         return ([fold] * h, [gval] * h, test[ds_col].to_numpy(),
                 test[y_col].astype(float).to_numpy(), ["test"] * h,
                 r.point, r.lower, r.upper, [r.model_name] * h)
 
-    from ..functions.batched import batched_grouped_map
     return batched_grouped_map(folds_df, [group_col, "fold_id"], ds_col,
                                schema, fn)
 

@@ -28,6 +28,9 @@ treated as ordinals (``ts_forecast_native.cpp:717-726``).
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,6 +49,147 @@ FORECAST_FIELDS = [
     ("yhat_upper", T.DoubleType()),
     ("model_name", T.StringType()),
 ]
+
+
+# ---------------------------------------------------------------------------
+# Forecast kernel: ONE argument parser, ONE isolated fit and ONE output
+# block, shared by every DataFrame operator and SQL UDTF that fits the model
+# library — as the reference's macros, table functions and aggregate all
+# reach one Rust core (ts_macros.cpp:575-604 -> ts_forecast_scalar.cpp ->
+# forecast.rs:512+).
+# ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class ForecastSpec:
+    """Validated forecast arguments, built by :func:`forecast_spec`."""
+
+    model: str                # canonical model name
+    horizon: int
+    freq: Frequency | None    # None where no future dates are emitted
+    level: float              # confidence_level
+    season: int               # seasonal_period (0 = auto-detect)
+    params: dict              # the model params as given
+    tds: tuple | None         # fixed-frequency step offsets
+
+
+def forecast_spec(method, horizon=1, frequency=None,
+                  params: dict | None = None) -> ForecastSpec:
+    """Parse and validate forecast arguments on the driver, before any
+    Spark job: resolves the canonical model, the frequency,
+    ``confidence_level`` in (0, 1), ``horizon >= 1`` and
+    ``seasonal_period``. Raises ``ValueError``."""
+    params = dict(params or {})
+    model = M.canonical_model(str(method))
+    freq = None if frequency is None else parse_frequency(frequency)
+    level = float(params.get("confidence_level", 0.90))
+    if not (0.0 < level < 1.0):
+        raise ValueError("confidence_level must be in (0, 1)")
+    h = int(horizon)
+    if h < 1:
+        raise ValueError("horizon must be >= 1")
+    # fixed-frequency step offsets do not depend on the series: built once
+    # per query, not once per series
+    tds = (tuple(pd.Timedelta(seconds=freq.n * s) for s in range(1, h + 1))
+           if freq is not None and freq.kind == "fixed" else None)
+    return ForecastSpec(model, h, freq, level,
+                        int(params.get("seasonal_period", 0) or 0), params,
+                        tds)
+
+
+def _ols(X: np.ndarray, y: np.ndarray):
+    """Least-squares with intercept; returns (beta, intercept, fitted).
+
+    The single-regressor case uses the explicit-sums formula in sequential
+    (fold) summation order — expression-identical to the SQL oracles, so the
+    downstream per-series optimizers see bit-identical residuals (lstsq's
+    SVD path agrees only to ~1e-12, enough to flip optimizer tie-breaks)."""
+    if X.ndim == 2 and X.shape[1] == 1:
+        x = X[:, 0].astype(float)
+        n = len(x)
+        sx = M._seq_sum(x)
+        sy = M._seq_sum(y)
+        sxy = M._seq_sum(x * y)
+        sxx = M._seq_sum(x * x)
+        den = float(n) * sxx - sx * sx
+        if den != 0:
+            b1 = (float(n) * sxy - sx * sy) / den
+            b0 = (sy - b1 * sx) / float(n)
+            return np.array([b1]), float(b0), b0 + b1 * x
+    A = np.column_stack([np.ones(len(X)), X])
+    coef, *_ = np.linalg.lstsq(A, y, rcond=None)
+    return coef[1:], float(coef[0]), A @ coef
+
+
+def fit(spec: ForecastSpec, y, h: int | None = None,
+        xreg: tuple | None = None) -> M.ForecastResult:
+    """Fit ``spec``'s model to one series and forecast ``h`` steps
+    (default ``spec.horizon``). A failed fit raises.
+
+    ``xreg = (X, X_future)`` fits regression with model errors (ref
+    ``forecast.rs:374-446``): OLS of ``y`` on ``X`` with intercept, the
+    model on the OLS residuals, ``X_future @ beta + intercept`` added back
+    to the point and bounds, and ``X`` appended to the model name."""
+    h = spec.horizon if h is None else h
+    if xreg is not None:
+        y = M.validate_series(np.asarray(y, dtype=float))
+        beta, b0, fitted = _ols(xreg[0], y)
+        y = y - fitted
+    r = M.forecast(y, h, spec.model, season_length=spec.season,
+                   level=spec.level, params=spec.params)
+    if xreg is None:
+        return r
+    reg = xreg[1] @ beta + b0
+    return replace(r, point=reg + r.point, lower=reg + r.lower,
+                   upper=reg + r.upper, model_name=r.model_name + "X")
+
+
+def fit_one(spec: ForecastSpec, y, h: int | None = None,
+            xreg: tuple | None = None) -> M.ForecastResult | None:
+    """:func:`fit` with per-series error isolation, the one place a failed
+    fit is caught: it returns None and the caller skips the series (ref
+    ``ts_forecast_native.cpp:666-672``)."""
+    try:
+        return fit(spec, y, h, xreg)
+    except Exception:
+        return None
+
+
+def forecast_schema(schema: T.StructType, group_col: str | None,
+                    ds_col: str) -> T.StructType:
+    """``(group, forecast_step, ds, yhat, yhat_lower, yhat_upper,
+    model_name)`` with the input's group/date names and types (ref
+    ``ts_forecast_native.cpp:426-452``); no group column when
+    ``group_col`` is None."""
+    key = [] if group_col is None else [group_col]
+    return T.StructType(
+        [T.StructField(c, schema[c].dataType) for c in key]
+        + [T.StructField("forecast_step", T.IntegerType()),
+           T.StructField(ds_col, schema[ds_col].dataType)]
+        + [T.StructField(n, t) for n, t in FORECAST_FIELDS[1:]])
+
+
+def forecast_block(spec: ForecastSpec, key, last, r: M.ForecastResult,
+                   is_int: bool) -> tuple:
+    """One fitted series as columns in :func:`forecast_schema` order.
+
+    Future dates step from the series' ``last`` ds: integer date columns
+    are ordinals, calendar frequencies use month-end-clamped month
+    arithmetic, fixed ones add the per-query ``spec.tds`` (Timestamp +
+    Timedelta is exact integer-nanosecond arithmetic) — ref
+    ``ts_forecast_native.cpp:683-726``."""
+    h = len(r.point)
+    freq = spec.freq
+    if is_int or freq.kind == "int":
+        n = freq.n if freq.kind == "int" else 1
+        ds = [last + n * s for s in range(1, h + 1)]
+    elif freq.kind == "month":
+        last = pd.Timestamp(last)
+        ds = [_add_months_clamped(last, freq.n * s) for s in range(1, h + 1)]
+    else:
+        last = pd.Timestamp(last)
+        ds = [last + td for td in spec.tds[:h]]
+    return ([key] * h, list(range(1, h + 1)), ds, r.point, r.lower, r.upper,
+            [r.model_name] * h)
 
 
 def _z(level: float) -> float:
@@ -744,25 +888,8 @@ def _add_months_clamped(ts: pd.Timestamp, k: int) -> pd.Timestamp:
                         minute=ts.minute, second=ts.second)
 
 
-def _future_dates_pd(last, h: int, freq: Frequency, is_int: bool,
-                     _tds: list | None = None):
-    if is_int or freq.kind == "int":
-        n = freq.n if freq.kind == "int" else 1
-        return [last + n * s for s in range(1, h + 1)]
-    last = pd.Timestamp(last)
-    if freq.kind == "month":
-        return [_add_months_clamped(last, freq.n * s) for s in range(1, h + 1)]
-    if _tds is not None:
-        # per-query precomputed Timedeltas (they do not depend on `last`);
-        # Timestamp + Timedelta is exact integer-nanosecond arithmetic,
-        # identical to constructing the Timedelta inline
-        return [last + td for td in _tds]
-    return [last + pd.Timedelta(seconds=freq.n * s) for s in range(1, h + 1)]
-
-
 def _forecast_udf(df: DataFrame, group_col: str, ds_col: str, y_col: str,
-                  model: str, horizon: int, freq: Frequency, level: float,
-                  params: dict) -> DataFrame:
+                  spec: ForecastSpec) -> DataFrame:
     """Model-library path.
 
     Physical strategy: ``repartition(group) + sortWithinPartitions(group, ds)
@@ -774,48 +901,30 @@ def _forecast_udf(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     ~10k. A series split across adjacent Arrow batches is handled with a
     carry buffer (sort guarantees contiguity within the partition).
     """
-    ds_type = df.schema[ds_col].dataType
-    gtype = df.schema[group_col].dataType
-    is_int_ds = isinstance(ds_type, (T.IntegerType, T.LongType))
-    schema = T.StructType(
-        [T.StructField(group_col, gtype)]
-        + [T.StructField("forecast_step", T.IntegerType())]
-        + [T.StructField(ds_col, ds_type)]
-        + [T.StructField(n, t) for n, t in FORECAST_FIELDS[1:]]
-    )
-    h = int(horizon)
-    season = int(params.get("seasonal_period", 0) or 0)
-    pars = dict(params)
-    steps = list(range(1, h + 1))
-    # second/day frequencies: the step offsets are series-independent —
-    # build the Timedeltas once per query, not once per series
-    tds = ([pd.Timedelta(seconds=freq.n * s) for s in steps]
-           if not is_int_ds and freq.kind not in ("int", "month") else None)
+    is_int_ds = isinstance(df.schema[ds_col].dataType,
+                           (T.IntegerType, T.LongType))
 
     def one_series(key, pdf: pd.DataFrame):
-        yv = pdf[y_col].to_numpy(dtype=float)
-        try:
-            r = M.forecast(yv, h, model, season_length=season, level=level,
-                           params=pars)
-        except Exception:
-            # error isolation: skip failing groups (ref ts_forecast_native.cpp:666-672)
+        r = fit_one(spec, pdf[y_col].to_numpy(dtype=float))
+        if r is None:
             return None
-        last = pdf[ds_col].iloc[-1]
-        # columnar return (see batched_grouped_map): same column values
-        # in the same schema order as the previous per-series DataFrame
-        return ([key] * h, steps,
-                _future_dates_pd(last, h, freq, is_int_ds, tds),
-                r.point, r.lower, r.upper, [r.model_name] * h)
+        # columnar return (see batched_grouped_map)
+        return forecast_block(spec, key, pdf[ds_col].iloc[-1], r, is_int_ds)
 
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col)) \
              .filter(F.col(ds_col).isNotNull())
-    return batched_grouped_map(base, [group_col], ds_col, schema,
+    return batched_grouped_map(base, [group_col], ds_col,
+                               forecast_schema(df.schema, group_col, ds_col),
                                lambda kt, g: one_series(kt[0], g))
 
 
 # ---------------------------------------------------------------------------
 # Public API
 # ---------------------------------------------------------------------------
+
+_SEASONAL_REQUIRED = {"SeasonalNaive", "SeasonalWindowAverage", "HoltWinters",
+                      "SeasonalES", "SeasonalESOptimized"}
+
 
 def ts_forecast_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                    method: str, horizon: int, frequency, params: dict | None = None,
@@ -825,28 +934,17 @@ def ts_forecast_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     Ref: macro ``ts_macros.cpp:575-604`` → ``_ts_forecast_scalar``
     (``ts_forecast_scalar.cpp:17-30``) → ``forecast.rs:512+``.
     """
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    freq = parse_frequency(frequency)
-    level = float(params.get("confidence_level", 0.90))
-    if not (0.0 < level < 1.0):
-        raise ValueError("confidence_level must be in (0, 1)")
-    if int(horizon) < 1:
-        raise ValueError("horizon must be >= 1")
-    seasonal_required = model in ("SeasonalNaive", "SeasonalWindowAverage",
-                                  "HoltWinters", "SeasonalES", "SeasonalESOptimized")
-    if model in M.SQL_PATH_MODELS and not (
-            seasonal_required and int(params.get("seasonal_period", 0) or 0) == 0):
-        return _forecast_sql(df, group_col, ds_col, y_col, model, horizon, freq,
-                             level, params)
-    if (model == "Holt" and params.get("alpha") is not None
-            and params.get("beta") is not None):
-        # both smoothing constants closed -> no optimizer -> the pure-
-        # Catalyst fold path; the optimizing form stays on Python
-        return _forecast_sql(df, group_col, ds_col, y_col, model, horizon,
-                             freq, level, params)
-    return _forecast_udf(df, group_col, ds_col, y_col, model, horizon, freq,
-                         level, params)
+    spec = forecast_spec(method, horizon, frequency, params)
+    model, p = spec.model, spec.params
+    if ((model in M.SQL_PATH_MODELS
+         and not (model in _SEASONAL_REQUIRED and spec.season == 0))
+            # both Holt smoothing constants closed -> no optimizer -> the
+            # pure-Catalyst fold path; the optimizing form stays on Python
+            or (model == "Holt" and p.get("alpha") is not None
+                and p.get("beta") is not None)):
+        return _forecast_sql(df, group_col, ds_col, y_col, model,
+                             spec.horizon, spec.freq, spec.level, p)
+    return _forecast_udf(df, group_col, ds_col, y_col, spec)
 
 
 def ts_forecast(df: DataFrame, ds_col: str, y_col: str, method: str,
@@ -854,13 +952,8 @@ def ts_forecast(df: DataFrame, ds_col: str, y_col: str, method: str,
                 frequency="1d") -> DataFrame:
     """Single-series form returning array columns
     ``(point_forecasts, lower, upper, model_name, aic, bic)`` — ref macro
-    ``ts_macros.cpp:539-567``."""
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    level = float(params.get("confidence_level", 0.90))
-    h = int(horizon)
-    season = int(params.get("seasonal_period", 0) or 0)
-
+    ``ts_macros.cpp:539-567``. A failed fit fails the query."""
+    spec = forecast_spec(method, horizon, frequency, params)
     schema = T.StructType([
         T.StructField("point_forecasts", T.ArrayType(T.DoubleType())),
         T.StructField("lower", T.ArrayType(T.DoubleType())),
@@ -870,10 +963,9 @@ def ts_forecast(df: DataFrame, ds_col: str, y_col: str, method: str,
         T.StructField("bic", T.DoubleType()),
     ])
 
-    def fn(pdf: pd.DataFrame):
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ds_col)
-        yv = pdf[y_col].astype(float).to_numpy()
-        r = M.forecast(yv, h, model, season_length=season, level=level, params=params)
+        r = fit(spec, pdf[y_col].astype(float).to_numpy())
         return pd.DataFrame({
             "point_forecasts": [list(map(float, r.point))],
             "lower": [list(map(float, r.lower))],
@@ -882,11 +974,8 @@ def ts_forecast(df: DataFrame, ds_col: str, y_col: str, method: str,
             "aic": [r.aic], "bic": [r.bic],
         })
 
-    def keyed(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return fn(pdf)
-
     return (df.select(F.lit(1).alias("__g"), ds_col, F.col(y_col).cast("double").alias(y_col))
-              .groupBy("__g").applyInPandas(keyed, schema))
+              .groupBy("__g").applyInPandas(fn, schema))
 
 
 # ts_forecast_agg is the aggregate-function form of the same computation in

@@ -30,38 +30,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..frequency import parse_frequency
 from ..functions import models as M
-from .forecast import _future_dates_pd
+from ..functions.batched import batched_grouped_map
+from .forecast import (ForecastSpec, fit_one, forecast_block,
+                       forecast_schema, forecast_spec)
 
 
 # ---------------------------------------------------------------------------
 # Exogenous forecasting
 # ---------------------------------------------------------------------------
-
-def _ols(X: np.ndarray, y: np.ndarray):
-    """Least-squares with intercept; returns (beta, intercept, fitted).
-
-    The single-regressor case uses the explicit-sums formula in sequential
-    (fold) summation order — expression-identical to the SQL oracles, so the
-    downstream per-series optimizers see bit-identical residuals (lstsq's
-    SVD path agrees only to ~1e-12, enough to flip optimizer tie-breaks)."""
-    if X.ndim == 2 and X.shape[1] == 1:
-        x = X[:, 0].astype(float)
-        n = len(x)
-        sx = M._seq_sum(x)
-        sy = M._seq_sum(y)
-        sxy = M._seq_sum(x * y)
-        sxx = M._seq_sum(x * x)
-        den = float(n) * sxx - sx * sx
-        if den != 0:
-            b1 = (float(n) * sxy - sx * sy) / den
-            b0 = (sy - b1 * sx) / float(n)
-            return np.array([b1]), float(b0), b0 + b1 * x
-    A = np.column_stack([np.ones(len(X)), X])
-    coef, *_ = np.linalg.lstsq(A, y, rcond=None)
-    return coef[1:], float(coef[0]), A @ coef
-
 
 def ts_forecast_exog_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                         xreg_cols: list[str], future_df: DataFrame,
@@ -75,62 +52,26 @@ def ts_forecast_exog_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     step with the regressor values. Output schema matches ``ts_forecast_by``
     with ``model_name = '<Model>X'``.
     """
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    freq = parse_frequency(frequency)
-    level = float(params.get("confidence_level", 0.90))
-    h = int(horizon)
-    if h < 1:
-        raise ValueError("horizon must be >= 1")
+    spec = forecast_spec(method, horizon, frequency, params)
     if len(xreg_cols) != len(future_xreg_cols):
         raise ValueError("xreg_cols and future_xreg_cols must align")
-    season = int(params.get("seasonal_period", 0) or 0)
-
-    ds_type = df.schema[ds_col].dataType
-    gtype = df.schema[group_col].dataType
-    is_int_ds = isinstance(ds_type, (T.IntegerType, T.LongType))
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("forecast_step", T.IntegerType()),
-        T.StructField(ds_col, ds_type),
-        T.StructField("yhat", T.DoubleType()),
-        T.StructField("yhat_lower", T.DoubleType()),
-        T.StructField("yhat_upper", T.DoubleType()),
-        T.StructField("model_name", T.StringType()),
-    ])
+    is_int_ds = isinstance(df.schema[ds_col].dataType,
+                           (T.IntegerType, T.LongType))
+    schema = forecast_schema(df.schema, group_col, ds_col)
 
     def fn(key: tuple, hist: pd.DataFrame, fut: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({c.name: pd.Series(dtype="object") for c in schema})
         if hist.empty or fut.empty:
             return empty
         hist = hist.sort_values(ds_col)
-        fut = fut.sort_values(future_ds_col).head(h)
-        yv = hist[y_col].astype(float).to_numpy()
-        X = hist[list(xreg_cols)].astype(float).to_numpy()
-        Xf = fut[list(future_xreg_cols)].astype(float).to_numpy()
-        try:
-            yv = M.validate_series(yv)
-            beta, b0, fitted_reg = _ols(X, yv)
-            resid = yv - fitted_reg
-            r = M.forecast(resid, len(fut), model, season_length=season,
-                           level=level, params=params)
-        except Exception:
-            return empty  # error isolation (ref ts_forecast_native.cpp:666-672)
-        reg_future = Xf @ beta + b0
-        point = reg_future + r.point[: len(fut)]
-        lower = reg_future + r.lower[: len(fut)]
-        upper = reg_future + r.upper[: len(fut)]
-        last = hist[ds_col].iloc[-1]
-        n = len(fut)
-        return pd.DataFrame({
-            group_col: [key[0]] * n,
-            "forecast_step": list(range(1, n + 1)),
-            ds_col: _future_dates_pd(last, n, freq, is_int_ds)[:n],
-            "yhat": point,
-            "yhat_lower": lower,
-            "yhat_upper": upper,
-            "model_name": [r.model_name + "X"] * n,
-        })
+        fut = fut.sort_values(future_ds_col).head(spec.horizon)
+        r = fit_one(spec, hist[y_col].astype(float).to_numpy(), len(fut),
+                    (hist[list(xreg_cols)].astype(float).to_numpy(),
+                     fut[list(future_xreg_cols)].astype(float).to_numpy()))
+        if r is None:
+            return empty
+        return pd.DataFrame(dict(zip(schema.names, forecast_block(
+            spec, key[0], hist[ds_col].iloc[-1], r, is_int_ds))))
 
     hist = df.select(group_col, ds_col,
                      F.col(y_col).cast("double").alias(y_col),
@@ -243,29 +184,18 @@ def ts_forecast_inspect_by(df: DataFrame, group_col: str, ds_col: str,
                            params: dict | None = None) -> DataFrame:
     """Fitted-model introspection: one row per series with a wide
     ``inspection`` struct (ref macro ``ts_macros.cpp:605-686``)."""
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    level = float(params.get("confidence_level", 0.90))
-    season = int(params.get("seasonal_period", 0) or 0)
-    gtype = df.schema[group_col].dataType
+    spec = forecast_spec(method, params=params)
     schema = T.StructType([
-        T.StructField(group_col, gtype),
+        T.StructField(group_col, df.schema[group_col].dataType),
         T.StructField("inspection", T.StructType(
             [T.StructField(n, t) for n, t in _INSPECT_SCHEMA_FIELDS])),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame | None:
-        yv = pdf[y_col].astype(float).to_numpy()
-        try:
-            r = M.forecast(yv, 1, model, season_length=season, level=level,
-                           params=params)
-        except Exception:
-            return None
-        # columnar return (see batched_grouped_map): one pandas frame per
-        # Arrow batch instead of per series — same rows, same order (r14)
-        return ([key[0]], [inspect_result(r)])
+    def fn(key: tuple, pdf: pd.DataFrame) -> tuple | None:
+        r = fit_one(spec, pdf[y_col].astype(float).to_numpy())
+        # columnar return (see batched_grouped_map)
+        return None if r is None else ([key[0]], [inspect_result(r)])
 
-    from ..functions.batched import batched_grouped_map
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col)) \
              .filter(F.col(ds_col).isNotNull())
     return batched_grouped_map(base, [group_col], ds_col, schema, fn)
@@ -326,24 +256,25 @@ def explain_decompose(yv: np.ndarray, r, h: int, season: int) -> dict:
             "raw_json": json.dumps({"horizon": h, **comp}, sort_keys=True)}
 
 
+def explainable(spec: ForecastSpec) -> ForecastSpec:
+    """``spec`` if its model supports explanation — ETS, MSTL and Theta
+    only; others raise ``ValueError`` like the reference's InvalidModel
+    error."""
+    if spec.model not in _EXPLAINABLE:
+        raise ValueError(f"Model {spec.model} does not support explanation "
+                         "(ETS/MSTL/Theta only)")
+    return spec
+
+
 def ts_forecast_explain_by(df: DataFrame, group_col: str, ds_col: str,
                            y_col: str, method: str, horizon: int,
                            params: dict | None = None) -> DataFrame:
     """Per-horizon additive forecast decomposition (ref macro
-    ``ts_macros.cpp:687-731``). Supported families: ETS, MSTL, Theta —
-    others raise ``ValueError`` like the reference's InvalidModel error."""
-    params = dict(params or {})
-    model = M.canonical_model(method)
-    if model not in _EXPLAINABLE:
-        raise ValueError(
-            f"Model {model} does not support explanation (ETS/MSTL/Theta only)")
-    level = float(params.get("confidence_level", 0.90))
-    season = int(params.get("seasonal_period", 0) or 0)
-    h = int(horizon)
-    gtype = df.schema[group_col].dataType
+    ``ts_macros.cpp:687-731``); see :func:`explainable`."""
+    spec = explainable(forecast_spec(method, horizon, params=params))
     arr = T.ArrayType(T.DoubleType())
     schema = T.StructType([
-        T.StructField(group_col, gtype),
+        T.StructField(group_col, df.schema[group_col].dataType),
         T.StructField("decomposition", T.StructType([
             T.StructField("horizon", T.LongType()),
             T.StructField("level", arr),
@@ -355,18 +286,15 @@ def ts_forecast_explain_by(df: DataFrame, group_col: str, ds_col: str,
         ])),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame | None:
+    def fn(key: tuple, pdf: pd.DataFrame) -> tuple | None:
         yv = pdf[y_col].astype(float).to_numpy()
-        try:
-            r = M.forecast(yv, h, model, season_length=season, level=level,
-                           params=params)
-        except Exception:
+        r = fit_one(spec, yv)
+        if r is None:
             return None
-        dec = explain_decompose(yv, r, h, season)
-        # columnar return — see ts_forecast_inspect_by above (r14)
-        return ([key[0]], [dec])
+        # columnar return (see batched_grouped_map)
+        return ([key[0]],
+                [explain_decompose(yv, r, spec.horizon, spec.season)])
 
-    from ..functions.batched import batched_grouped_map
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col)) \
              .filter(F.col(ds_col).isNotNull())
     return batched_grouped_map(base, [group_col], ds_col, schema, fn)

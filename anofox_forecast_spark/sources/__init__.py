@@ -32,10 +32,11 @@ TABLES = (
 #: the safe path.
 NO_NAN_METADATA = "anofox_no_nan"
 
-# Opt-in panel cache (bench.py): the headline queries all re-derive the same
+# Opt-in panel cache: repeated queries over one input all re-derive the same
 # scan+groupBy panel; persisting it once removes the repeated input stage.
 # Off by default — the correctness driver hands us fresh sessions and must
-# never see a DataFrame bound to an older one.
+# never see a DataFrame bound to an older one; perfbench switches it off
+# explicitly so every request pays its own scan.
 _CACHE: dict[tuple, DataFrame] = {}
 _CACHE_ENABLED = False
 

@@ -119,3 +119,8 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = keep
+        reporter = config.pluginmanager.get_plugin("terminalreporter")
+        if reporter is not None:
+            reporter.write_line(
+                f"smoke tier: {len(dropped)} tests in SLOW_FILES deselected; "
+                "set ANOFOX_FULL_TESTS=1 to run the full tier")

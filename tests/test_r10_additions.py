@@ -146,6 +146,17 @@ def test_freshness_tool_reports_ledger():
     assert "| latest driver round | keys |" in out
 
 
+def test_readme_lists_the_slow_files():
+    """The README's "Running the tests" section names exactly the files
+    the smoke tier deselects (tests/conftest.py::SLOW_FILES)."""
+    import re
+
+    from tests.conftest import SLOW_FILES
+    readme = open("README.md").read()
+    section = readme.split("## Running the tests", 1)[1].split("\n## ")[0]
+    assert set(re.findall(r"`(test_\w+\.py)`", section)) == SLOW_FILES
+
+
 def _wav(rate=8000, freq=440.0, secs=0.5, bits=16, n_ch=1, amp=0.5):
     """Synthesized integer-PCM WAV (sine wave)."""
     import numpy as np

@@ -32,7 +32,9 @@ def test_minhash_band_explode_carries_no_shingles(spark):
         # HOF) — that is fine; what must never happen is the document-
         # sized array RIDING ALONG a (band) explode, i.e. appearing in
         # the carried/output column lists after the generator expression.
-        carried = line.split("), ", 1)[1] if "), " in line else line
+        # Split on the LAST "), ": the generator expression may itself hold
+        # nested calls, while the attribute lists after it hold none.
+        carried = line.rsplit("), ", 1)[1] if "), " in line else line
         assert "__sh" not in carried, \
             "shingle array rides an explode again:\n" + line
 
