@@ -10,7 +10,12 @@ batches (the sort guarantees each group is contiguous within its partition).
 
 Used by every per-series UDF operator (forecast, stats, features, detect,
 cv-forecast). Results are byte-identical to the grouped-map formulation —
-same rows per group, same shuffle — only the batching changes.
+same rows per group — only the batching changes.
+
+The module is also the one home of the partition policy for per-series
+stages (``series_partitions``): one task per core, with an explicit
+count that AQE cannot coalesce, shared by the source panels so that the
+operator's repartition over a source panel costs no exchange.
 """
 
 from __future__ import annotations
@@ -19,37 +24,44 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def shuffle_partitions(df: DataFrame) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, 0 when unreadable
-    (e.g. ``"auto"`` under some AQE / Spark Connect setups). The single
-    home for this parse — ``partition_floor`` and the forecast fold
-    aggregates both gate on it, and the unreadable-conf handling must
-    not drift between them (r11 advice)."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return 0
+def series_partitions(spark: SparkSession) -> int:
+    """The partition count for every stage that places series by key:
+    the source panels, the source cache, ``batched_grouped_map`` and the
+    fold aggregates of the SQL fast path all ask here.
 
+    It is the cluster's core count (``defaultParallelism``). Per-series
+    work is CPU-bound and tiny in bytes, so the byte-sized shuffle
+    defaults starve it: ``spark.sql.shuffle.partitions`` is tuned for
+    relational shuffles, and AQE coalesces a small shuffle down to ONE
+    task. An explicit ``repartition(n, key)`` is never coalesced by
+    AQE, and because the source and every operator use the same ``n``,
+    Spark drops an operator's repartition over an already-placed panel
+    as redundant — no exchange is added.
 
-def partition_floor(df: DataFrame) -> int:
-    """Partition count for a CPU-bound per-series stage: the shuffle conf
-    floored at the cluster's core count. Users (and the bench) tune
-    ``spark.sql.shuffle.partitions`` DOWN for small relational shuffles,
-    which starves per-series Python/fold stages (r9: forecast_auto_ets
-    ran ~240 s of numpy on 8 of 32 cores). Returns 0 when neither source
-    is readable (e.g. ``"auto"`` shuffle conf on a Spark Connect session,
-    where ``sparkContext`` is unavailable) — callers treat 0 as "leave
-    the plan alone"."""
-    shuffle = shuffle_partitions(df)
+    Spark Connect has no SparkContext: there the shuffle conf is used,
+    and 0 when that is unreadable (e.g. ``"auto"``), which callers take
+    as "no explicit count"."""
     try:
-        cores = df.sparkSession.sparkContext.defaultParallelism
+        return spark.sparkContext.defaultParallelism
     except Exception:  # noqa: BLE001 — Spark Connect has no sparkContext
-        cores = 0
-    return max(shuffle, cores)
+        try:
+            return int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            return 0
+
+
+def repartition_series(df: DataFrame, *keys) -> DataFrame:
+    """``df.repartition(series_partitions(...), *keys)``; with no count
+    available, keyed ``repartition(*keys)`` (or ``df`` itself when there
+    are no keys either)."""
+    n = series_partitions(df.sparkSession)
+    if n:
+        return df.repartition(n, *keys)
+    return df.repartition(*keys) if keys else df
 
 
 def batched_grouped_map(
@@ -138,12 +150,8 @@ def batched_grouped_map(
             elif r is not None and len(r):
                 yield r
 
-    # CPU-bound Python stage: floor the partition count at the cluster's
-    # core count (see partition_floor). Results are partitioning-
-    # invariant (pinned by tests); this only widens the Arrow-batch
-    # fan-out.
-    n_parts = partition_floor(df)
-    parts = (df.repartition(n_parts, *keys) if n_parts
-             else df.repartition(*keys)) \
-        .sortWithinPartitions(*keys, order_col)
+    # one task per core (see series_partitions); results are
+    # partitioning-invariant (pinned by tests)
+    parts = repartition_series(df, *keys).sortWithinPartitions(*keys,
+                                                               order_col)
     return parts.mapInPandas(fn, schema)

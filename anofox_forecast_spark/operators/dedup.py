@@ -236,8 +236,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # MIN aggregates run inside WholeStageCodegen with map-side partial
     # aggregation (wire: one num_hashes-wide row per doc). Values are
     # identical: min over the same distinct-shingle set, same salted hash
-    # expression; explode_outer keeps empty-shingle docs as an all-NULL
-    # signature exactly like array_min over an empty array. (The scalar
+    # expression. Shingle arrays are never empty (``_shingle_df`` takes
+    # positions 1..greatest(len - n + 1, 1), so a short text is its own
+    # one shingle and a NULL text is [NULL]); every doc keeps its row,
+    # and a [NULL] array gives an all-NULL signature exactly like
+    # array_min. (The scalar
     # `minhash_signature` Column helper keeps the HOF form for arbitrary
     # array expressions.)
     def _salted(i: int) -> Column:

@@ -39,8 +39,7 @@ from pyspark.sql import types as T
 from ..frequency import Frequency, parse_frequency
 from ..sources import NO_NAN_METADATA
 from ..functions import models as M
-from ..functions.batched import (batched_grouped_map, partition_floor,
-                                 shuffle_partitions)
+from ..functions.batched import batched_grouped_map, repartition_series
 
 FORECAST_FIELDS = [
     ("forecast_step", T.IntegerType()),
@@ -610,21 +609,13 @@ def _sorted_ys_agg(base: DataFrame, group_col: str, ds_col: str,
     series the model-library path skips via per-series error isolation
     (r10 ADVICE finding, reproduced)."""
     qds, qy = _q(ds_col), _q(y_col)
-    # CPU-bound JVM fold stage: floor the partition count at the core
-    # count (batched.partition_floor — the same starvation the Python
-    # stages had: a bare groupBy inherits spark.sql.shuffle.partitions,
-    # which users tune DOWN for small relational shuffles; measured
-    # forecast_ses -9% at bench's shuffle=8 on 32 cores even paying one
-    # extra exchange). Gated on the starved case ONLY: when shuffle >=
-    # cores (every real cluster config) the plan is untouched, so a
-    # panel already hash-partitioned on the key keeps its zero-exchange
-    # aggregate; collect_list partials carry every value anyway, so no
-    # map-side combine is lost. Results are partitioning-invariant
-    # (bit-audited).
-    shuffle = shuffle_partitions(base)
-    floor = partition_floor(base)
-    if 0 < shuffle < floor:
-        base = base.repartition(floor, group_col)
+    # CPU-bound JVM fold stage: one task per core
+    # (batched.series_partitions). Over a source panel already placed
+    # with that count the repartition is dropped as redundant; otherwise
+    # it is the aggregate's one exchange (collect_list partials carry
+    # every value anyway, so no map-side combine is lost). Results are
+    # partitioning-invariant (bit-audited).
+    base = repartition_series(base, group_col)
     # validity filter == validate_series (>= 3 valid points
     # post-interpolation; __nv >= 3 implies row count >= 3)
     return base.groupBy(group_col).agg(

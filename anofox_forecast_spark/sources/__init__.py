@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.batched import repartition_series
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -66,12 +68,12 @@ def _cached(key: tuple, build, spread: bool = False,
             # ClusteredDistribution on that key, so repeated per-series
             # queries run shuffle-free off the cache — the in-memory
             # analogue of bucketing the panel table at 100 TB
-            df = df.repartition(partition_on)
+            df = repartition_series(df, partition_on)
         elif spread:
             # one small parquet file scans as ONE partition; when persisting
             # for repeated reuse, spread it across the executors first (at
             # real scale many input files provide this parallelism natively)
-            df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+            df = repartition_series(df)
         _CACHE[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
     return _CACHE[key]
 
@@ -96,16 +98,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def lineitem_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Many-series daily panel: (id=l_suppkey, ds=day(l_shipdate), y=sum qty).
 
-    The aggregate's exchange is keyed on hash(id) ALONE (r13, guide §2.4
-    "two operations keyed the same way can share one exchange"):
-    HashPartitioning(id) satisfies the (id, ds) grouping's clustered
-    distribution, and every downstream per-series stage groups/windows
-    by id — at cluster scale (where the partition floor does not insert
-    an explicit repartition) the id-keyed fold aggregates run with NO
-    second exchange, and at bench scale the aggregation work moves off
-    the narrow file-scan stage onto the full shuffle width (measured
-    -33% on the SQL-path forecast keys). Value identity does NOT rest on
-    float luck: l_quantity is integer-valued (TPC-H quantities 1..50),
+    The aggregate's exchange is keyed on hash(id) ALONE, with the
+    series partition count (``batched.series_partitions``: one task per
+    core, a count AQE never coalesces). HashPartitioning(id) satisfies
+    the (id, ds) grouping's clustered distribution, and every downstream
+    per-series stage groups, windows or repartitions by id with that same
+    count — so the fold aggregates and the batched Python stage run with
+    NO second exchange, one task per core. Value identity does NOT rest
+    on float luck: l_quantity is integer-valued (TPC-H quantities 1..50),
     so every per-group sum is exact in ANY accumulation order — the same
     property the DuckDB-oracle hash match has always relied on. The
     orders panel keeps the default keying (o_totalprice is fractional;
@@ -118,7 +118,7 @@ def lineitem_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
                 F.col("l_quantity"),
             )
-            .repartition(F.col("id"))
+            .transform(repartition_series, "id")
             .groupBy("id", "ds")
             # sum over a non-empty group is never NULL; the coalesce is a
             # no-op at runtime but marks y non-nullable in the schema, and
@@ -180,7 +180,7 @@ def events_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.col("user_id").alias("id"), F.date_trunc("day", ts).alias("ds"))
         # hash(id)-keyed exchange shared with the per-series stages (see
         # lineitem_panel); counts are exact integers, order-free
-        .repartition(F.col("id"))
+        .transform(repartition_series, "id")
         .groupBy("id", "ds")
         .agg(F.count(F.lit(1)).cast("double").alias("y"))
     )

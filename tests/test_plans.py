@@ -298,6 +298,19 @@ def test_r8_operator_shuffle_budgets(spark):
         assert rep["python_udf_nodes"] == 0
 
 
+def _final_generates(df) -> list[list[str]]:
+    """Output columns of each Generate node in ``df``'s executed plan.
+    Runs ``df``: AQE's final plan — where a shared exchange reads as
+    ReusedExchange instead of a second copy of its subtree — exists only
+    after execution."""
+    import re
+    df.collect()
+    final = P.physical_plan(df).split("== Initial Plan ==")[0]
+    return [[c.split("#")[0] for c in cols.split(", ")]
+            for cols in re.findall(r"^.*Generate .*, \[([^\]]*)\]$",
+                                   final, re.M)]
+
+
 def test_r9_operator_shuffle_budgets(spark):
     """r9 family plan guards: lm_score's only nested-loop join is the
     broadcast 1-ROW vocab crossJoin (bounded by construction);
@@ -316,6 +329,9 @@ def test_r9_operator_shuffle_budgets(spark):
         rep = P.plan_report(df)
         assert rep["cartesian_products"] == 0
         assert rep["python_udf_nodes"] == 0
+        # one explode of the corpus: both sides of the span self-join read
+        # ONE exchange; a re-split shows as a second Generate
+        assert _final_generates(df) == [["__p0", "__g"]]
     # lm_score: 9 exchanges in the no-broadcast regime, but only THREE
     # touch corpus-sized data (the (w1,w2) scoring join input, the per-doc
     # fold, and the id-only final-join projection) — the rest shuffle the
@@ -335,6 +351,9 @@ def test_r9_operator_shuffle_budgets(spark):
         r"Exchange hashpartitioning\((\w+)", plan) if m.startswith("doc_id")]
     assert len(corpus_keys) <= 2, \
         f"corpus side crosses {len(corpus_keys)} id-keyed shuffles"
+    # the three count tables share ONE explode of the corpus (__p); the
+    # other Generate is the scoring side's positioned bigrams (__b)
+    assert sorted(_final_generates(df)) == [["__b"], ["__p"]]
     # keep_best: ONE aggregate exchange, no windows
     df = exact_dedup_keep_best(docs, "doc_id", "text", "score")
     P.assert_max_exchanges(df, 1)

@@ -165,32 +165,33 @@ def test_sql_path_interpolates_nan_like_numpy(spark):
     assert out.count() == 0
 
 
-def test_fold_partition_floor_gated_and_invariant(spark):
-    """The r11 fold-aggregate partition floor fires ONLY in the starved
-    case (shuffle conf < core count) and never changes values.
-
-    - At the test conf (shuffle == defaultParallelism) the plan keeps
-      its <= 2-exchange budget (test_plans pins that), so real-cluster
-      plans where shuffle >= cores are untouched.
-    - In the starved case (shuffle=2 here) the widened plan must stay
-      Python-free and return bit-equal rows."""
+def test_fold_aggregate_partitioning_invariant(spark):
+    """The fold aggregate always repartitions by the series partition
+    policy (batched.series_partitions), whatever the shuffle conf: at a
+    starved conf (2) and an oversized one (32) the plan stays
+    Python-free and the rows are bit-equal to the default conf's."""
     from anofox_forecast_spark import plans as P
     rows = [(g, dt.date(2024, 1, 1 + i), float((i * 7 + g) % 10))
             for g in range(20) for i in range(25)]
     df = spark.createDataFrame(rows, "g int, ds date, y double")
-    baseline = ts_forecast_by(df, "g", "ds", "y", "SES", 5, "1d",
-                              {"alpha": 0.3}).collect()
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        floored = ts_forecast_by(df, "g", "ds", "y", "SES", 5, "1d",
-                                 {"alpha": 0.3})
-        assert P.plan_report(floored)["python_udf_nodes"] == 0
-        got = floored.collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     key = lambda r: (r["g"], r["forecast_step"])  # noqa: E731
-    a = {key(r): (r["yhat"], r["yhat_lower"], r["yhat_upper"])
-         for r in baseline}
-    b = {key(r): (r["yhat"], r["yhat_lower"], r["yhat_upper"]) for r in got}
-    assert a == b  # bit-equal, not approx: the fold is order-exact
+
+    def rows_of(out):
+        return {key(r): (r["yhat"], r["yhat_lower"], r["yhat_upper"])
+                for r in out.collect()}
+
+    baseline = rows_of(ts_forecast_by(df, "g", "ds", "y", "SES", 5, "1d",
+                                      {"alpha": 0.3}))
+    assert len(baseline) == 20 * 5
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    for shuffle in ("2", "32"):
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+            out = ts_forecast_by(df, "g", "ds", "y", "SES", 5, "1d",
+                                 {"alpha": 0.3})
+            assert P.plan_report(out)["python_udf_nodes"] == 0, shuffle
+            got = rows_of(out)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        # bit-equal, not approx: the fold is order-exact
+        assert got == baseline, shuffle
