@@ -10,5 +10,15 @@ Public API convention (SURVEY.md §7): every operator is
 documented output schema, preserving caller column names/types.
 """
 
+from pyspark import TaskContext as _TaskContext
+
 from .frequency import Frequency, parse_frequency  # noqa: F401
 from .session import get_spark  # noqa: F401
+
+# In a Python worker the package is imported when an engine UDF is
+# unpickled, with the task's context already set: install the worker's
+# importer once per process there (see worker.py). The Spark driver,
+# which has no task context, skips it.
+if _TaskContext.get() is not None:
+    from .worker import install_zip_importer
+    install_zip_importer()

@@ -9,16 +9,20 @@ model_name)``, preserving the caller's group/date column names and types
 
 Two physical strategies, chosen per model:
 
-- **SQL fast path** (Naive, SeasonalNaive, SMA, SeasonalWindowAverage,
-  RandomWalkDrift): pure DataFrame ops — window functions + one group-level
-  aggregate + ``explode(sequence(1, h))``. No Python in the data path; the
-  whole plan is Catalyst-optimized and whole-stage-codegen'd. At 100 TB this
-  is a single shuffle on the group key.
-- **pandas-UDF path** (everything else): ``groupBy(id).applyInPandas`` over
-  the numpy model library (``functions/models.py``). The shuffle is the same;
-  model fitting is embarrassingly parallel across series. Per-group failures
-  are skipped, invalid input fails hard — the reference's error-isolation
-  semantics (``ts_forecast_native.cpp:666-672``).
+- **SQL fast path** (``models.SQL_PATH_MODELS``: Naive, SeasonalNaive, SMA,
+  SeasonalWindowAverage, RandomWalkDrift, SES, CrostonClassic, CrostonSBA,
+  TSB, SeasonalES; and Holt when both ``alpha`` and ``beta`` are fixed):
+  pure DataFrame ops — window functions or a JVM ``aggregate`` fold over
+  each series' sorted values, one group-level aggregate, and
+  ``explode(sequence(1, h))``. No Python in the data path; the whole plan
+  is Catalyst-optimized and whole-stage-codegen'd. At 100 TB this is a
+  single shuffle on the group key.
+- **Python path** (everything else): ``batched_grouped_map``
+  (``repartition + sortWithinPartitions + mapInPandas``, one crossing per
+  Arrow batch) over the numpy model library (``functions/models.py``). The
+  shuffle is the same; model fitting is embarrassingly parallel across
+  series. Per-group failures are skipped, invalid input fails hard — the
+  reference's error-isolation semantics (``ts_forecast_native.cpp:666-672``).
 
 Future dates: fixed frequencies add ``step * seconds``; calendar frequencies
 (month/quarter/year) use ``add_months`` month-end-clamped arithmetic, matching
