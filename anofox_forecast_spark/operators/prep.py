@@ -25,11 +25,15 @@ deltas — no per-group collect, O(1) state per row.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
+from ..sources import NO_NAN_METADATA
+from .forecast import _q
 
 # ---------------------------------------------------------------------------
 # Gap filling
@@ -48,6 +52,54 @@ def _unit_start(col: Column, n_months: int) -> Column:
     return F.date_trunc("month", col)
 
 
+def _type_sql(dt: T.DataType) -> str:
+    """``dt`` as SQL type text; TIMESTAMP is spelled ``timestamp_ltz`` so
+    that ``spark.sql.timestampType`` cannot turn it into TIMESTAMP_NTZ."""
+    return "timestamp_ltz" if isinstance(dt, T.TimestampType) else dt.simpleString()
+
+
+def _gap_sql(freq: Frequency, ds_type: T.DataType, ds: str, nxt: str):
+    """SQL text of the gap-row count between ``ds`` and the next
+    observation ``nxt``, and of the date ``__s`` steps after ``ds`` (the
+    lambda body of the generated rows) — the text forms of
+    ``_month_unit_index`` and ``_unit_start`` for the month branch."""
+    dst = _type_sql(ds_type)
+    if freq.kind == "int" or isinstance(ds_type, (T.IntegerType, T.LongType)):
+        step = freq.n if freq.kind == "int" else 1
+        return (f"FLOOR(({nxt} - {ds}) / {step}) - 1",
+                f"CAST({ds} + __s * {step} AS {dst})")
+    if freq.kind == "month":
+        n = freq.n
+        unit = "year" if n % 12 == 0 else "quarter" if n % 3 == 0 else "month"
+        index = lambda c: f"FLOOR((year({c}) * 12 + month({c}) - 1) / {n})"  # noqa: E731
+        return (f"{index(nxt)} - {index(ds)} - 1",
+                f"CAST(add_months(date_trunc('{unit}', {ds}), __s * {n}) "
+                f"AS {dst})")
+    sec = freq.n
+    return (f"FLOOR((CAST(CAST({nxt} AS TIMESTAMP) AS DOUBLE) - "
+            f"CAST(CAST({ds} AS TIMESTAMP) AS DOUBLE)) / {sec}) - 1",
+            f"CAST(timestampadd(SECOND, CAST(__s * {sec} AS BIGINT), "
+            f"CAST({ds} AS TIMESTAMP)) AS {dst})")
+
+
+def _explode_entries(df: DataFrame, group_col: str, ds_col: str, y_col: str,
+                     entries: Column | str) -> DataFrame:
+    """One row per element of ``entries``, a ``(ds, y)`` struct array over
+    ``df`` (a Column or SQL text), keeping ``y``'s field metadata: the
+    generated rows are NULL, never NaN, so a producer's no-NaN witness
+    (``sources.NO_NAN_METADATA``) stays true."""
+    qg = _q(group_col)
+    if isinstance(entries, str):
+        base = df.selectExpr(qg, f"{entries} AS __e")
+    else:
+        base = df.select(F.col(group_col), entries.alias("__e"))
+    out = (base.selectExpr(qg, "explode(__e) AS __x")
+               .selectExpr(qg, f"__x.ds AS {_q(ds_col)}",
+                           f"__x.y AS {_q(y_col)}"))
+    meta = df.schema[y_col].metadata
+    return out.withMetadata(y_col, meta) if meta else out
+
+
 def ts_fill_gaps_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                     frequency) -> DataFrame:
     """Insert missing timestamps between consecutive observations, NULL-valued.
@@ -60,45 +112,23 @@ def ts_fill_gaps_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     Single-pass plan: each row explodes into itself + the gap rows up to the
     NEXT observation (``lead``). A union formulation would make Spark scan
     and aggregate the source once per branch; this shape is one scan, one
-    series-key shuffle, one Window, one Generate.
+    series-key shuffle, one Window, one Generate. It is built as SQL text:
+    the same Catalyst operators as the Column DSL, for a few py4j round
+    trips instead of hundreds.
     """
     freq = parse_frequency(frequency)
     ds_type = df.schema[ds_col].dataType
-    y_type = df.schema[y_col].dataType
-    base = df.select(group_col, ds_col, y_col)
-    w = Window.partitionBy(group_col).orderBy(ds_col)
-    nxt = F.lead(F.col(ds_col)).over(w)
-    ds = F.col(ds_col)
-
-    if freq.kind == "int" or isinstance(ds_type, (T.IntegerType, T.LongType)):
-        step = freq.n if freq.kind == "int" else 1
-        k = F.floor((nxt - ds) / step) - 1
-        gap_ds = lambda s: (ds + s * step).cast(ds_type)  # noqa: E731
-    elif freq.kind == "month":
-        n = freq.n
-        k = _month_unit_index(nxt, n) - _month_unit_index(ds, n) - 1
-        gap_ds = lambda s: F.add_months(_unit_start(ds, n), s * n).cast(ds_type)  # noqa: E731
-    else:
-        sec = freq.n
-        gap_s = nxt.cast("timestamp").cast("double") - ds.cast("timestamp").cast("double")
-        k = F.floor(gap_s / sec) - 1
-        gap_ds = lambda s: F.timestamp_add(  # noqa: E731
-            "SECOND", (s * sec).cast("long"), ds.cast("timestamp")).cast(ds_type)
-
-    entries = F.concat(
-        F.array(F.struct(ds.alias("ds"), F.col(y_col).cast(y_type).alias("y"))),
-        F.when(k >= 1,
-               F.transform(F.sequence(F.lit(1), k),
-                           lambda s: F.struct(gap_ds(s).alias("ds"),
-                                              F.lit(None).cast(y_type).alias("y"))))
-         .otherwise(F.array().cast(
-             T.ArrayType(T.StructType([T.StructField("ds", ds_type),
-                                       T.StructField("y", y_type)])))),
-    )
-    return (base.withColumn("__e", entries)
-            .select(group_col, F.explode("__e").alias("__x"))
-            .select(F.col(group_col), F.col("__x.ds").alias(ds_col),
-                    F.col("__x.y").alias(y_col)))
+    yt = _type_sql(df.schema[y_col].dataType)
+    qg, qds, qy = _q(group_col), _q(ds_col), _q(y_col)
+    nxt = f"lead({qds}) OVER (PARTITION BY {qg} ORDER BY {qds})"
+    k, gap_ds = _gap_sql(freq, ds_type, qds, nxt)
+    entries = (
+        f"concat(array(named_struct('ds', {qds}, 'y', CAST({qy} AS {yt}))), "
+        f"CASE WHEN {k} >= 1 THEN transform(sequence(1, {k}), "
+        f"__s -> named_struct('ds', {gap_ds}, 'y', CAST(NULL AS {yt}))) "
+        f"ELSE CAST(array() AS array<struct<ds:{_type_sql(ds_type)},"
+        f"y:{yt}>>) END)")
+    return _explode_entries(df, group_col, ds_col, y_col, entries)
 
 
 def ts_fill_forward_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -151,10 +181,7 @@ def ts_fill_forward_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                                   F.col(y_col).cast(y_type).alias("y")))
     entries = F.when(is_last & (k >= 1), F.concat(self_entry, ext)) \
                .otherwise(self_entry).cast(arr_t)
-    return (base.withColumn("__e", entries)
-            .select(group_col, F.explode("__e").alias("__x"))
-            .select(F.col(group_col), F.col("__x.ds").alias(ds_col),
-                    F.col("__x.y").alias(y_col)))
+    return _explode_entries(base, group_col, ds_col, y_col, entries)
 
 
 # ---------------------------------------------------------------------------
@@ -163,7 +190,16 @@ def ts_fill_forward_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
 
 def ts_fill_nulls_const_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                            fill_value: float) -> DataFrame:
-    return df.withColumn("filled_value", F.coalesce(F.col(y_col), F.lit(fill_value)))
+    """``filled_value`` = ``coalesce(y, fill_value)``. It carries the no-NaN
+    witness (``sources.NO_NAN_METADATA``) when ``y`` does and the fill
+    value is a number that is not NaN: then no row of it can be NaN."""
+    filled = F.coalesce(F.col(y_col), F.lit(fill_value))
+    if (df.schema[y_col].metadata.get(NO_NAN_METADATA, False)
+            and isinstance(fill_value, (int, float))
+            and not math.isnan(fill_value)):
+        filled = filled.alias("filled_value",
+                              metadata={NO_NAN_METADATA: True})
+    return df.withColumn("filled_value", filled)
 
 
 def ts_fill_nulls_forward_by(df: DataFrame, group_col: str, ds_col: str,
