@@ -5,23 +5,30 @@ The reference exposes everything as SQL table macros / scalar functions
 ``src/anofox_forecast_extension.cpp:16-175`` the scalar/aggregate set). This
 module recreates that surface on Spark:
 
-- ``ts_forecast_by`` as a Python UDTF (Spark 3.5+ table-valued function with
-  a TABLE argument): ``SELECT * FROM ts_forecast_by(TABLE(panel), 'id',
-  'ds', 'y', 'Naive', 7, '1d')``. The UDTF's ``analyze`` requests
-  partitioning by the group column and ordering by date, so Catalyst plans
-  the same Exchange as the DataFrame path — each UDTF instance sees exactly
-  one series.
+- per-series table functions as Python UDTFs with a TABLE argument:
+  ``SELECT * FROM ts_forecast_by(TABLE(panel), 'id', 'ds', 'y', 'Naive',
+  7, '1d')``. Every one that needs a whole series (or a whole partition)
+  at once runs in ONE shell, ``_SeriesUDTF``. Its ``analyze`` asks Catalyst
+  to partition by the group column and order by date, so each instance
+  sees whole series, and parses every literal argument once, on the
+  driver: a bad literal raises ``ValueError`` when ``spark.sql()`` is
+  called, before any Spark job. Each instance buffers its partition's rows
+  and hands them once to ``emit``.
+- the per-series computation behind a UDTF is the DataFrame operator's own
+  kernel (``operators/``): the forecast kernel (``forecast_spec``,
+  ``fit_one``, ``forecast_block``), the detection ``SeriesOp`` kernels
+  (``operators/detect.py``), ``compute_series_stats``, ``data_quality``,
+  ``feature_columns``. Only the UDTFs whose DataFrame operator is a
+  Catalyst plan — the prep family, the ``_by`` metrics, conformal, CV
+  layout, hierarchy, OLS — replay that plan in Python here, because a UDTF
+  cannot run a Column plan; ``tests/test_sql_surface.py`` pins each to
+  its DataFrame operator.
 - the 12 evaluation metrics as scalar SQL functions over DOUBLE arrays
   (``ts_mae(actual, forecast)`` etc.), mirroring the reference's scalar
-  forms (``src/scalar_functions/metrics.cpp``).
+  forms (``src/scalar_functions/metrics.cpp``) as JVM-side SQL UDFs.
 
 The UDTF path is row-at-a-time Python — it is the *compatibility* surface.
-The DataFrame API (``operators/``) is the performance path; the two share
-the model library so results are identical. Every forecast UDTF fits
-through the DataFrame path's forecast kernel (``operators/forecast.py``:
-``forecast_spec``, ``fit_one``, ``forecast_block``), and its ``analyze``
-parses the literal arguments with the same ``forecast_spec``: a bad literal
-argument fails at analysis, when ``spark.sql()`` is called on the driver.
+The DataFrame API (``operators/``) is the performance path.
 """
 
 from __future__ import annotations
@@ -29,38 +36,113 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass
+from typing import Any
 
+import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import AnalyzeArgument, AnalyzeResult
 from pyspark.sql.functions import OrderingColumn, PartitioningColumn, udtf
 
+from ..frequency import parse_frequency
+from ..operators import detect as D
 from ..operators.forecast import (ForecastSpec, fit_one, forecast_block,
                                   forecast_schema, forecast_spec)
 from ..operators.forecast_ext import (explain_decompose, explainable,
                                       inspect_result)
 
+_DBL = T.DoubleType()
+
 
 # ---------------------------------------------------------------------------
-# Forecast UDTFs: every one parses its literal arguments in ``analyze``
-# through the kernel's forecast_spec (a bad argument fails ``spark.sql()``
-# on the driver) and fits through the kernel's fit_one.
+# The UDTF shell
 # ---------------------------------------------------------------------------
 
 @dataclass
-class _KernelAnalysis(AnalyzeResult):
+class _Analysis(AnalyzeResult):
     """``analyze`` result carrying the parsed literal arguments; Spark
     hands it to every UDTF instance's ``__init__``."""
 
-    spec: ForecastSpec | None = None
-    args: tuple = ()
+    parsed: Any = None
+
+
+def _result(fields, parsed=None, by: str | None = None,
+            order: str | None = None) -> _Analysis:
+    """The analysis of a UDTF that emits ``fields``: one partition per
+    ``by`` value (the whole table in one partition when ``by`` is None),
+    rows ordered by ``order``."""
+    kw: dict = ({"partitionBy": [PartitioningColumn(by)]} if by is not None
+                else {"withSinglePartition": True})
+    if order is not None:
+        kw["orderBy"] = [OrderingColumn(order)]
+    return _Analysis(schema=T.StructType(list(fields)), parsed=parsed, **kw)
+
+
+class _SeriesUDTF:
+    """The shell of every buffered UDTF. A subclass defines a static
+    ``analyze`` that parses the literal arguments once and returns them
+    via :func:`_result`, and ``emit(rows)``, which gets the instance's
+    whole partition (ordered as ``analyze`` asked) once, with the parsed
+    arguments in ``self.p``."""
+
+    def __init__(self, analyze_result: _Analysis):
+        self.p = analyze_result.parsed
+        self._rows = []
+
+    def eval(self, row, *_):
+        self._rows.append(row)
+
+    def terminate(self):
+        if self._rows:
+            yield from self.emit(self._rows)
+
+
+def _f(name, t):
+    return T.StructField(name, t)
+
+
+def _int(v) -> int:
+    """An integer literal, given as ``7`` or ``'7'`` (``'7.5'`` raises)."""
+    return int(str(v))
 
 
 def _lit(arg: AnalyzeArgument | None):
     """Literal value of an optional argument."""
     return None if arg is None else arg.value
 
+
+def _nan_y(rows, y_col):
+    return np.array([math.nan if r[y_col] is None else float(r[y_col])
+                     for r in rows])
+
+
+def _ds(rows, ds_col):
+    return np.array([r[ds_col] for r in rows], dtype=object)
+
+
+def _plain(v):
+    """A kernel's output cell as a value the UDTF row serializer takes."""
+    if isinstance(v, np.ndarray):
+        return v.tolist()
+    return v.item() if isinstance(v, np.generic) else v
+
+
+def _column_rows(lead: tuple, cols):
+    """Row tuples of a kernel's output columns, each led by ``lead``."""
+    for row in zip(*cols):
+        yield (*lead, *map(_plain, row))
+
+
+def _parse_ts(s):
+    import pandas as _pd
+    return _pd.Timestamp(str(s)).to_pydatetime()
+
+
+# ---------------------------------------------------------------------------
+# Forecast UDTFs: every one parses its literal arguments with the kernel's
+# forecast_spec and fits through the kernel's fit_one.
+# ---------------------------------------------------------------------------
 
 def _spec(method, horizon=1, frequency=None, params_json=None,
           level=None) -> ForecastSpec:
@@ -80,25 +162,7 @@ def _block_rows(block):
         yield (g, step, ds, float(p), float(lo), float(up), name)
 
 
-class _KernelUDTF:
-    """Base of the forecast UDTFs: each instance takes the parsed
-    ``analyze`` result, buffers its partition's rows and hands them to
-    ``emit``."""
-
-    def __init__(self, analyze_result: _KernelAnalysis):
-        self.spec = analyze_result.spec
-        self.args = analyze_result.args
-        self._rows: list = []
-
-    def eval(self, row, *_):
-        self._rows.append(row)
-
-    def terminate(self):
-        if self._rows:
-            yield from self.emit(self._rows)
-
-
-class ForecastUDTF(_KernelUDTF):
+class ForecastUDTF(_SeriesUDTF):
     """``ts_forecast_by(TABLE(t), group_col, ds_col, y_col, method, horizon,
     frequency[, confidence_level[, params_json]])`` — SQL form of the
     forecasting operator. The two trailing arguments are optional, matching
@@ -114,172 +178,377 @@ class ForecastUDTF(_KernelUDTF):
                 confidence_level: AnalyzeArgument | None = None,
                 params_json: AnalyzeArgument | None = None) -> AnalyzeResult:
         g, d = group_col.value, ds_col.value
-        return _KernelAnalysis(
-            schema=forecast_schema(table.dataType, g, d),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)],
-            spec=_spec(method.value, horizon.value, frequency.value,
-                       _lit(params_json), _lit(confidence_level)),
-            args=(g, d, y_col.value))
+        spec = _spec(method.value, horizon.value, frequency.value,
+                     _lit(params_json), _lit(confidence_level))
+        return _result(forecast_schema(table.dataType, g, d),
+                       (spec, g, d, y_col.value), by=g, order=d)
 
     def emit(self, rows):
-        g, d, y = self.args
-        r = fit_one(self.spec, _nan_y(rows, y))
+        spec, g, d, y = self.p
+        r = fit_one(spec, _nan_y(rows, y))
         if r is not None:
             last = rows[-1][d]
             yield from _block_rows(forecast_block(
-                self.spec, rows[0][g], last, r, isinstance(last, int)))
+                spec, rows[0][g], last, r, isinstance(last, int)))
 
 
-class FillGapsUDTF:
-    """``ts_fill_gaps_by(TABLE(t), group_col, ds_col, y_col, frequency)`` —
-    SQL form of the gap-filling operator (ref macro ``ts_macros.cpp:176+``).
-    Emits every grid timestamp between each series' min and max ds; missing
-    points carry NULL y."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, frequency):
-        schema = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        out = T.StructType([
-            T.StructField(g, schema[g].dataType),
-            T.StructField(d, schema[d].dataType),
-            T.StructField(y, schema[y].dataType),
-        ])
-        return AnalyzeResult(schema=out, partitionBy=[PartitioningColumn(g)],
-                             orderBy=[OrderingColumn(d)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, frequency):
-        self._args = (group_col, ds_col, y_col, frequency)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        from ..frequency import parse_frequency
-        group_col, ds_col, y_col, frequency = self._args
-        freq = parse_frequency(frequency)
-        g = self._rows[0][group_col]
-        have = {r[ds_col]: r[y_col] for r in self._rows}
-        first, last = self._rows[0][ds_col], self._rows[-1][ds_col]
-        if isinstance(first, int):
-            step = freq.n if freq.kind == "int" else 1
-            cur = first
-            while cur <= last:
-                yield (g, cur, have.get(cur))
-                cur += step
-            return
-        import datetime as _dt
-        if freq.kind == "month":
-            from ..operators.forecast import _add_months_clamped
-            import pandas as _pd
-            cur = _pd.Timestamp(first)
-            k = 0
-            while cur.to_pydatetime() <= last:
-                py = cur.to_pydatetime()
-                yield (g, py, have.get(py))
-                k += 1
-                cur = _add_months_clamped(_pd.Timestamp(first), freq.n * k)
-            return
-        step = _dt.timedelta(seconds=freq.n)
-        cur = first
-        while cur <= last:
-            yield (g, cur, have.get(cur))
-            cur += step
-
-
-class CvFoldsUDTF:
-    """``ts_cv_folds_by(TABLE(t), group_col, ds_col, y_col, n_folds,
-    horizon)`` — SQL form of the expanding-window fold generator (ref macro
-    ``ts_macros.cpp:1364-1408``); same position-based boundaries as
-    ``operators.cv._fold_bounds``."""
+class ForecastSingleUDTF(_SeriesUDTF):
+    """``ts_forecast(TABLE(t), 'ds', 'y', 'Naive', '7'[, frequency,
+    confidence_level, params_json])`` — single-series form of
+    ts_forecast_by (ref macro takes no group column)."""
 
     @staticmethod
-    def analyze(table, group_col, ds_col, y_col, n_folds, horizon):
-        schema = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        out = T.StructType([
-            T.StructField(g, schema[g].dataType),
-            T.StructField(d, schema[d].dataType),
-            T.StructField(y, schema[y].dataType),
-            T.StructField("fold_id", T.LongType()),
-            T.StructField("split", T.StringType()),
-        ])
-        return AnalyzeResult(schema=out, partitionBy=[PartitioningColumn(g)],
-                             orderBy=[OrderingColumn(d)])
+    def analyze(table, ds_col, y_col, method, horizon, frequency=None,
+                confidence_level=None, params_json=None):
+        d = ds_col.value
+        spec = _spec(method.value, horizon.value,
+                     "1d" if frequency is None else frequency.value,
+                     _lit(params_json), _lit(confidence_level))
+        return _result(forecast_schema(table.dataType, None, d),
+                       (spec, d, y_col.value), order=d)
 
-    def __init__(self):
-        self._rows: list = []
+    def emit(self, rows):
+        spec, d, y = self.p
+        r = fit_one(spec, _nan_y(rows, y))
+        if r is not None:
+            last = rows[-1][d]
+            for row in _block_rows(forecast_block(spec, None, last, r,
+                                                  isinstance(last, int))):
+                yield row[1:]
 
-    def eval(self, row, group_col, ds_col, y_col, n_folds, horizon):
-        self._args = (group_col, ds_col, y_col, int(n_folds), int(horizon))
-        self._rows.append(row)
 
-    def terminate(self):
-        if not self._rows:
+class ForecastInspectUDTF(_SeriesUDTF):
+    """``ts_forecast_inspect_by(TABLE(t), 'id', 'ds', 'y', 'SES'[,
+    params_json])`` — fitted-parameter scalars (the DataFrame op's
+    ``inspection`` struct flattened; array diagnostics live on the
+    DataFrame path)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
+        g = group_col.value
+        return _result(
+            [_f(g, table.dataType[g].dataType),
+             _f("model_family", T.StringType()), _f("spec", T.StringType()),
+             _f("alpha", _DBL), _f("beta", _DBL), _f("gamma", _DBL),
+             _f("phi", _DBL), _f("theta", _DBL), _f("aic", _DBL),
+             _f("bic", _DBL), _f("seasonal_period", T.LongType())],
+            (_spec(method.value, params_json=_lit(params_json)), g,
+             y_col.value), by=g, order=ds_col.value)
+
+    def emit(self, rows):
+        spec, g, y = self.p
+        r = fit_one(spec, _nan_y(rows, y))
+        if r is None:
             return
-        group_col, ds_col, y_col, n_folds, h = self._args
-        n = len(self._rows)
-        init = max(n - h * n_folds, 1)
-        for f in range(n_folds):
-            train_end = init - 1 + f * h
-            test_end = train_end + h
-            if test_end >= n:
+        i = inspect_result(r)
+        yield (rows[0][g], i["model_family"], i["spec"], i["alpha"],
+               i["beta"], i["gamma"], i["phi"], i["theta"], i["aic"],
+               i["bic"], i["seasonal_period"])
+
+
+class ForecastExplainUDTF(_SeriesUDTF):
+    """``ts_forecast_explain_by(TABLE(t), 'id', 'ds', 'y', 'ETS', '7'[,
+    params_json])`` — per-horizon additive decomposition, one row per step
+    (the DataFrame op's struct arrays unrolled)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, method, horizon,
+                params_json=None):
+        g = group_col.value
+        spec = explainable(_spec(method.value, horizon.value,
+                                 params_json=_lit(params_json)))
+        return _result(
+            [_f(g, table.dataType[g].dataType),
+             _f("forecast_step", T.IntegerType()), _f("level", _DBL),
+             _f("trend", _DBL), _f("seasonal", _DBL), _f("residual", _DBL)],
+            (spec, g, y_col.value), by=g, order=ds_col.value)
+
+    def emit(self, rows):
+        spec, g, y_col = self.p
+        y = _nan_y(rows, y_col)
+        r = fit_one(spec, y)
+        if r is None:
+            return
+        dec = explain_decompose(y, r, spec.horizon, spec.season)
+        for i in range(spec.horizon):
+            yield (rows[0][g], i + 1, dec["level"][i], dec["trend"][i],
+                   dec["seasonal"][i], dec["residual"][i])
+
+
+class ForecastExogByUDTF(_SeriesUDTF):
+    """``ts_forecast_exog_by(TABLE(t), 'id', 'ds', 'y', 'x1,x2', '1d',
+    'Naive', '7'[, params_json])`` — union-convention exog forecast: trailing
+    rows with NULL y are the future rows carrying regressor values (the
+    reference's two-table macro collapsed into the standard panel-future
+    layout; Spark UDTFs accept ONE TABLE argument). Fits through the
+    kernel's regression with model errors, like
+    forecast_ext.ts_forecast_exog_by."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, xreg_csv, frequency, method,
+                horizon, params_json=None):
+        g, d = group_col.value, ds_col.value
+        spec = _spec(method.value, horizon.value, frequency.value,
+                     _lit(params_json))
+        xcols = [c for c in str(xreg_csv.value).split(",") if c.strip()]
+        return _result(forecast_schema(table.dataType, g, d),
+                       (spec, g, d, y_col.value, xcols), by=g, order=d)
+
+    def _block(self, rows):
+        """The forecast block of the union-convention series, or None when
+        the series is skipped."""
+        spec, g, ds_col, y_col, xcols = self.p
+        nn = [i for i, r in enumerate(rows) if r[y_col] is not None]
+        if not nn:
+            return None
+        split = nn[-1] + 1
+        hist, fut = rows[:split], rows[split:split + spec.horizon]
+        if not fut or len(hist) < 3:
+            return None
+
+        def xmat(rs):
+            return np.array([[math.nan if r[c] is None else float(r[c])
+                              for c in xcols] for r in rs])
+
+        r = fit_one(spec, _nan_y(hist, y_col), len(fut),
+                    (xmat(hist), xmat(fut)))
+        if r is None:
+            return None  # error isolation, matching the DataFrame op
+        last = hist[-1][ds_col]
+        return forecast_block(spec, None if g is None else rows[0][g],
+                              last, r, isinstance(last, int))
+
+    def emit(self, rows):
+        block = self._block(rows)
+        if block is not None:
+            yield from _block_rows(block)
+
+
+class ForecastExogUDTF(ForecastExogByUDTF):
+    """``ts_forecast_exog(TABLE(t), 'ds', 'y', 'x1,x2', 'Naive', '7'[,
+    params_json])`` — single-series array-valued form (mirror of
+    forecast_ext.ts_forecast_exog)."""
+
+    @staticmethod
+    def analyze(table, ds_col, y_col, xreg_csv, method, horizon,
+                params_json=None):
+        arr = T.ArrayType(_DBL)
+        spec = _spec(method.value, horizon.value, "1d", _lit(params_json))
+        xcols = [c for c in str(xreg_csv.value).split(",") if c.strip()]
+        return _result(
+            [_f("point_forecasts", arr), _f("lower_bounds", arr),
+             _f("upper_bounds", arr), _f("model_name", T.StringType())],
+            (spec, None, ds_col.value, y_col.value, xcols),
+            order=ds_col.value)
+
+    def emit(self, rows):
+        block = self._block(rows)
+        if block is not None:
+            yield tuple([float(v) for v in col] for col in block[3:6]) \
+                + (block[6][0],)
+
+
+class CvForecastUDTF(_SeriesUDTF):
+    """``ts_cv_forecast_by(TABLE(folds), 'id', 'ds', 'y', 'Naive'[,
+    params_json])`` — fit per (group, fold) train slice, predict the test
+    rows (mirror of cv.ts_cv_forecast_by; the folds table carries fold_id
+    and split columns from ts_cv_folds_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
+        s = table.dataType
+        g, d = group_col.value, ds_col.value
+        return _result(
+            [_f("fold_id", T.LongType()), _f(g, s[g].dataType),
+             _f(d, s[d].dataType), _f(y_col.value, _DBL),
+             _f("split", T.StringType()), _f("yhat", _DBL),
+             _f("yhat_lower", _DBL), _f("yhat_upper", _DBL),
+             _f("model_name", T.StringType())],
+            (_spec(method.value, params_json=_lit(params_json)), g, d,
+             y_col.value), by=g, order=d)
+
+    def emit(self, rows):
+        spec, group_col, ds_col, y_col = self.p
+        g = rows[0][group_col]
+        folds: dict = {}
+        for r in rows:
+            folds.setdefault(r["fold_id"], []).append(r)
+        for fold in sorted(folds):
+            train = [r for r in folds[fold] if r["split"] == "train"]
+            test = [r for r in folds[fold] if r["split"] == "test"]
+            h = len(test)
+            if h == 0 or len(train) < 3:
                 continue
-            for pos in range(0, train_end + 1):
-                r = self._rows[pos]
-                yield (r[group_col], r[ds_col], r[y_col], f, "train")
-            for pos in range(train_end + 1, test_end + 1):
-                r = self._rows[pos]
-                yield (r[group_col], r[ds_col], r[y_col], f, "test")
+            r = fit_one(spec, _nan_y(train, y_col), h)
+            if r is None:
+                continue
+            for i, t in enumerate(test):
+                yield (fold, g, t[ds_col],
+                       None if t[y_col] is None else float(t[y_col]), "test",
+                       float(r.point[i]), float(r.lower[i]),
+                       float(r.upper[i]), r.model_name)
 
 
-class StatsUDTF:
+class BacktestAutoUDTF(_SeriesUDTF):
+    """``ts_backtest_auto_by(TABLE(t), 'id', 'ds', 'y', 'Naive', '7',
+    '2')`` — expanding-window folds + per-fold fit + error columns
+    (mirror of cv.ts_backtest_auto_by; fold boundaries match
+    cv.ts_cv_folds_by's auto layout)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, method, horizon, n_folds):
+        g = group_col.value
+        return _result(
+            [_f(g, table.dataType[g].dataType), _f("fold_id", T.LongType()),
+             _f(ds_col.value, table.dataType[ds_col.value].dataType),
+             _f("yhat", _DBL), _f("actual", _DBL), _f("error", _DBL),
+             _f("abs_error", _DBL), _f("yhat_lower", _DBL),
+             _f("yhat_upper", _DBL), _f("model_name", T.StringType())],
+            (_spec(method.value, horizon.value), g, ds_col.value,
+             y_col.value, int(n_folds.value)), by=g, order=ds_col.value)
+
+    def emit(self, rows):
+        spec, group_col, ds_col, y_col, folds = self.p
+        h = spec.horizon
+        g = rows[0][group_col]
+        y = _nan_y(rows, y_col)
+        n = len(y)
+        for fold_id in range(folds):
+            train_end = max(n - folds * h, 1) - 1 + fold_id * h
+            if train_end + h >= n or train_end < 0:
+                continue
+            train = y[:train_end + 1]
+            if np.isfinite(train).sum() < 3:
+                continue
+            r = fit_one(spec, train)
+            if r is None:
+                continue
+            for s in range(1, h + 1):
+                row = rows[train_end + s]
+                actual = row[y_col]
+                yhat = float(r.point[s - 1])
+                err = None if actual is None else float(actual) - yhat
+                yield (g, fold_id, row[ds_col], yhat,
+                       None if actual is None else float(actual), err,
+                       None if err is None else abs(err),
+                       float(r.lower[s - 1]), float(r.upper[s - 1]),
+                       r.model_name)
+
+
+# ---------------------------------------------------------------------------
+# Per-series kernels shared with the DataFrame operators: detection,
+# statistics, data quality, features.
+# ---------------------------------------------------------------------------
+
+def _series_udtf(op: D.SeriesOp, parse=lambda: (), grouped: bool = True,
+                 y_name: str | None = "y", keep: tuple | None = None,
+                 null_y: bool = False):
+    """The UDTF of a ``SeriesOp``: ``(TABLE(t), [group_col,] ds_col, y_col,
+    *literals)``; ``parse(*literals)`` gives the kernel's arguments.
+    ``y_name`` names the op's value field (None: the input's y column
+    name); ``keep`` projects the output onto those fields; ``null_y``
+    hands the kernel the raw y values (None for NULL) instead of NaN."""
+
+    class _Series(_SeriesUDTF):
+        @staticmethod
+        def analyze(table, *args):
+            names = [a.value for a in args[:3 if grouped else 2]]
+            g, d, y = names if grouped else [None, *names]
+            fields = op.fields(d, table.dataType[d].dataType, y_name or y)
+            pos = (list(range(len(fields))) if keep is None else
+                   [i for i, f in enumerate(fields) if f.name in keep])
+            lead = [_f(g, table.dataType[g].dataType)] if grouped else []
+            kargs = parse(*[a.value for a in args[len(names):]])
+            return _result(lead + [fields[i] for i in pos],
+                           (g, d, y, kargs, pos), by=g, order=d)
+
+        def emit(self, rows):
+            g, d, y, kargs, pos = self.p
+            ys = [r[y] for r in rows] if null_y else _nan_y(rows, y)
+            cols = op.kernel(_ds(rows, d), ys, *kargs)
+            yield from _column_rows(() if g is None else (rows[0][g],),
+                                    [cols[i] for i in pos])
+
+    return _Series
+
+
+def _period(period):
+    return (_int(period),)
+
+
+def _peaks_args(min_prominence=0.0):
+    return (float(str(min_prominence)),)
+
+
+def _changepoint_args(min_size=2, penalty=None):
+    return _int(min_size), None if penalty is None else float(str(penalty))
+
+
+def _peak_timing_args(period=0, min_prominence=0.0):
+    return _int(period), float(str(min_prominence))
+
+
+DetectPeriodsUDTF = _series_udtf(
+    D.PERIODS, lambda method: (str(method),),
+    keep=("period", "confidence", "strength", "n_periods", "primary_period",
+          "method"))
+TsDetectAnomaliesOnlineUDTF = _series_udtf(
+    D.ONLINE_ZSCORE, D.online_zscore_args, y_name=None, null_y=True)
+
+_DETECTION_UDTFS = {
+    # non-_by single-series spellings (ts_macros.cpp registers both)
+    "ts_classify_seasonality": _series_udtf(D.CLASSIFY, _period,
+                                            grouped=False),
+    "ts_detect_peaks": _series_udtf(D.PEAKS, _peaks_args, grouped=False),
+    "ts_detect_changepoints": _series_udtf(D.CHANGEPOINTS, _changepoint_args,
+                                           grouped=False),
+    "ts_analyze_peak_timing": _series_udtf(D.PEAK_TIMING, _peak_timing_args,
+                                           grouped=False),
+    "ts_analyze_peak_timing_by": _series_udtf(D.PEAK_TIMING,
+                                              _peak_timing_args),
+    "ts_mstl_decomposition_by": _series_udtf(D.MSTL, lambda periods="": (
+        [int(x) for x in str(periods).split(",") if x.strip()] or None,)),
+    "ts_analyze_seasonality_by": _series_udtf(D.SEASONALITY),
+    "ts_classify_seasonality_by": _series_udtf(D.CLASSIFY, _period),
+    "ts_seasonal_strength_by": _series_udtf(
+        D.STRENGTH, lambda period, method="variance": (_int(period),
+                                                      str(method))),
+    "ts_detrend_by": _series_udtf(
+        D.DETREND, lambda method="linear", degree=2, order=1: (
+            str(method), _int(degree), _int(order))),
+    "ts_decompose_seasonal_by": _series_udtf(
+        D.DECOMPOSE, lambda period, method="additive": (_int(period),
+                                                       str(method))),
+    "ts_detect_peaks_by": _series_udtf(D.PEAKS, _peaks_args),
+    "ts_detect_changepoints_by": _series_udtf(D.CHANGEPOINTS,
+                                              _changepoint_args),
+    "ts_instantaneous_period_by": _series_udtf(D.INSTANTANEOUS),
+}
+
+
+class StatsUDTF(_SeriesUDTF):
     """``ts_stats_by(TABLE(t), group_col, ds_col, y_col, frequency)`` — SQL
-    form of the 36-column statistics operator; delegates to the same
-    ``compute_series_stats`` as the DataFrame path so the two surfaces
-    cannot drift."""
+    form of the 36-column statistics operator, through the per-series
+    kernel ``compute_series_stats`` (the DataFrame operator computes 19 of
+    the statistics as JVM aggregates and the rest with the same
+    ``_rest_stats``)."""
 
     @staticmethod
     def analyze(table, group_col, ds_col, y_col, frequency):
         from ..operators.stats import STATS_FIELDS
-        schema = table.dataType
         g = group_col.value
-        out = T.StructType([T.StructField(g, schema[g].dataType)]
-                           + [T.StructField(n, t) for n, t in STATS_FIELDS])
-        return AnalyzeResult(schema=out, partitionBy=[PartitioningColumn(g)],
-                             orderBy=[OrderingColumn(ds_col.value)])
+        freq = parse_frequency(frequency.value) if frequency.value else None
+        return _result(
+            [_f(g, table.dataType[g].dataType)]
+            + [_f(n, t) for n, t in STATS_FIELDS],
+            (g, ds_col.value, y_col.value, freq), by=g, order=ds_col.value)
 
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, frequency):
-        self._args = (group_col, ds_col, y_col, frequency)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import numpy as np
-        import pandas as pd
-
-        from ..frequency import parse_frequency
-        from ..operators.stats import STATS_FIELDS, compute_series_stats
-        group_col, ds_col, y_col, frequency = self._args
-        freq = parse_frequency(frequency) if frequency else None
-        g = self._rows[0][group_col]
-        y = np.array([math.nan if r[y_col] is None else float(r[y_col])
-                      for r in self._rows])
-        ds0 = self._rows[0][ds_col]
-        if isinstance(ds0, int):
-            dates = np.array([r[ds_col] for r in self._rows], dtype="int64")
-        else:
-            dates = (pd.to_datetime([r[ds_col] for r in self._rows])
-                     .astype("int64").to_numpy() // 1000)
-        st = compute_series_stats(y, dates, freq)
+    def emit(self, rows):
+        from ..operators.stats import (STATS_FIELDS, compute_series_stats,
+                                       dates_us)
+        g, d, y, freq = self.p
+        st = compute_series_stats(_nan_y(rows, y), dates_us(_ds(rows, d)),
+                                  freq)
 
         def plain(v, typ):
             if v is None:
@@ -290,7 +559,72 @@ class StatsUDTF:
                 return bool(v)
             return float(v)
 
-        yield tuple([g] + [plain(st[name], typ) for name, typ in STATS_FIELDS])
+        yield tuple([rows[0][g]]
+                    + [plain(st[name], typ) for name, typ in STATS_FIELDS])
+
+
+class DataQualityUDTF(_SeriesUDTF):
+    """``ts_data_quality(TABLE(t), 'id', 'ds', 'y'[, n_short, frequency])``
+    — per-series 4-dimension quality scores through the DataFrame
+    operator's kernel, ``stats.data_quality`` (n_short/frequency accepted
+    for signature parity, unused by the scores exactly as in the DataFrame
+    op)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, *rest):
+        from ..operators.stats import DQ_FIELDS
+        g = group_col.value
+        return _result(
+            [_f("unique_id", table.dataType[g].dataType)]
+            + [_f(n, t) for n, t in DQ_FIELDS],
+            (g, ds_col.value, y_col.value), by=g, order=ds_col.value)
+
+    def emit(self, rows):
+        from ..operators.stats import data_quality
+        g, d, y = self.p
+        yield from _column_rows((rows[0][g],),
+                                data_quality(_ds(rows, d), _nan_y(rows, y)))
+
+
+class FeaturesByUDTF(_SeriesUDTF):
+    """``ts_features_by(TABLE(t), 'id', 'ds', 'y'[, 'mean,std,...'])`` —
+    wide per-series feature row through the DataFrame operator's kernel,
+    ``features.feature_columns``."""
+
+    @staticmethod
+    def _analyze(table, grouped, *args):
+        from ..operators.features import _safe, selected_features
+        names = [a.value for a in args]
+        if grouped:
+            g, d, y, *sel = names
+            lead = [_f(g, table.dataType[g].dataType)]
+        else:
+            (d, y, *sel), g, lead = names, None, []
+        sel = selected_features(
+            [s for s in str(sel[0]).split(",") if s.strip()]
+            if sel and sel[0] else None)
+        return _result(lead + [_f(_safe(x), _DBL) for x in sel],
+                       (g, d, y, sel), by=g, order=d)
+
+    @staticmethod
+    def analyze(table, *args):
+        return FeaturesByUDTF._analyze(table, True, *args)
+
+    def emit(self, rows):
+        from ..operators.features import feature_columns
+        g, d, y, sel = self.p
+        yield from _column_rows(
+            () if g is None else (rows[0][g],),
+            feature_columns(_ds(rows, d), _nan_y(rows, y), sel))
+
+
+class FeaturesTableUDTF(FeaturesByUDTF):
+    """``ts_features_table(TABLE(t), 'ds', 'y'[, subset])`` — single-series
+    form."""
+
+    @staticmethod
+    def analyze(table, *args):
+        return FeaturesByUDTF._analyze(table, False, *args)
 
 
 # ---------------------------------------------------------------------------
@@ -398,15 +732,16 @@ _SQL_SCALARS: list[tuple[str, str, str]] = [
 # Grouped (_by) metric UDTFs: ``SELECT * FROM ts_mae_by(TABLE(t), 'id',
 # 'actual', 'forecast')`` -> (id, metric_value). Compatibility surface for
 # the reference's registered _by macros (anofox_forecast_extension.cpp);
-# the performance path is functions/metrics.py. tests/test_sql_surface.py
-# pins SQL == DataFrame per metric so the two cannot drift.
+# the performance path is functions/metrics.py (Catalyst). tests/
+# test_sql_surface.py pins SQL == DataFrame per metric.
 # ---------------------------------------------------------------------------
 
 _METRIC_EPS = 2.220446049250313e-16
 
 
 def _metric_by_compute(metric: str, cols: list[list[float]], extra) -> float:
-    import numpy as np
+    """One group's metric; ``extra`` is the parsed trailing argument (the
+    quantile, or mqloss's list of quantiles)."""
     a = np.asarray(cols[0], dtype=float)
     if metric in ("mae", "mse", "rmse", "bias", "mape", "smape", "r2",
                   "quantile_loss"):
@@ -434,9 +769,9 @@ def _metric_by_compute(metric: str, cols: list[list[float]], extra) -> float:
             return math.nan
         return 1.0 - float(np.sum((a - f) ** 2)) / ss_tot
     if metric == "quantile_loss":
-        q = float(extra)
         err = a - f
-        return float(np.mean(np.where(err >= 0, q * err, (q - 1.0) * err)))
+        return float(np.mean(np.where(err >= 0, extra * err,
+                                      (extra - 1.0) * err)))
     if metric in ("mase", "rmae"):
         f = np.asarray(cols[1], dtype=float)
         b = np.asarray(cols[2], dtype=float)
@@ -449,9 +784,8 @@ def _metric_by_compute(metric: str, cols: list[list[float]], extra) -> float:
         up = np.asarray(cols[2], dtype=float)
         return float(np.mean((a >= lo) & (a <= up)))
     if metric == "mqloss":
-        qs = [float(x) for x in str(extra).split(",")]
         per_q = []
-        for i, q in enumerate(qs):
+        for i, q in enumerate(extra):
             err = a - np.asarray(cols[1 + i], dtype=float)
             per_q.append(float(np.mean(np.where(err >= 0, q * err,
                                                 (q - 1.0) * err))))
@@ -460,39 +794,28 @@ def _metric_by_compute(metric: str, cols: list[list[float]], extra) -> float:
 
 
 def _make_metric_by_udtf(metric: str, n_value_args: int, has_extra: bool):
-    """Build a UDTF class for one grouped metric. Value-column arguments are
+    """Build the UDTF of one grouped metric. Value-column arguments are
     comma-splittable (mqloss passes its forecast columns as 'c1,c2,...')."""
 
-    class _MetricBy:
+    class _MetricBy(_SeriesUDTF):
         @staticmethod
         def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
                     *rest: AnalyzeArgument) -> AnalyzeResult:
             g = group_col.value
-            out = T.StructType([
-                T.StructField(g, table.dataType[g].dataType),
-                T.StructField("metric_value", T.DoubleType()),
-            ])
-            return AnalyzeResult(schema=out,
-                                 partitionBy=[PartitioningColumn(g)])
+            vals = [a.value for a in rest]
+            cols = [c for v in vals[:n_value_args] for c in str(v).split(",")]
+            extra = None
+            if metric == "quantile_loss":
+                extra = float(vals[n_value_args])
+            elif metric == "mqloss":
+                extra = [float(x) for x in str(vals[n_value_args]).split(",")]
+            return _result([_f(g, table.dataType[g].dataType),
+                            _f("metric_value", _DBL)], (g, cols, extra), by=g)
 
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, *rest):
-            self._args = (group_col, *rest)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, *rest = self._args
-            extra = rest[n_value_args] if has_extra else None
-            col_names: list[str] = []
-            for c in rest[:n_value_args]:
-                col_names.extend(str(c).split(","))
-            cols = [[r[c] for r in self._rows] for c in col_names]
-            yield (self._rows[0][group_col],
-                   _metric_by_compute(metric, cols, extra))
+        def emit(self, rows):
+            g, cols, extra = self.p
+            yield (rows[0][g], _metric_by_compute(
+                metric, [[r[c] for r in rows] for c in cols], extra))
 
     return _MetricBy
 
@@ -516,60 +839,52 @@ _METRIC_BY_SPECS = {
 
 # ---------------------------------------------------------------------------
 # Prep-family UDTFs: per-series transforms / filters callable from SQL.
-# Semantics mirror operators/prep.py (tests pin SQL == DataFrame).
+# Each replays its Catalyst DataFrame operator in operators/prep.py (tests
+# pin SQL == DataFrame).
 # ---------------------------------------------------------------------------
 
-def _make_prep_udtf(op: str):
-    filled_ops = {"fill_const", "fill_forward", "fill_backward", "fill_mean",
-                  "interpolate"}
+_FILLED_OPS = {"fill_const", "fill_forward", "fill_backward", "fill_mean",
+               "interpolate"}
+# op -> parser of its one optional literal (None: the op takes none)
+_PREP_ARG = {"diff": int, "drop_short": int, "drop_gappy": float,
+             "fill_const": float}
 
-    class _Prep:
+
+def _make_prep_udtf(op: str):
+
+    class _Prep(_SeriesUDTF):
         @staticmethod
         def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
                     ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
                     *rest: AnalyzeArgument) -> AnalyzeResult:
             schema = table.dataType
             g, d, y = group_col.value, ds_col.value, y_col.value
-            fields = [T.StructField(g, schema[g].dataType),
-                      T.StructField(d, schema[d].dataType)]
+            fields = [_f(g, schema[g].dataType), _f(d, schema[d].dataType)]
             if op == "diff":
-                fields.append(T.StructField("diff_value", T.DoubleType()))
+                fields.append(_f("diff_value", _DBL))
             else:
-                fields.append(T.StructField(y, schema[y].dataType))
-                if op in filled_ops:
-                    fields.append(T.StructField("filled_value",
-                                                T.DoubleType()))
-            return AnalyzeResult(schema=T.StructType(fields),
-                                 partitionBy=[PartitioningColumn(g)],
-                                 orderBy=[OrderingColumn(d)])
+                fields.append(_f(y, schema[y].dataType))
+                if op in _FILLED_OPS:
+                    fields.append(_f("filled_value", _DBL))
+            arg = (_PREP_ARG[op](rest[0].value)
+                   if rest and op in _PREP_ARG else None)
+            return _result(fields, (g, d, y, arg), by=g, order=d)
 
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, ds_col, y_col, *rest):
-            self._args = (group_col, ds_col, y_col, *rest)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            import numpy as np
-            group_col, ds_col, y_col, *rest = self._args
-            rows = self._rows
-            g = rows[0][group_col]
+        def emit(self, rows):
+            g_col, ds_col, y_col, arg = self.p
+            g = rows[0][g_col]
             # SQL NULL (None) is "missing"; a real NaN double is a VALUE —
             # exactly the DataFrame ops' semantics (prep.py uses
             # isNull/isNotNull, and Spark avg/min/max/!= treat NaN as a
             # value), so the two surfaces cannot disagree on NaN-bearing
             # series. y holds NaN for BOTH cases; isnull disambiguates.
-            y = np.array([math.nan if r[y_col] is None else float(r[y_col])
-                          for r in rows])
+            y = _nan_y(rows, y_col)
             isnull = np.array([r[y_col] is None for r in rows])
             notnull = ~isnull
             n = len(rows)
 
             if op == "diff":
-                lag = int(rest[0]) if rest else 1
+                lag = 1 if arg is None else arg
                 for i, r in enumerate(rows):
                     if i < lag or isnull[i] or isnull[i - lag]:
                         v = None       # NULL arithmetic -> NULL
@@ -599,9 +914,9 @@ def _make_prep_udtf(op: str):
                             or (len(nn) > 0 and len(nn) < len(vv))
                             or (len(nn) > 1 and bool((nn != nn[0]).any())))
                 elif op == "drop_short":
-                    keep = len(rows) >= int(rest[0])
+                    keep = len(rows) >= arg
                 elif op == "drop_gappy":
-                    keep = float(isnull.mean()) <= float(rest[0])
+                    keep = float(isnull.mean()) <= arg
                 else:  # drop_zeros — NaN != 0 is true in Spark, NaN counts
                     keep = bool(((y != 0) & notnull).any())
                 if keep:
@@ -612,9 +927,8 @@ def _make_prep_udtf(op: str):
             # where the output is SQL NULL (unfillable null position).
             fills: list = [None] * n
             if op == "fill_const":
-                c = float(rest[0])
                 for i in range(n):
-                    fills[i] = y[i] if notnull[i] else c
+                    fills[i] = y[i] if notnull[i] else arg
             elif op == "fill_forward":
                 last = None
                 for i in range(n):
@@ -651,50 +965,6 @@ def _make_prep_udtf(op: str):
     return _Prep
 
 
-class DetectPeriodsUDTF:
-    """``ts_detect_periods(TABLE(t), 'id', 'ds', 'y', 'fft')`` — SQL form of
-    the period-detection operator; delegates to the same ``detect_periods``
-    as the DataFrame path (operators/detect.py) so the two cannot drift."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method):
-        g = group_col.value
-        out = T.StructType([
-            T.StructField(g, table.dataType[g].dataType),
-            T.StructField("period", T.DoubleType()),
-            T.StructField("confidence", T.DoubleType()),
-            T.StructField("strength", T.DoubleType()),
-            T.StructField("n_periods", T.IntegerType()),
-            T.StructField("primary_period", T.DoubleType()),
-            T.StructField("method", T.StringType()),
-        ])
-        return AnalyzeResult(schema=out, partitionBy=[PartitioningColumn(g)],
-                             orderBy=[OrderingColumn(ds_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method):
-        self._args = (group_col, ds_col, y_col, method)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import numpy as np
-
-        from ..operators.detect import detect_periods
-        group_col, _ds, y_col, method = self._args
-        g = self._rows[0][group_col]
-        y = np.array([math.nan if r[y_col] is None else float(r[y_col])
-                      for r in self._rows])
-        res = detect_periods(y, str(method))
-        for d in res["periods"] or [{"period": 0.0, "confidence": 0.0,
-                                     "strength": 0.0}]:
-            yield (g, d["period"], d["confidence"], d["strength"],
-                   res["n_periods"], res["primary_period"], res["method"])
-
-
 _PREP_UDTF_NAMES = {
     "ts_fill_nulls_const_by": "fill_const",
     "ts_fill_nulls_forward_by": "fill_forward",
@@ -712,268 +982,737 @@ _PREP_UDTF_NAMES = {
 }
 
 
-# ---------------------------------------------------------------------------
-# Round-4 surface expansion: detection / hierarchy / conformal / cv families
-# as UDTFs, delegating to the SAME per-series functions as the DataFrame ops
-# (operators/detect.py module-level primitives) so the surfaces cannot
-# drift. Mirrors the reference's remaining macro table
-# (src/macros/ts_macros.cpp) toward its ~70-name surface.
-# ---------------------------------------------------------------------------
+class FillGapsUDTF(_SeriesUDTF):
+    """``ts_fill_gaps_by(TABLE(t), group_col, ds_col, y_col, frequency)`` —
+    SQL form of the gap-filling operator (ref macro ``ts_macros.cpp:176+``).
+    Emits every grid timestamp between each series' min and max ds; missing
+    points carry NULL y."""
 
-def _nan_y(rows, y_col):
-    import numpy as np
-    return np.array([math.nan if r[y_col] is None else float(r[y_col])
-                     for r in rows])
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, frequency):
+        schema = table.dataType
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        return _result([_f(g, schema[g].dataType), _f(d, schema[d].dataType),
+                        _f(y, schema[y].dataType)],
+                       (g, d, y, parse_frequency(frequency.value)),
+                       by=g, order=d)
 
-
-def _make_series_udtf(out_fields, compute):
-    """Grouped (partitionBy group, orderBy ds) UDTF factory. ``out_fields``
-    is ``callable(table_type, ds_name) -> list[StructField]`` appended after
-    the group column; ``compute(ds_vals, y, args) -> iterable of tuples``
-    (the group value is prepended here). Scalar args arrive as strings."""
-
-    class _S:
-        @staticmethod
-        def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
-                    ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
-                    *rest: AnalyzeArgument) -> AnalyzeResult:
-            g = group_col.value
-            fields = [T.StructField(g, table.dataType[g].dataType)]
-            fields += out_fields(table.dataType, ds_col.value)
-            return AnalyzeResult(schema=T.StructType(fields),
-                                 partitionBy=[PartitioningColumn(g)],
-                                 orderBy=[OrderingColumn(ds_col.value)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, ds_col, y_col, *rest):
-            self._args = (group_col, ds_col, y_col, *rest)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, ds_col, y_col, *rest = self._args
-            g = self._rows[0][group_col]
-            ds = [r[ds_col] for r in self._rows]
-            y = _nan_y(self._rows, y_col)
-            for tup in compute(ds, y, [str(a) for a in rest]):
-                yield (g, *tup)
-
-    return _S
-
-
-def _f(name, t):
-    return T.StructField(name, t)
-
-
-def _make_single_series_udtf(out_fields, compute):
-    """Whole-table single-series UDTF (the reference's non-``_by`` macro
-    forms, e.g. ``ts_detect_peaks(TABLE(t), 'ds', 'y', ...)``): one
-    partition ordered by ds. Same ``out_fields``/``compute`` contract as
-    :func:`_make_series_udtf` minus the group column."""
-
-    class _S:
-        @staticmethod
-        def analyze(table: AnalyzeArgument, ds_col: AnalyzeArgument,
-                    y_col: AnalyzeArgument,
-                    *rest: AnalyzeArgument) -> AnalyzeResult:
-            return AnalyzeResult(
-                schema=T.StructType(out_fields(table.dataType, ds_col.value)),
-                withSinglePartition=True,
-                orderBy=[OrderingColumn(ds_col.value)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, ds_col, y_col, *rest):
-            self._args = (ds_col, y_col, *rest)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            ds_col, y_col, *rest = self._args
-            ds = [r[ds_col] for r in self._rows]
-            y = _nan_y(self._rows, y_col)
-            yield from compute(ds, y, [str(a) for a in rest])
-
-    return _S
-
-
-def _detection_udtfs():
-    """name -> UDTF class for the §2.5 detection family."""
-    import numpy as np
-
-    D = T.DoubleType()
-
-    def _passthrough(tt, ds):
-        return [_f(ds, tt[ds].dataType)]
-
-    def c_analyze(ds, y, args):
-        from ..functions.models import detect_seasonality, interpolate_nulls
-        from ..operators.detect import seasonal_strength
-        yv = interpolate_nulls(y)
-        p = detect_seasonality(yv)
-        s = seasonal_strength(yv, p) if p > 1 else 0.0
-        t = np.arange(len(yv), dtype=float)
-        b1, b0 = np.polyfit(t, yv, 1) if len(yv) > 1 else (0.0, float(yv[0]))
-        vy = float(np.var(yv))
-        ts_ = min(max(1.0 - float(np.var(yv - (b0 + b1 * t))) / vy, 0.0), 1.0) \
-            if vy > 0 else 0.0
-        yield ([int(p)] if p > 1 else [], int(p) if p > 1 else 0,
-               float(s), float(ts_))
-
-    def c_classify(ds, y, args):
-        from ..operators.detect import classify_seasonality
-        r = classify_seasonality(y, int(args[0]))
-        yield (r["classification"], r["additive_strength"],
-               r["multiplicative_strength"])
-
-    def c_strength(ds, y, args):
-        from ..operators.detect import seasonal_strength
-        method = args[1] if len(args) > 1 else "variance"
-        yield (float(seasonal_strength(y, int(args[0]), method)),)
-
-    def c_detrend(ds, y, args):
-        from ..operators.detect import detrend
-        method = args[0] if args else "linear"
-        r = detrend(y, method, degree=int(args[1]) if len(args) > 1 else 2,
-                    order=int(args[2]) if len(args) > 2 else 1)
-        for i in range(len(y)):
-            yield (ds[i], float(y[i]), float(r["trend"][i]),
-                   float(r["detrended"][i]), r["method"])
-
-    def c_decompose(ds, y, args):
-        from ..operators.detect import decompose_seasonal
-        method = args[1] if len(args) > 1 else "additive"
-        try:
-            r = decompose_seasonal(y, int(args[0]), method)
-        except ValueError:
+    def emit(self, rows):
+        import datetime as _dt
+        group_col, ds_col, y_col, freq = self.p
+        g = rows[0][group_col]
+        have = {r[ds_col]: r[y_col] for r in rows}
+        first, last = rows[0][ds_col], rows[-1][ds_col]
+        if isinstance(first, int):
+            step = freq.n if freq.kind == "int" else 1
+            cur = first
+            while cur <= last:
+                yield (g, cur, have.get(cur))
+                cur += step
             return
-        for i in range(len(y)):
-            yield (ds[i], float(y[i]), float(r["trend"][i]),
-                   float(r["seasonal"][i]), float(r["remainder"][i]))
-
-    def c_peaks(ds, y, args):
-        from ..operators.detect import find_peaks
-        r = find_peaks(y, float(args[0]) if args else 0.0)
-        for j in range(r["n_peaks"]):
-            i = int(r["indices"][j])
-            yield (ds[i], float(r["values"][j]), i,
-                   float(r["prominences"][j]))
-
-    def c_changepoints(ds, y, args):
-        from ..operators.detect import pelt
-        min_size = int(args[0]) if args else 2
-        penalty = float(args[1]) if len(args) > 1 else None
-        cps = set(pelt(y, penalty, min_size, "l2"))
-        for i in range(len(y)):
-            yield (ds[i], i in cps, 1.0 if i in cps else 0.0)
-
-    def c_instantaneous(ds, y, args):
-        from ..functions.models import interpolate_nulls
-        from ..operators.detect import EPS, _hilbert_analytic
-        yv = interpolate_nulls(y)
-        n = len(yv)
-        if n < 4:
+        if freq.kind == "month":
+            from ..operators.forecast import _add_months_clamped
+            import pandas as _pd
+            cur = _pd.Timestamp(first)
+            k = 0
+            while cur.to_pydatetime() <= last:
+                py = cur.to_pydatetime()
+                yield (g, py, have.get(py))
+                k += 1
+                cur = _add_months_clamped(_pd.Timestamp(first), freq.n * k)
             return
-        analytic = _hilbert_analytic(yv - yv.mean())
-        amp = np.abs(analytic)
-        phase = np.unwrap(np.angle(analytic))
-        freq = np.empty(n)
-        freq[1:] = np.diff(phase) / (2.0 * np.pi)
-        freq[0] = freq[1]
-        for i in range(n):
-            per = float(1.0 / abs(freq[i])) if abs(freq[i]) > EPS else None
-            yield (ds[i], per, float(freq[i]), float(amp[i]))
+        step = _dt.timedelta(seconds=freq.n)
+        cur = first
+        while cur <= last:
+            yield (g, cur, have.get(cur))
+            cur += step
 
-    def c_peak_timing(ds, y, args):
-        from ..operators.detect import analyze_peak_timing
-        period = int(args[0]) if args else 0
-        min_prom = float(args[1]) if len(args) > 1 else 0.0
-        r = analyze_peak_timing(y, period, min_prom)
-        yield (r["timing_classification"], r["modulation_type"],
-               r["has_stable_timing"], r["timing_variability"],
-               r["seasonal_strength"], r["is_seasonal"],
-               r["cycle_strengths"], r["weak_seasons"])
 
-    def c_mstl(ds, y, args):
-        from ..operators.detect import mstl_decompose
-        periods = ([int(v) for v in args[0].split(",") if v.strip()]
-                   if args and args[0].strip() else None)
-        trend, seasonal, remainder, ms = mstl_decompose(y, periods)
-        for i in range(len(trend)):
-            yield (ds[i], float(trend[i]), float(seasonal[i]),
-                   float(remainder[i]), ms)
+def _trunc_second(v):
+    """date_trunc('second', ts) mirror for a Python datetime (NULL-safe)."""
+    import datetime as _dt
+    if isinstance(v, _dt.datetime):
+        return v.replace(microsecond=0)
+    return v
 
-    _peak_timing_fields = lambda tt, ds: [  # noqa: E731
-        _f("timing_classification", T.StringType()),
-        _f("modulation_type", T.StringType()),
-        _f("has_stable_timing", T.BooleanType()),
-        _f("timing_variability", D),
-        _f("seasonal_strength", D),
-        _f("is_seasonal", T.BooleanType()),
-        _f("cycle_strengths", T.ArrayType(D)),
-        _f("weak_seasons", T.ArrayType(T.IntegerType()))]
-    _peaks_fields = lambda tt, ds: [  # noqa: E731
-        _f(ds, tt[ds].dataType), _f("y", D),
-        _f("peak_index", T.IntegerType()), _f("prominence", D)]
-    _cp_fields = lambda tt, ds: [  # noqa: E731
-        _f(ds, tt[ds].dataType), _f("is_changepoint", T.BooleanType()),
-        _f("changepoint_probability", D)]
-    _classify_fields = lambda tt, ds: [  # noqa: E731
-        _f("classification", T.StringType()), _f("additive_strength", D),
-        _f("multiplicative_strength", D)]
-    _mstl_fields = lambda tt, ds: [  # noqa: E731
-        _f(ds, tt[ds].dataType), _f("trend", D), _f("seasonal", D),
-        _f("remainder", D), _f("periods", T.ArrayType(T.IntegerType()))]
 
-    return {
-        # non-_by single-series spellings (ts_macros.cpp registers both)
-        "ts_classify_seasonality": _make_single_series_udtf(
-            _classify_fields, c_classify),
-        "ts_detect_peaks": _make_single_series_udtf(_peaks_fields, c_peaks),
-        "ts_detect_changepoints": _make_single_series_udtf(
-            _cp_fields, c_changepoints),
-        "ts_analyze_peak_timing": _make_single_series_udtf(
-            _peak_timing_fields, c_peak_timing),
-        "ts_analyze_peak_timing_by": _make_series_udtf(
-            _peak_timing_fields, c_peak_timing),
-        "ts_mstl_decomposition_by": _make_series_udtf(_mstl_fields, c_mstl),
-        "ts_analyze_seasonality_by": _make_series_udtf(
-            lambda tt, ds: [_f("detected_periods", T.ArrayType(T.IntegerType())),
-                            _f("primary_period", T.IntegerType()),
-                            _f("seasonal_strength", D),
-                            _f("trend_strength", D)], c_analyze),
-        "ts_classify_seasonality_by": _make_series_udtf(
-            lambda tt, ds: [_f("classification", T.StringType()),
-                            _f("additive_strength", D),
-                            _f("multiplicative_strength", D)], c_classify),
-        "ts_seasonal_strength_by": _make_series_udtf(
-            lambda tt, ds: [_f("seasonal_strength", D)], c_strength),
-        "ts_detrend_by": _make_series_udtf(
-            lambda tt, ds: [_f(ds, tt[ds].dataType), _f("y", D),
-                            _f("trend", D), _f("detrended", D),
-                            _f("method", T.StringType())], c_detrend),
-        "ts_decompose_seasonal_by": _make_series_udtf(
-            lambda tt, ds: [_f(ds, tt[ds].dataType), _f("y", D),
-                            _f("trend", D), _f("seasonal", D),
-                            _f("remainder", D)], c_decompose),
-        "ts_detect_peaks_by": _make_series_udtf(
-            lambda tt, ds: [_f(ds, tt[ds].dataType), _f("y", D),
-                            _f("peak_index", T.IntegerType()),
-                            _f("prominence", D)], c_peaks),
-        "ts_detect_changepoints_by": _make_series_udtf(
-            lambda tt, ds: [_f(ds, tt[ds].dataType),
-                            _f("is_changepoint", T.BooleanType()),
-                            _f("changepoint_probability", D)], c_changepoints),
-        "ts_instantaneous_period_by": _make_series_udtf(
-            lambda tt, ds: [_f(ds, tt[ds].dataType), _f("period", D),
-                            _f("frequency", D), _f("amplitude", D)],
-            c_instantaneous),
-    }
+def _py_add_months(dt, k: int):
+    """F.add_months mirror: month-end-clamped calendar month addition."""
+    import calendar
+    yi, m0 = divmod(dt.year * 12 + dt.month - 1 + k, 12)
+    day = min(dt.day, calendar.monthrange(yi, m0 + 1)[1])
+    return dt.replace(year=yi, month=m0 + 1, day=day)
+
+
+class FillForwardUDTF(_SeriesUDTF):
+    """``ts_fill_forward_by(TABLE(t), 'id', 'ds', 'y', '2024-12-31', '1d')``
+    — extend each series forward to target with NULL values (mirror of
+    prep.ts_fill_forward_by's unit-start calendar arithmetic)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, target_date, frequency):
+        s = table.dataType
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        target = (int(target_date.value)
+                  if isinstance(s[d].dataType, T.IntegralType)
+                  else _parse_ts(target_date.value))
+        return _result([_f(g, s[g].dataType), _f(d, s[d].dataType),
+                        _f(y, s[y].dataType)],
+                       (g, d, y, target, parse_frequency(frequency.value)),
+                       by=g, order=d)
+
+    def emit(self, rows):
+        import datetime as _dt
+        group_col, ds_col, y_col, target, freq = self.p
+        g = rows[0][group_col]
+        for r in rows:
+            yield (g, r[ds_col], r[y_col])
+        last = rows[-1][ds_col]
+        if last is None:
+            return
+        if isinstance(last, int):
+            step = freq.n if freq.kind == "int" else 1
+            cur = last + step
+            while cur <= target:
+                yield (g, cur, None)
+                cur += step
+            return
+        if freq.kind == "month":
+            n = freq.n
+            # unit start mirrors prep._unit_start (date_trunc year/quarter/month)
+            if n % 12 == 0:
+                start = last.replace(month=1, day=1, hour=0, minute=0,
+                                     second=0, microsecond=0)
+            elif n % 3 == 0:
+                qm = (last.month - 1) // 3 * 3 + 1
+                start = last.replace(month=qm, day=1, hour=0, minute=0,
+                                     second=0, microsecond=0)
+            else:
+                start = last.replace(day=1, hour=0, minute=0, second=0,
+                                     microsecond=0)
+            s = 1
+            while True:
+                e = _py_add_months(start, s * n)
+                if e > target:
+                    return
+                if e > last:
+                    yield (g, e, None)
+                s += 1
+        else:
+            step = _dt.timedelta(seconds=freq.n)
+            cur = last + step
+            while cur <= target:
+                yield (g, cur, None)
+                cur += step
+
+
+class MarkUnknownUDTF(_SeriesUDTF):
+    """``ts_mark_unknown_by(TABLE(t), 'id', 'ds', '2024-06-30')`` — all
+    columns + is_unknown + per-group last_known_date (mirror of
+    prep.ts_mark_unknown_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, cutoff_date):
+        return _result(list(table.dataType.fields)
+                       + [_f("is_unknown", T.BooleanType()),
+                          _f("last_known_date", T.TimestampType())],
+                       (ds_col.value, _parse_ts(cutoff_date.value)),
+                       by=group_col.value)
+
+    def emit(self, rows):
+        ds_col, cutoff = self.p
+        dts = [_trunc_second(r[ds_col]) for r in rows]
+        known = [d for d in dts if d is not None and d <= cutoff]
+        last_known = max(known) if known else None
+        for r, d in zip(rows, dts):
+            unk = None if d is None else d > cutoff
+            yield (*tuple(r), unk, last_known)
+
+
+_STRATEGIES = ("null", "default", "last_value")
+
+
+def _strategy(rest, default_fill=0.0) -> tuple[str, float]:
+    """The ``[strategy, fill_value]`` literals of the unknown-value fills."""
+    strategy = str(rest[0].value) if rest else "last_value"
+    if strategy not in _STRATEGIES:
+        raise ValueError(f"unknown strategy {strategy!r}")
+    return strategy, float(rest[1].value) if len(rest) > 1 else default_fill
+
+
+class FillUnknownUDTF(_SeriesUDTF):
+    """``ts_fill_unknown_by(TABLE(t), 'id', 'ds', 'y', '2024-06-30'[,
+    strategy, fill_value])`` (mirror of prep.ts_fill_unknown_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, cutoff_date, *rest):
+        g = group_col.value
+        return _result([_f(g, table.dataType[g].dataType),
+                        _f(ds_col.value, T.TimestampType()),
+                        _f(y_col.value, _DBL)],
+                       (g, ds_col.value, y_col.value,
+                        _parse_ts(cutoff_date.value), *_strategy(rest)),
+                       by=g, order=ds_col.value)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, cutoff, strategy, fill_value = self.p
+        g = rows[0][group_col]
+        last = None
+        for r in rows:
+            d = _trunc_second(r[ds_col])
+            yv = None if r[y_col] is None else float(r[y_col])
+            if d is not None and d <= cutoff:
+                if yv is not None:
+                    last = yv
+                yield (g, d, yv)
+            elif strategy == "null":
+                yield (g, d, None)
+            elif strategy == "default":
+                yield (g, d, fill_value)
+            else:
+                yield (g, d, last)
+
+
+def _scale_stats(vals: list, method: str):
+    """(loc, scale) over a group's non-null values — the Python replay of
+    ``prep.ts_scale_by``'s sorted-array arithmetic (same fold order)."""
+    v = sorted(vals)
+    n = len(v)
+    if n == 0:
+        return None, None
+    if method == "zscore":
+        s = 0.0
+        for x in v:
+            s = s + x
+        loc = s / float(n)
+        if n < 2:
+            return loc, None
+        s2 = 0.0
+        for x in v:
+            d = x - loc
+            s2 = s2 + d * d
+        return loc, math.sqrt(s2 / float(n - 1))
+    if method == "minmax":
+        return v[0], v[-1] - v[0]
+    # robust: type-7 median / IQR
+    return _q7_list(v, 0.5), _q7_list(v, 0.75) - _q7_list(v, 0.25)
+
+
+def _q7_list(v: list, p: float) -> float:
+    n = len(v)
+    if n == 1:
+        return float(v[0])
+    ix = float(p) * float(n - 1)
+    lo = math.floor(ix)
+    frac = ix - float(lo)
+    hi = min(lo + 1, n - 1)
+    return float(v[int(lo)]) * (1.0 - frac) + float(v[int(hi)]) * frac
+
+
+class TsScaleUDTF(_SeriesUDTF):
+    """``ts_scale_by(TABLE(t), group_col, ds_col, y_col, method)`` — SQL
+    form of ``operators/prep.py::ts_scale_by`` (zscore | minmax | robust),
+    value-identical to the DataFrame op (same sorted-fold arithmetic).
+    Grouped partitioning; the DataFrame op's broadcast-stats-join plan is
+    the scale path."""
+
+    @staticmethod
+    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
+                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
+                method: AnalyzeArgument) -> AnalyzeResult:
+        schema = table.dataType
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        if method.value not in ("zscore", "minmax", "robust"):
+            raise ValueError(f"unknown scaling method: {method.value!r}")
+        return _result([_f(g, schema[g].dataType), _f(d, schema[d].dataType),
+                        _f(y, schema[y].dataType), _f("scale_loc", _DBL),
+                        _f("scale_scale", _DBL), _f("y_scaled", _DBL)],
+                       (g, d, y, method.value), by=g)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, method = self.p
+        loc, scale = _scale_stats(
+            [float(r[y_col]) for r in rows if r[y_col] is not None], method)
+        for r in rows:
+            y = r[y_col]
+            scaled = ((float(y) - loc) / scale
+                      if y is not None and scale is not None and scale > 0
+                      else None)
+            yield (r[group_col], r[ds_col], y, loc, scale, scaled)
+
+
+class TsWinsorizeUDTF(_SeriesUDTF):
+    """``ts_winsorize_by(TABLE(t), group_col, ds_col, y_col, lower,
+    upper)`` — SQL form of ``operators/prep.py::ts_winsorize_by``
+    (per-group type-7 quantile clipping), value-identical to the
+    DataFrame op."""
+
+    @staticmethod
+    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
+                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
+                lower: AnalyzeArgument, upper: AnalyzeArgument) -> AnalyzeResult:
+        schema = table.dataType
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        lo, hi = float(lower.value), float(upper.value)
+        if not (0.0 <= lo < hi <= 1.0):
+            raise ValueError("need 0 <= lower < upper <= 1")
+        return _result([_f(g, schema[g].dataType), _f(d, schema[d].dataType),
+                        _f(y, schema[y].dataType), _f("clip_lo", _DBL),
+                        _f("clip_hi", _DBL), _f("y_winsorized", _DBL),
+                        _f("was_clipped", T.BooleanType())],
+                       (g, d, y, lo, hi), by=g)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, lower, upper = self.p
+        v = sorted(float(r[y_col]) for r in rows if r[y_col] is not None)
+        lo = _q7_list(v, lower) if v else None
+        hi = _q7_list(v, upper) if v else None
+        for r in rows:
+            y = r[y_col]
+            if y is None or lo is None:
+                yield (r[group_col], r[ds_col], y, lo, hi, None, False)
+            else:
+                fy = float(y)
+                wz = lo if fy < lo else (hi if fy > hi else fy)
+                yield (r[group_col], r[ds_col], y, lo, hi, wz,
+                       fy < lo or fy > hi)
+
+
+# ---------------------------------------------------------------------------
+# Hierarchy and conformal UDTFs; each replays its Catalyst DataFrame
+# operator (operators/hierarchy.py, operators/conformal.py).
+# ---------------------------------------------------------------------------
+
+class AggregateHierarchyUDTF(_SeriesUDTF):
+    """``ts_aggregate_hierarchy(TABLE(t), 'id1,id2', 'ds', 'y', '|',
+    'AGGREGATED')`` — all prefix levels per date, values summed (mirror of
+    hierarchy.ts_aggregate_hierarchy; partitioned by date so each task
+    aggregates one date's rows)."""
+
+    @staticmethod
+    def analyze(table, id_cols, ds_col, y_col, sep, keyword):
+        return _result([_f("unique_id", T.StringType()),
+                        _f(ds_col.value,
+                           table.dataType[ds_col.value].dataType),
+                        _f(y_col.value, _DBL)],
+                       (str(id_cols.value).split(","), ds_col.value,
+                        y_col.value, str(sep.value), str(keyword.value)),
+                       by=ds_col.value)
+
+    def emit(self, rows):
+        cols, ds_col, y_col, sep, kw = self.p
+        ds = rows[0][ds_col]
+        sums: dict = {}
+        for r in rows:
+            yv = r[y_col]
+            yv = float(yv) if yv is not None else None
+            parts = [r[c] for c in cols]
+            for k in range(len(cols), -1, -1):
+                lead = [_fmt_key(v) for v in parts[:k] if v is not None]
+                key = sep.join(lead + [kw] * (len(cols) - k))
+                if key in sums:
+                    if yv is not None:
+                        sums[key] = (sums[key] or 0.0) + yv
+                else:
+                    sums[key] = yv
+        for key, v in sums.items():
+            yield (key, ds, v)
+
+
+def _corrected_quantile(arr, alpha: float) -> float:
+    """Mirror of conformal.ts_conformal_quantile + _interp_quantile
+    (finite-sample corrected quantile of a SORTED array)."""
+    n = len(arr)
+    if n == 0:
+        return float("nan")
+    if n == 1:
+        return float(arr[0])
+    level = min(max(math.ceil((n + 1) * (1.0 - alpha)) / n, 0.0), 1.0)
+    idx = level * (n - 1)
+    lo = int(math.floor(idx))
+    frac = idx - lo
+    hi = min(lo + 1, n - 1)
+    return float(arr[lo] * (1.0 - frac) + arr[hi] * frac)
+
+
+def _grouped_cols(table, group_col, cols, fields, parsed=()):
+    """Analysis of a per-group UDTF over value columns ``cols``: the group
+    column then ``fields``; ``self.p`` is ``(group, *cols, *parsed)``."""
+    g = group_col.value
+    return _result([_f(g, table.dataType[g].dataType)] + fields,
+                   (g, *[c.value for c in cols], *parsed), by=g)
+
+
+class ConformalByUDTF(_SeriesUDTF):
+    """``ts_conformal_by(TABLE(t), 'id', 'actual', 'forecast', 'point',
+    '0.1')`` (mirror of conformal.ts_conformal_by, symmetric method)."""
+
+    @staticmethod
+    def analyze(table, group_col, actual, forecast, point, alpha):
+        arr = T.ArrayType(_DBL)
+        return _grouped_cols(
+            table, group_col, (actual, forecast, point),
+            [_f("point", arr), _f("lower", arr), _f("upper", arr),
+             _f("coverage", _DBL), _f("conformity_score", _DBL),
+             _f("method", T.StringType())], (float(alpha.value),))
+
+    def emit(self, rows):
+        group_col, ac, fc, pt, alpha = self.p
+        res = np.sort(np.abs(np.array(
+            [float(r[ac]) - float(r[fc]) for r in rows
+             if r[ac] is not None and r[fc] is not None])))
+        point = sorted(float(r[pt]) for r in rows if r[pt] is not None)
+        score = _corrected_quantile(res, alpha)
+        yield (rows[0][group_col], point, [p - score for p in point],
+               [p + score for p in point], 1.0 - alpha, score,
+               "split_conformal")
+
+
+class CoverageByUDTF(_SeriesUDTF):
+    """``ts_conformal_coverage_by(TABLE(t), 'id', 'actual', 'lower',
+    'upper')``."""
+
+    @staticmethod
+    def analyze(table, group_col, actual, lower, upper):
+        return _grouped_cols(table, group_col, (actual, lower, upper),
+                             [_f("coverage", _DBL)])
+
+    def emit(self, rows):
+        group_col, ac, lo, up = self.p
+        hits = [1.0 if (r[ac] is not None and r[lo] is not None
+                        and r[up] is not None
+                        and r[lo] <= r[ac] <= r[up]) else 0.0
+                for r in rows]
+        yield (rows[0][group_col], sum(hits) / len(hits))
+
+
+class IntervalWidthUDTF(_SeriesUDTF):
+    """``ts_interval_width_by(TABLE(t), 'id', 'lower', 'upper')``."""
+
+    @staticmethod
+    def analyze(table, group_col, lower, upper):
+        return _grouped_cols(table, group_col, (lower, upper),
+                             [_f("mean_width", _DBL),
+                              _f("n_intervals", T.LongType())])
+
+    def emit(self, rows):
+        group_col, lo, up = self.p
+        ws = [float(r[up]) - float(r[lo]) for r in rows
+              if r[lo] is not None and r[up] is not None]
+        if ws:
+            yield (rows[0][group_col], sum(ws) / len(ws), len(ws))
+
+
+class ConformalEvaluateUDTF(_SeriesUDTF):
+    """``ts_conformal_evaluate(TABLE(t), 'id', 'actual', 'lower',
+    'upper', '0.1')`` — coverage, mean width, Winkler."""
+
+    @staticmethod
+    def analyze(table, group_col, actual, lower, upper, alpha):
+        return _grouped_cols(
+            table, group_col, (actual, lower, upper),
+            [_f("coverage", _DBL), _f("mean_width", _DBL),
+             _f("winkler_score", _DBL)], (float(alpha.value),))
+
+    def emit(self, rows):
+        group_col, ac, lo, up, alpha = self.p
+        cov, wid, wink = [], [], []
+        for r in rows:
+            a, l_, u = r[ac], r[lo], r[up]
+            if a is None or l_ is None or u is None:
+                continue
+            w = u - l_
+            cov.append(1.0 if l_ <= a <= u else 0.0)
+            wid.append(w)
+            pen = (2.0 / alpha) * (l_ - a) if a < l_ else \
+                  ((2.0 / alpha) * (a - u) if a > u else 0.0)
+            wink.append(w + pen)
+        if cov:
+            n = len(cov)
+            yield (rows[0][group_col], sum(cov) / n, sum(wid) / n,
+                   sum(wink) / n)
+
+
+class ConformalApplyUDTF(_SeriesUDTF):
+    """``ts_conformal_apply_by(TABLE(fc), 'id', 'yhat', '3.5')`` (mirror of
+    conformal.ts_conformal_apply_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, forecast_col, conformity_score):
+        arr = T.ArrayType(_DBL)
+        return _grouped_cols(table, group_col, (forecast_col,),
+                             [_f("lower", arr), _f("upper", arr)],
+                             (float(conformity_score.value),))
+
+    def emit(self, rows):
+        group_col, fc, s = self.p
+        f = sorted(float(r[fc]) for r in rows if r[fc] is not None)
+        yield (rows[0][group_col], [v - s for v in f], [v + s for v in f])
+
+
+# ---------------------------------------------------------------------------
+# CV UDTFs: fold layouts, hydration and the OLS leg; each replays its
+# DataFrame operator in operators/cv.py / operators/regression.py.
+#
+# Two-table macros (ts_cv_hydrate_by, ts_prepare_regression_input_by,
+# ts_hydrate_features_by) take the pre-join of their two tables, since Spark
+# UDTFs accept ONE TABLE argument.
+# ---------------------------------------------------------------------------
+
+def _fold_fields(table, g, d, y):
+    s = table.dataType
+    return [_f(g, s[g].dataType), _f(d, s[d].dataType), _f(y, s[y].dataType),
+            _f("fold_id", T.LongType()), _f("split", T.StringType())]
+
+
+class CvFoldsUDTF(_SeriesUDTF):
+    """``ts_cv_folds_by(TABLE(t), group_col, ds_col, y_col, n_folds,
+    horizon)`` — SQL form of the expanding-window fold generator (ref macro
+    ``ts_macros.cpp:1364-1408``); same position-based boundaries as
+    ``operators.cv._fold_bounds``."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, n_folds, horizon):
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        return _result(_fold_fields(table, g, d, y),
+                       (g, d, y, int(n_folds.value), int(horizon.value)),
+                       by=g, order=d)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, n_folds, h = self.p
+        n = len(rows)
+        init = max(n - h * n_folds, 1)
+        for f in range(n_folds):
+            train_end = init - 1 + f * h
+            test_end = train_end + h
+            if test_end >= n:
+                continue
+            for pos in range(0, train_end + 1):
+                r = rows[pos]
+                yield (r[group_col], r[ds_col], r[y_col], f, "train")
+            for pos in range(train_end + 1, test_end + 1):
+                r = rows[pos]
+                yield (r[group_col], r[ds_col], r[y_col], f, "test")
+
+
+class CvSplitIndexUDTF(_SeriesUDTF):
+    """``ts_cv_split_index_by(TABLE(t), 'id', 'ds', 'y', '500,550',
+    '7')`` — explicit position-index folds (mirror of
+    cv.ts_cv_split_index_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, cutoffs, horizon):
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        return _result(_fold_fields(table, g, d, y),
+                       (g, d, y, [int(c) for c in str(cutoffs.value).split(",")],
+                        int(horizon.value)), by=g, order=d)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, cutoffs, h = self.p
+        g = rows[0][group_col]
+        for fold_id, te in enumerate(cutoffs):
+            for pos, r in enumerate(rows):
+                if pos <= te:
+                    yield (g, r[ds_col], r[y_col], fold_id, "train")
+                elif pos <= te + h:
+                    yield (g, r[ds_col], r[y_col], fold_id, "test")
+
+
+def _fold_bounds(train_end, h: int, gap: int, freq):
+    """(test_start, test_end) for one cutoff — mirror of
+    cv.ts_cv_split_folds_by's calendar arithmetic."""
+    import datetime as _dt
+    if freq.kind == "month":
+        return (_py_add_months(train_end, (gap + 1) * freq.n),
+                _py_add_months(train_end, (gap + h) * freq.n))
+    sec = freq.n if freq.kind == "fixed" else 86400
+    return (train_end + _dt.timedelta(seconds=(gap + 1) * sec),
+            train_end + _dt.timedelta(seconds=(gap + h) * sec))
+
+
+def _cutoffs(v) -> list:
+    return sorted(_parse_ts(c) for c in str(v).split(",") if c.strip())
+
+
+class CvSplitUDTF(_SeriesUDTF):
+    """``ts_cv_split_by(TABLE(t), 'id', 'ds', 'y', '2024-01-31,...', '7'[,
+    frequency, gap])`` — rows tagged train/test by explicit cutoff folds
+    (mirror of cv.ts_cv_split_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, y_col, cutoffs, horizon, *rest):
+        g, d, y = group_col.value, ds_col.value, y_col.value
+        freq = parse_frequency(str(rest[0].value) if rest else "1d")
+        gap = int(rest[1].value) if len(rest) > 1 else 0
+        return _result(_fold_fields(table, g, d, y),
+                       (g, d, y, _cutoffs(cutoffs.value), int(horizon.value),
+                        freq, gap), by=g, order=d)
+
+    def emit(self, rows):
+        group_col, ds_col, y_col, cuts, h, freq, gap = self.p
+        g = rows[0][group_col]
+        for fold_id, te in enumerate(cuts):
+            ts_, te_ = _fold_bounds(te, h, gap, freq)
+            for r in rows:
+                d = r[ds_col]
+                if d is None:
+                    continue
+                if d <= te:
+                    yield (g, r[ds_col], r[y_col], fold_id, "train")
+                elif ts_ <= d <= te_:
+                    yield (g, r[ds_col], r[y_col], fold_id, "test")
+
+
+class CvHydrateUDTF(_SeriesUDTF):
+    """``ts_cv_hydrate_by(TABLE(folds ⋈ features), 'id', 'ds', 'x1,x2'[,
+    strategy, fill_value])`` — mask 'unknown' features in test rows (mirror
+    of cv.ts_cv_hydrate_by)."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, unknown_csv, *rest):
+        cols = [f.name for f in table.dataType.fields]
+        unknown = [c for c in str(unknown_csv.value).split(",") if c.strip()]
+        missing = [c for c in unknown if c not in cols]
+        if missing:
+            raise ValueError(f"unknown_feature {missing[0]!r} not in "
+                             "source columns")
+        return _result(list(table.dataType.fields),
+                       (cols, unknown, *_strategy(rest)),
+                       by=group_col.value, order=ds_col.value)
+
+    def emit(self, rows):
+        cols, unknown, strategy, fill_value = self.p
+        folds: dict = {}
+        for r in rows:
+            folds.setdefault(r["fold_id"], []).append(r)
+        for fold in sorted(folds):
+            last: dict = {c: None for c in unknown}
+            for r in folds[fold]:
+                vals = r.asDict()
+                if vals.get("split") == "train":
+                    for c in unknown:
+                        if vals[c] is not None:
+                            last[c] = vals[c]
+                else:
+                    for c in unknown:
+                        vals[c] = {"null": None, "default": fill_value,
+                                   "last_value": last[c]}[strategy]
+                yield tuple(vals[c] for c in cols)
+
+
+class HydrateFeaturesUDTF(_SeriesUDTF):
+    """``ts_hydrate_features_by(TABLE(cv ⋈ features pre-join), 'id', 'ds',
+    'y')`` — leakage-safe feature hydration (mirror of
+    cv.ts_hydrate_features_by). Partitioned by fold so ``_train_cutoff``
+    (the fold's max train date) is computable per partition."""
+
+    @staticmethod
+    def analyze(table, group_col, ds_col, target_col):
+        g, d, y = group_col.value, ds_col.value, target_col.value
+        fields = {f.name: f.dataType for f in table.dataType.fields}
+        feats = [n for n in fields if n not in (g, d, y, "fold_id", "split")]
+        return _result(
+            [_f("fold_id", fields["fold_id"]), _f("split", T.StringType()),
+             _f("group_col", fields[g]), _f("date_col", fields[d]),
+             _f("target_col", fields[y]), _f("_is_test", T.BooleanType()),
+             _f("_train_cutoff", fields[d])]
+            + [_f(n, fields[n]) for n in feats],
+            (g, d, y, feats), by="fold_id")
+
+    def emit(self, rows):
+        g, d, y, feats = self.p
+        cutoff = max((r[d] for r in rows if r["split"] == "train"),
+                     default=None)
+        for r in rows:
+            vals = r.asDict()
+            yield tuple([vals.get("fold_id"), vals.get("split"),
+                         vals.get(g), vals.get(d), vals.get(y),
+                         vals.get("split") == "test", cutoff]
+                        + [vals.get(n) for n in feats])
+
+
+def _det_py(m: list[list[float]]) -> float:
+    """Cofactor expansion matching regression._det_sql's evaluation order."""
+    n = len(m)
+    if n == 1:
+        return m[0][0]
+    acc = 0.0
+    for j in range(n):
+        minor = [[m[r][c] for c in range(n) if c != j] for r in range(1, n)]
+        term = m[0][j] * _det_py(minor)
+        acc = acc + term if j % 2 == 0 else acc - term
+    return acc
+
+
+class OlsFitPredictUDTF(_SeriesUDTF):
+    """``ols_fit_predict_by(TABLE(reg_input), 'fold_id',
+    'group_col,date_col', 'masked_target', 'x1,x2')`` — per-group OLS
+    fit-predict (mirror of regression.ols_fit_predict_by; the regression
+    leg of the reference's backtest examples, shipped there by the
+    companion anofox_statistics extension)."""
+
+    @staticmethod
+    def analyze(table, group_col, order_csv, target_col, x_csv, *rest):
+        g = group_col.value
+        fields = {f.name: f.dataType for f in table.dataType.fields}
+        ords = [c for c in order_csv.value.split(",") if c]
+        return _result(
+            [_f(g, fields[g])] + [_f(c, fields[c]) for c in ords]
+            + [_f(target_col.value, _DBL), _f("yhat", _DBL)],
+            (g, str(order_csv.value).split(","), target_col.value,
+             [c for c in str(x_csv.value).split(",") if c],
+             float(rest[0].value) if rest else 0.0), by=g)
+
+    def emit(self, rows):
+        g, ords, y, xs, l2 = self.p
+        k = len(xs)
+        rows = sorted(rows, key=lambda r: tuple(r[c] for c in ords))
+        train = [r for r in rows
+                 if r[y] is not None
+                 and all(r[c] is not None for c in xs)]
+        # sequential normal-equation sums (same order as the fold exprs)
+        dim = k + 1
+
+        def feat(r):
+            return [1.0] + [float(r[c]) for c in xs]
+
+        a = [[0.0] * dim for _ in range(dim)]
+        b = [0.0] * dim
+        for r in train:
+            f = feat(r)
+            for i in range(dim):
+                for j in range(i, dim):
+                    a[i][j] += f[i] * f[j]
+                b[i] += f[i] * float(r[y])
+        for i in range(dim):
+            for j in range(i):
+                a[i][j] = a[j][i]
+        for i in range(1, dim):
+            a[i][i] += l2  # ridge: intercept unpenalized
+        det = _det_py(a)
+        coefs = None
+        if len(train) >= dim and det != 0.0:
+            coefs = []
+            for i in range(dim):
+                ai = [[(b[r] if c == i else a[r][c]) for c in range(dim)]
+                      for r in range(dim)]
+                coefs.append(_det_py(ai) / det)
+        for r in rows:
+            if coefs is None:
+                yh = None
+            else:
+                f = feat(r) if all(r[c] is not None for c in xs) else None
+                yh = (None if f is None else
+                      sum(cf * fv for cf, fv in zip(coefs, f)))
+            tv = r[y]
+            yield tuple([r[g]] + [r[c] for c in ords]
+                        + [None if tv is None else float(tv), yh])
+
+
+# ---------------------------------------------------------------------------
+# Streaming (unbuffered) UDTFs: each folds its rows as they arrive and
+# emits in ``terminate``.
+# ---------------------------------------------------------------------------
 
 
 class CombineKeysUDTF:
@@ -1057,356 +1796,6 @@ class ValidateSeparatorUDTF:
         yield (s, ok, self._n, self._vals, msg)
 
 
-class AggregateHierarchyUDTF:
-    """``ts_aggregate_hierarchy(TABLE(t), 'id1,id2', 'ds', 'y', '|',
-    'AGGREGATED')`` — all prefix levels per date, values summed (mirror of
-    hierarchy.ts_aggregate_hierarchy; partitioned by date so each task
-    aggregates one date's rows)."""
-
-    @staticmethod
-    def analyze(table, id_cols, ds_col, y_col, sep, keyword):
-        return AnalyzeResult(schema=T.StructType([
-            _f("unique_id", T.StringType()),
-            _f(ds_col.value, table.dataType[ds_col.value].dataType),
-            _f(y_col.value, T.DoubleType())]),
-            partitionBy=[PartitioningColumn(ds_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, id_cols, ds_col, y_col, sep, keyword):
-        self._args = (str(id_cols).split(","), ds_col, y_col, str(sep),
-                      str(keyword))
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        cols, ds_col, y_col, sep, kw = self._args
-        ds = self._rows[0][ds_col]
-        sums: dict = {}
-        for r in self._rows:
-            yv = r[y_col]
-            yv = float(yv) if yv is not None else None
-            parts = [r[c] for c in cols]
-            for k in range(len(cols), -1, -1):
-                lead = [_fmt_key(v) for v in parts[:k] if v is not None]
-                key = sep.join(lead + [kw] * (len(cols) - k))
-                if key in sums:
-                    if yv is not None:
-                        sums[key] = (sums[key] or 0.0) + yv
-                else:
-                    sums[key] = yv
-        for key, v in sums.items():
-            yield (key, ds, v)
-
-
-def _corrected_quantile(arr, alpha: float) -> float:
-    """Mirror of conformal.ts_conformal_quantile + _interp_quantile
-    (finite-sample corrected quantile of a SORTED array)."""
-    n = len(arr)
-    if n == 0:
-        return float("nan")
-    if n == 1:
-        return float(arr[0])
-    level = min(max(math.ceil((n + 1) * (1.0 - alpha)) / n, 0.0), 1.0)
-    idx = level * (n - 1)
-    lo = int(math.floor(idx))
-    frac = idx - lo
-    hi = min(lo + 1, n - 1)
-    return float(arr[lo] * (1.0 - frac) + arr[hi] * frac)
-
-
-def _conformal_udtfs():
-    import numpy as np
-
-    D = T.DoubleType()
-
-    class ConformalByUDTF:
-        """``ts_conformal_by(TABLE(t), 'id', 'actual', 'forecast', 'point',
-        '0.1')`` (mirror of conformal.ts_conformal_by, symmetric method)."""
-
-        @staticmethod
-        def analyze(table, group_col, actual, forecast, point, alpha):
-            g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
-                _f(g, table.dataType[g].dataType),
-                _f("point", T.ArrayType(D)), _f("lower", T.ArrayType(D)),
-                _f("upper", T.ArrayType(D)), _f("coverage", D),
-                _f("conformity_score", D), _f("method", T.StringType())]),
-                partitionBy=[PartitioningColumn(g)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, actual, forecast, point, alpha):
-            self._args = (group_col, actual, forecast, point, float(alpha))
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, ac, fc, pt, alpha = self._args
-            g = self._rows[0][group_col]
-            res = np.sort(np.abs(np.array(
-                [float(r[ac]) - float(r[fc]) for r in self._rows
-                 if r[ac] is not None and r[fc] is not None])))
-            point = sorted(float(r[pt]) for r in self._rows
-                           if r[pt] is not None)
-            score = _corrected_quantile(res, alpha)
-            yield (g, point, [p - score for p in point],
-                   [p + score for p in point], 1.0 - alpha, score,
-                   "split_conformal")
-
-    class CoverageByUDTF:
-        """``ts_conformal_coverage_by(TABLE(t), 'id', 'actual', 'lower',
-        'upper')``."""
-
-        @staticmethod
-        def analyze(table, group_col, actual, lower, upper):
-            g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
-                _f(g, table.dataType[g].dataType), _f("coverage", D)]),
-                partitionBy=[PartitioningColumn(g)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, actual, lower, upper):
-            self._args = (group_col, actual, lower, upper)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, ac, lo, up = self._args
-            g = self._rows[0][group_col]
-            hits = [1.0 if (r[ac] is not None and r[lo] is not None
-                            and r[up] is not None
-                            and r[lo] <= r[ac] <= r[up]) else 0.0
-                    for r in self._rows]
-            yield (g, sum(hits) / len(hits) if hits else None)
-
-    class IntervalWidthUDTF:
-        """``ts_interval_width_by(TABLE(t), 'id', 'lower', 'upper')``."""
-
-        @staticmethod
-        def analyze(table, group_col, lower, upper):
-            g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
-                _f(g, table.dataType[g].dataType), _f("mean_width", D),
-                _f("n_intervals", T.LongType())]),
-                partitionBy=[PartitioningColumn(g)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, lower, upper):
-            self._args = (group_col, lower, upper)
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, lo, up = self._args
-            g = self._rows[0][group_col]
-            ws = [float(r[up]) - float(r[lo]) for r in self._rows
-                  if r[lo] is not None and r[up] is not None]
-            if ws:
-                yield (g, sum(ws) / len(ws), len(ws))
-
-    class ConformalEvaluateUDTF:
-        """``ts_conformal_evaluate(TABLE(t), 'id', 'actual', 'lower',
-        'upper', '0.1')`` — coverage, mean width, Winkler."""
-
-        @staticmethod
-        def analyze(table, group_col, actual, lower, upper, alpha):
-            g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
-                _f(g, table.dataType[g].dataType), _f("coverage", D),
-                _f("mean_width", D), _f("winkler_score", D)]),
-                partitionBy=[PartitioningColumn(g)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, actual, lower, upper, alpha):
-            self._args = (group_col, actual, lower, upper, float(alpha))
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, ac, lo, up, alpha = self._args
-            g = self._rows[0][group_col]
-            cov, wid, wink = [], [], []
-            for r in self._rows:
-                a, l_, u = r[ac], r[lo], r[up]
-                if a is None or l_ is None or u is None:
-                    continue
-                w = u - l_
-                cov.append(1.0 if l_ <= a <= u else 0.0)
-                wid.append(w)
-                pen = (2.0 / alpha) * (l_ - a) if a < l_ else \
-                      ((2.0 / alpha) * (a - u) if a > u else 0.0)
-                wink.append(w + pen)
-            if cov:
-                n = len(cov)
-                yield (g, sum(cov) / n, sum(wid) / n, sum(wink) / n)
-
-    return {
-        "ts_conformal_by": ConformalByUDTF,
-        "ts_conformal_coverage_by": CoverageByUDTF,
-        "ts_interval_width_by": IntervalWidthUDTF,
-        "ts_conformal_evaluate": ConformalEvaluateUDTF,
-    }
-
-
-def _cv_udtfs():
-    D = T.DoubleType()
-
-    class CvSplitIndexUDTF:
-        """``ts_cv_split_index_by(TABLE(t), 'id', 'ds', 'y', '500,550',
-        '7')`` — explicit position-index folds (mirror of
-        cv.ts_cv_split_index_by)."""
-
-        @staticmethod
-        def analyze(table, group_col, ds_col, y_col, cutoffs, horizon):
-            g = group_col.value
-            return AnalyzeResult(schema=T.StructType([
-                _f(g, table.dataType[g].dataType),
-                _f(ds_col.value, table.dataType[ds_col.value].dataType),
-                _f(y_col.value, table.dataType[y_col.value].dataType),
-                _f("fold_id", T.LongType()), _f("split", T.StringType())]),
-                partitionBy=[PartitioningColumn(g)],
-                orderBy=[OrderingColumn(ds_col.value)])
-
-        def __init__(self):
-            self._rows: list = []
-
-        def eval(self, row, group_col, ds_col, y_col, cutoffs, horizon):
-            self._args = (group_col, ds_col, y_col,
-                          [int(c) for c in str(cutoffs).split(",")],
-                          int(horizon))
-            self._rows.append(row)
-
-        def terminate(self):
-            if not self._rows:
-                return
-            group_col, ds_col, y_col, cutoffs, h = self._args
-            g = self._rows[0][group_col]
-            for fold_id, te in enumerate(cutoffs):
-                for pos, r in enumerate(self._rows):
-                    if pos <= te:
-                        yield (g, r[ds_col], r[y_col], fold_id, "train")
-                    elif pos <= te + h:
-                        yield (g, r[ds_col], r[y_col], fold_id, "test")
-
-    class BacktestAutoUDTF(_KernelUDTF):
-        """``ts_backtest_auto_by(TABLE(t), 'id', 'ds', 'y', 'Naive', '7',
-        '2')`` — expanding-window folds + per-fold fit + error columns
-        (mirror of cv.ts_backtest_auto_by; fold boundaries match
-        cv.ts_cv_folds_by's auto layout)."""
-
-        @staticmethod
-        def analyze(table, group_col, ds_col, y_col, method, horizon,
-                    n_folds):
-            g = group_col.value
-            return _KernelAnalysis(schema=T.StructType([
-                _f(g, table.dataType[g].dataType),
-                _f("fold_id", T.LongType()),
-                _f(ds_col.value, table.dataType[ds_col.value].dataType),
-                _f("yhat", D), _f("actual", D), _f("error", D),
-                _f("abs_error", D), _f("yhat_lower", D), _f("yhat_upper", D),
-                _f("model_name", T.StringType())]),
-                partitionBy=[PartitioningColumn(g)],
-                orderBy=[OrderingColumn(ds_col.value)],
-                spec=_spec(method.value, horizon.value),
-                args=(g, ds_col.value, y_col.value, int(n_folds.value)))
-
-        def emit(self, rows):
-            import numpy as np
-
-            group_col, ds_col, y_col, folds = self.args
-            h = self.spec.horizon
-            g = rows[0][group_col]
-            y = _nan_y(rows, y_col)
-            n = len(y)
-            for fold_id in range(folds):
-                train_end = max(n - folds * h, 1) - 1 + fold_id * h
-                if train_end + h >= n or train_end < 0:
-                    continue
-                train = y[:train_end + 1]
-                if np.isfinite(train).sum() < 3:
-                    continue
-                r = fit_one(self.spec, train)
-                if r is None:
-                    continue
-                for s in range(1, h + 1):
-                    row = rows[train_end + s]
-                    actual = row[y_col]
-                    yhat = float(r.point[s - 1])
-                    err = None if actual is None else float(actual) - yhat
-                    yield (g, fold_id, row[ds_col], yhat,
-                           None if actual is None else float(actual), err,
-                           None if err is None else abs(err),
-                           float(r.lower[s - 1]), float(r.upper[s - 1]),
-                           r.model_name)
-
-    return {
-        "ts_cv_split_index_by": CvSplitIndexUDTF,
-        "ts_backtest_auto_by": BacktestAutoUDTF,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Round-4b surface completion: the last reference macro names
-# (ts_macros.cpp) — stats reports, per-series data quality, prep extensions
-# (fill-forward / unknown masking / timestamp validation), the CV workflow
-# (split / split-folds / forecast / hydrate / leakage), conformal
-# calibrate+apply, the feature table, forecast inspection / explanation /
-# exogenous forms, and the single-series ts_forecast. All delegate to the
-# same per-series primitives as the DataFrame ops.
-#
-# Two-table macros (ts_forecast_exog*, ts_cv_hydrate_by) deviate from the
-# reference's two-table-name signature because Spark UDTFs accept ONE TABLE
-# argument: exog forms use the union convention (trailing rows with NULL y
-# are the future rows carrying regressor values — the standard panel-future
-# layout), and ts_cv_hydrate_by takes the folds ⋈ features pre-join.
-# ---------------------------------------------------------------------------
-
-def _trunc_second(v):
-    """date_trunc('second', ts) mirror for a Python datetime (NULL-safe)."""
-    import datetime as _dt
-    if isinstance(v, _dt.datetime):
-        return v.replace(microsecond=0)
-    return v
-
-
-def _py_add_months(dt, k: int):
-    """F.add_months mirror: month-end-clamped calendar month addition."""
-    import calendar
-    yi, m0 = divmod(dt.year * 12 + dt.month - 1 + k, 12)
-    day = min(dt.day, calendar.monthrange(yi, m0 + 1)[1])
-    return dt.replace(year=yi, month=m0 + 1, day=day)
-
-
-def _parse_ts(s):
-    import pandas as _pd
-    return _pd.Timestamp(str(s)).to_pydatetime()
-
-
-def _fold_bounds(train_end, h: int, gap: int, freq):
-    """(test_start, test_end) for one cutoff — mirror of
-    cv.ts_cv_split_folds_by's calendar arithmetic."""
-    import datetime as _dt
-    if freq.kind == "month":
-        return (_py_add_months(train_end, (gap + 1) * freq.n),
-                _py_add_months(train_end, (gap + h) * freq.n))
-    sec = freq.n if freq.kind == "fixed" else 86400
-    return (train_end + _dt.timedelta(seconds=(gap + 1) * sec),
-            train_end + _dt.timedelta(seconds=(gap + h) * sec))
-
 
 class QualityReportUDTF:
     """``ts_quality_report(TABLE(stats), '10')`` — aggregate over a
@@ -1471,56 +1860,6 @@ class StatsSummaryUDTF:
                self._nulls, self._nans)
 
 
-def _ds_us(v):
-    """Timestamp/int ds value -> int64 (µs for timestamps) for
-    stats._dq_scores; mirrors the DataFrame path's conversion."""
-    import datetime as _dt
-    if v is None:
-        return None
-    if isinstance(v, _dt.datetime):
-        import pandas as _pd
-        return int(_pd.Timestamp(v).value // 1000)
-    return int(v)
-
-
-class DataQualityUDTF:
-    """``ts_data_quality(TABLE(t), 'id', 'ds', 'y'[, n_short, frequency])``
-    — per-series 4-dimension quality scores (mirror of
-    stats.ts_data_quality; n_short/frequency accepted for signature parity,
-    unused by the scores exactly as in the DataFrame op)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, *rest):
-        from ..operators.stats import DQ_FIELDS
-        g = group_col.value
-        return AnalyzeResult(schema=T.StructType(
-            [_f("unique_id", table.dataType[g].dataType)]
-            + [_f(n, t) for n, t in DQ_FIELDS]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, *rest):
-        self._args = (group_col, ds_col, y_col)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import numpy as np
-
-        from ..operators.stats import DQ_FIELDS, _dq_scores
-        group_col, ds_col, y_col = self._args
-        g = self._rows[0][group_col]
-        y = _nan_y(self._rows, y_col)
-        ds = np.array([d for d in (_ds_us(r[ds_col]) for r in self._rows)
-                       if d is not None], dtype="int64")
-        s = _dq_scores(y, ds if len(ds) else None)
-        yield (g, *[s[n] for n, _ in DQ_FIELDS])
-
-
 class DataQualitySummaryUDTF:
     """``ts_data_quality_summary(TABLE(t), 'id', 'ds', 'y'[, n_short])``
     (mirror of stats.ts_data_quality_summary)."""
@@ -1543,174 +1882,18 @@ class DataQualitySummaryUDTF:
         if not self._per_group:
             yield (0, 0, 0, 0, None)
             return
-        import numpy as np
-
-        from ..operators.stats import _dq_scores
+        from ..operators.stats import _dq_scores, dates_us
         ds_col, y_col = self._args
         scores = []
         for rows in self._per_group.values():
             rows = sorted(rows, key=lambda r: (r[ds_col] is None, r[ds_col]))
-            y = _nan_y(rows, y_col)
-            ds = np.array([d for d in (_ds_us(r[ds_col]) for r in rows)
-                           if d is not None], dtype="int64")
-            scores.append(_dq_scores(y, ds if len(ds) else None)["overall_score"])
+            scores.append(_dq_scores(_nan_y(rows, y_col),
+                                     dates_us(_ds(rows, ds_col)))
+                          ["overall_score"])
         n = len(scores)
         yield (n, sum(1 for s in scores if s >= 0.8),
                sum(1 for s in scores if 0.5 <= s < 0.8),
                sum(1 for s in scores if s < 0.5), sum(scores) / n)
-
-
-class FillForwardUDTF:
-    """``ts_fill_forward_by(TABLE(t), 'id', 'ds', 'y', '2024-12-31', '1d')``
-    — extend each series forward to target with NULL values (mirror of
-    prep.ts_fill_forward_by's unit-start calendar arithmetic)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, target_date, frequency):
-        s = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        return AnalyzeResult(schema=T.StructType([
-            _f(g, s[g].dataType), _f(d, s[d].dataType), _f(y, s[y].dataType)]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, target_date, frequency):
-        self._args = (group_col, ds_col, y_col, target_date, frequency)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        import datetime as _dt
-
-        from ..frequency import parse_frequency
-        group_col, ds_col, y_col, target_raw, frequency = self._args
-        freq = parse_frequency(frequency)
-        g = self._rows[0][group_col]
-        for r in self._rows:
-            yield (g, r[ds_col], r[y_col])
-        last = self._rows[-1][ds_col]
-        if last is None:
-            return
-        if isinstance(last, int):
-            step = freq.n if freq.kind == "int" else 1
-            target = int(target_raw)
-            cur = last + step
-            while cur <= target:
-                yield (g, cur, None)
-                cur += step
-            return
-        target = _parse_ts(target_raw)
-        if freq.kind == "month":
-            n = freq.n
-            # unit start mirrors prep._unit_start (date_trunc year/quarter/month)
-            if n % 12 == 0:
-                start = last.replace(month=1, day=1, hour=0, minute=0,
-                                     second=0, microsecond=0)
-            elif n % 3 == 0:
-                qm = (last.month - 1) // 3 * 3 + 1
-                start = last.replace(month=qm, day=1, hour=0, minute=0,
-                                     second=0, microsecond=0)
-            else:
-                start = last.replace(day=1, hour=0, minute=0, second=0,
-                                     microsecond=0)
-            s = 1
-            while True:
-                e = _py_add_months(start, s * n)
-                if e > target:
-                    return
-                if e > last:
-                    yield (g, e, None)
-                s += 1
-        else:
-            step = _dt.timedelta(seconds=freq.n)
-            cur = last + step
-            while cur <= target:
-                yield (g, cur, None)
-                cur += step
-
-
-class MarkUnknownUDTF:
-    """``ts_mark_unknown_by(TABLE(t), 'id', 'ds', '2024-06-30')`` — all
-    columns + is_unknown + per-group last_known_date (mirror of
-    prep.ts_mark_unknown_by)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, cutoff_date):
-        fields = list(table.dataType.fields)
-        fields += [_f("is_unknown", T.BooleanType()),
-                   _f("last_known_date", T.TimestampType())]
-        return AnalyzeResult(schema=T.StructType(fields),
-                             partitionBy=[PartitioningColumn(group_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, cutoff_date):
-        self._args = (ds_col, cutoff_date)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        ds_col, cutoff_raw = self._args
-        cutoff = _parse_ts(cutoff_raw)
-        dts = [_trunc_second(r[ds_col]) for r in self._rows]
-        known = [d for d in dts if d is not None and d <= cutoff]
-        last_known = max(known) if known else None
-        for r, d in zip(self._rows, dts):
-            unk = None if d is None else d > cutoff
-            yield (*tuple(r), unk, last_known)
-
-
-class FillUnknownUDTF:
-    """``ts_fill_unknown_by(TABLE(t), 'id', 'ds', 'y', '2024-06-30'[,
-    strategy, fill_value])`` (mirror of prep.ts_fill_unknown_by)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, cutoff_date, *rest):
-        g = group_col.value
-        return AnalyzeResult(schema=T.StructType([
-            _f(g, table.dataType[g].dataType),
-            _f(ds_col.value, T.TimestampType()),
-            _f(y_col.value, T.DoubleType())]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, cutoff_date, *rest):
-        self._args = (group_col, ds_col, y_col, cutoff_date, *rest)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, ds_col, y_col, cutoff_raw, *rest = self._args
-        strategy = str(rest[0]) if rest else "last_value"
-        fill_value = float(rest[1]) if len(rest) > 1 else 0.0
-        cutoff = _parse_ts(cutoff_raw)
-        g = self._rows[0][group_col]
-        last = None
-        for r in self._rows:
-            d = _trunc_second(r[ds_col])
-            yv = None if r[y_col] is None else float(r[y_col])
-            if d is not None and d <= cutoff:
-                if yv is not None:
-                    last = yv
-                yield (g, d, yv)
-            elif strategy == "null":
-                yield (g, d, None)
-            elif strategy == "default":
-                yield (g, d, fill_value)
-            elif strategy == "last_value":
-                yield (g, d, last)
-            else:
-                raise ValueError(f"unknown strategy {strategy!r}")
 
 
 class ValidateTimestampsUDTF:
@@ -1820,277 +2003,10 @@ class ConformalCalibrateUDTF:
             self._res.append(float(a) - float(f))
 
     def terminate(self):
-        import numpy as np
         alpha = getattr(self, "_alpha", 0.1)
         score = _corrected_quantile(np.sort(np.abs(self._res)), alpha) \
             if self._res else None
         yield (score, 1.0 - alpha, len(self._res))
-
-
-class ConformalApplyUDTF:
-    """``ts_conformal_apply_by(TABLE(fc), 'id', 'yhat', '3.5')`` (mirror of
-    conformal.ts_conformal_apply_by)."""
-
-    @staticmethod
-    def analyze(table, group_col, forecast_col, conformity_score):
-        g = group_col.value
-        arr = T.ArrayType(T.DoubleType())
-        return AnalyzeResult(schema=T.StructType([
-            _f(g, table.dataType[g].dataType), _f("lower", arr),
-            _f("upper", arr)]), partitionBy=[PartitioningColumn(g)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, forecast_col, conformity_score):
-        self._args = (group_col, forecast_col, float(conformity_score))
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, fc, s = self._args
-        g = self._rows[0][group_col]
-        f = sorted(float(r[fc]) for r in self._rows if r[fc] is not None)
-        yield (g, [v - s for v in f], [v + s for v in f])
-
-
-class FeaturesByUDTF:
-    """``ts_features_by(TABLE(t), 'id', 'ds', 'y'[, 'mean,std,...'])`` —
-    wide per-series feature row (mirror of features.ts_features_by)."""
-
-    grouped = True
-
-    @staticmethod
-    def _analyze(table, grouped, *args):
-        from ..operators.features import FEATURE_NAMES, _safe
-        if grouped:
-            g, d = args[0].value, args[1].value
-            sel_arg = args[3].value if len(args) > 3 else None
-            lead = [_f(g, table.dataType[g].dataType)]
-        else:
-            g, d = None, args[0].value
-            sel_arg = args[2].value if len(args) > 2 else None
-            lead = []
-        sel = ([s for s in str(sel_arg).split(",") if s.strip()]
-               if sel_arg else list(FEATURE_NAMES))
-        unknown = [s for s in sel if s not in FEATURE_NAMES]
-        if unknown:
-            raise ValueError(f"unknown features: {unknown}")
-        fields = lead + [_f(_safe(x), T.DoubleType()) for x in sel]
-        kw = dict(partitionBy=[PartitioningColumn(g)]) if grouped \
-            else dict(withSinglePartition=True)
-        return AnalyzeResult(schema=T.StructType(fields),
-                             orderBy=[OrderingColumn(d)], **kw)
-
-    @staticmethod
-    def analyze(table, *args):
-        return FeaturesByUDTF._analyze(table, True, *args)
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, *args):
-        self._args = args
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        from ..operators.features import FEATURE_NAMES, extract_features
-        args = self._args
-        if self.grouped:
-            g_col, ds_col, y_col = args[0], args[1], args[2]
-            sel_arg = args[3] if len(args) > 3 else None
-            lead = (self._rows[0][g_col],)
-        else:
-            ds_col, y_col = args[0], args[1]
-            sel_arg = args[2] if len(args) > 2 else None
-            lead = ()
-        sel = ([s for s in str(sel_arg).split(",") if s.strip()]
-               if sel_arg else list(FEATURE_NAMES))
-        self._rows.sort(key=lambda r: (r[ds_col] is None, r[ds_col]))
-        feats = extract_features(_nan_y(self._rows, y_col))
-        yield (*lead, *[feats[x] for x in sel])
-
-
-class FeaturesTableUDTF(FeaturesByUDTF):
-    """``ts_features_table(TABLE(t), 'ds', 'y'[, subset])`` — single-series
-    form."""
-
-    grouped = False
-
-    @staticmethod
-    def analyze(table, *args):
-        return FeaturesByUDTF._analyze(table, False, *args)
-
-
-class ForecastInspectUDTF(_KernelUDTF):
-    """``ts_forecast_inspect_by(TABLE(t), 'id', 'ds', 'y', 'SES'[,
-    params_json])`` — fitted-parameter scalars (the DataFrame op's
-    ``inspection`` struct flattened; array diagnostics live on the
-    DataFrame path)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
-        g = group_col.value
-        D = T.DoubleType()
-        return _KernelAnalysis(schema=T.StructType([
-            _f(g, table.dataType[g].dataType),
-            _f("model_family", T.StringType()), _f("spec", T.StringType()),
-            _f("alpha", D), _f("beta", D), _f("gamma", D), _f("phi", D),
-            _f("theta", D), _f("aic", D), _f("bic", D),
-            _f("seasonal_period", T.LongType())]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)],
-            spec=_spec(method.value, params_json=_lit(params_json)),
-            args=(g, y_col.value))
-
-    def emit(self, rows):
-        group_col, y_col = self.args
-        r = fit_one(self.spec, _nan_y(rows, y_col))
-        if r is None:
-            return
-        i = inspect_result(r)
-        yield (rows[0][group_col], i["model_family"], i["spec"], i["alpha"],
-               i["beta"], i["gamma"], i["phi"], i["theta"], i["aic"],
-               i["bic"], i["seasonal_period"])
-
-
-class ForecastExplainUDTF(_KernelUDTF):
-    """``ts_forecast_explain_by(TABLE(t), 'id', 'ds', 'y', 'ETS', '7'[,
-    params_json])`` — per-horizon additive decomposition, one row per step
-    (the DataFrame op's struct arrays unrolled)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, horizon,
-                params_json=None):
-        g = group_col.value
-        D = T.DoubleType()
-        return _KernelAnalysis(schema=T.StructType([
-            _f(g, table.dataType[g].dataType),
-            _f("forecast_step", T.IntegerType()), _f("level", D),
-            _f("trend", D), _f("seasonal", D), _f("residual", D)]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(ds_col.value)],
-            spec=explainable(_spec(method.value, horizon.value,
-                                   params_json=_lit(params_json))),
-            args=(g, y_col.value))
-
-    def emit(self, rows):
-        group_col, y_col = self.args
-        spec = self.spec
-        y = _nan_y(rows, y_col)
-        r = fit_one(spec, y)
-        if r is None:
-            return
-        dec = explain_decompose(y, r, spec.horizon, spec.season)
-        for i in range(spec.horizon):
-            yield (rows[0][group_col], i + 1, dec["level"][i],
-                   dec["trend"][i], dec["seasonal"][i], dec["residual"][i])
-
-
-class ForecastExogByUDTF(_KernelUDTF):
-    """``ts_forecast_exog_by(TABLE(t), 'id', 'ds', 'y', 'x1,x2', '1d',
-    'Naive', '7'[, params_json])`` — union-convention exog forecast: trailing
-    rows with NULL y are the future rows carrying regressor values (the
-    reference's two-table macro collapsed into the standard panel-future
-    layout). Fits through the kernel's regression with model errors, like
-    forecast_ext.ts_forecast_exog_by."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, xreg_csv, frequency, method,
-                horizon, params_json=None):
-        g, d = group_col.value, ds_col.value
-        return _KernelAnalysis(
-            schema=forecast_schema(table.dataType, g, d),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)],
-            spec=_spec(method.value, horizon.value, frequency.value,
-                       _lit(params_json)),
-            args=(g, d, y_col.value, xreg_csv.value))
-
-    def _block(self, rows):
-        """The forecast block of the union-convention series, or None when
-        the series is skipped."""
-        import numpy as np
-        g, ds_col, y_col, xreg_csv = self.args
-        xcols = [c for c in str(xreg_csv).split(",") if c.strip()]
-        nn = [i for i, r in enumerate(rows) if r[y_col] is not None]
-        if not nn:
-            return None
-        split = nn[-1] + 1
-        hist, fut = rows[:split], rows[split:split + self.spec.horizon]
-        if not fut or len(hist) < 3:
-            return None
-
-        def xmat(rs):
-            return np.array([[math.nan if r[c] is None else float(r[c])
-                              for c in xcols] for r in rs])
-
-        r = fit_one(self.spec, _nan_y(hist, y_col), len(fut),
-                    (xmat(hist), xmat(fut)))
-        if r is None:
-            return None  # error isolation, matching the DataFrame op
-        last = hist[-1][ds_col]
-        return forecast_block(self.spec, None if g is None else rows[0][g],
-                              last, r, isinstance(last, int))
-
-    def emit(self, rows):
-        block = self._block(rows)
-        if block is not None:
-            yield from _block_rows(block)
-
-
-class ForecastExogUDTF(ForecastExogByUDTF):
-    """``ts_forecast_exog(TABLE(t), 'ds', 'y', 'x1,x2', 'Naive', '7'[,
-    params_json])`` — single-series array-valued form (mirror of
-    forecast_ext.ts_forecast_exog)."""
-
-    @staticmethod
-    def analyze(table, ds_col, y_col, xreg_csv, method, horizon,
-                params_json=None):
-        arr = T.ArrayType(T.DoubleType())
-        return _KernelAnalysis(schema=T.StructType([
-            _f("point_forecasts", arr), _f("lower_bounds", arr),
-            _f("upper_bounds", arr), _f("model_name", T.StringType())]),
-            withSinglePartition=True,
-            orderBy=[OrderingColumn(ds_col.value)],
-            spec=_spec(method.value, horizon.value, "1d", _lit(params_json)),
-            args=(None, ds_col.value, y_col.value, xreg_csv.value))
-
-    def emit(self, rows):
-        block = self._block(rows)
-        if block is not None:
-            yield tuple([float(v) for v in col] for col in block[3:6]) \
-                + (block[6][0],)
-
-
-class ForecastSingleUDTF(_KernelUDTF):
-    """``ts_forecast(TABLE(t), 'ds', 'y', 'Naive', '7'[, frequency,
-    confidence_level, params_json])`` — single-series form of
-    ts_forecast_by (ref macro takes no group column)."""
-
-    @staticmethod
-    def analyze(table, ds_col, y_col, method, horizon, frequency=None,
-                confidence_level=None, params_json=None):
-        d = ds_col.value
-        return _KernelAnalysis(
-            schema=forecast_schema(table.dataType, None, d),
-            withSinglePartition=True, orderBy=[OrderingColumn(d)],
-            spec=_spec(method.value, horizon.value,
-                       "1d" if frequency is None else frequency.value,
-                       _lit(params_json), _lit(confidence_level)),
-            args=(d, y_col.value))
-
-    def emit(self, rows):
-        ds_col, y_col = self.args
-        r = fit_one(self.spec, _nan_y(rows, y_col))
-        if r is not None:
-            last = rows[-1][ds_col]
-            for row in _block_rows(forecast_block(self.spec, None, last, r,
-                                                  isinstance(last, int))):
-                yield row[1:]
 
 
 class CvSplitFoldsUDTF:
@@ -2131,149 +2047,6 @@ class CvSplitFoldsUDTF:
             yield (fold_id, self._min, te, ts_, te_, h, gap, embargo)
 
 
-class CvSplitUDTF:
-    """``ts_cv_split_by(TABLE(t), 'id', 'ds', 'y', '2024-01-31,...', '7'[,
-    frequency, gap])`` — rows tagged train/test by explicit cutoff folds
-    (mirror of cv.ts_cv_split_by)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, cutoffs, horizon, *rest):
-        s = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        return AnalyzeResult(schema=T.StructType([
-            _f(g, s[g].dataType), _f(d, s[d].dataType), _f(y, s[y].dataType),
-            _f("fold_id", T.LongType()), _f("split", T.StringType())]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, cutoffs, horizon, *rest):
-        self._args = (group_col, ds_col, y_col, str(cutoffs), int(horizon),
-                      str(rest[0]) if rest else "1d",
-                      int(rest[1]) if len(rest) > 1 else 0)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        from ..frequency import parse_frequency
-        group_col, ds_col, y_col, cutoffs, h, frequency, gap = self._args
-        freq = parse_frequency(frequency)
-        g = self._rows[0][group_col]
-        cuts = sorted(_parse_ts(c) for c in cutoffs.split(",") if c.strip())
-        for fold_id, te in enumerate(cuts):
-            ts_, te_ = _fold_bounds(te, h, gap, freq)
-            for r in self._rows:
-                d = r[ds_col]
-                if d is None:
-                    continue
-                if d <= te:
-                    yield (g, r[ds_col], r[y_col], fold_id, "train")
-                elif ts_ <= d <= te_:
-                    yield (g, r[ds_col], r[y_col], fold_id, "test")
-
-
-class CvForecastUDTF(_KernelUDTF):
-    """``ts_cv_forecast_by(TABLE(folds), 'id', 'ds', 'y', 'Naive'[,
-    params_json])`` — fit per (group, fold) train slice, predict the test
-    rows (mirror of cv.ts_cv_forecast_by; the folds table carries fold_id
-    and split columns from ts_cv_folds_by)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, method, params_json=None):
-        s = table.dataType
-        g, d = group_col.value, ds_col.value
-        D = T.DoubleType()
-        return _KernelAnalysis(schema=T.StructType([
-            _f("fold_id", T.LongType()), _f(g, s[g].dataType),
-            _f(d, s[d].dataType), _f(y_col.value, D),
-            _f("split", T.StringType()), _f("yhat", D), _f("yhat_lower", D),
-            _f("yhat_upper", D), _f("model_name", T.StringType())]),
-            partitionBy=[PartitioningColumn(g)],
-            orderBy=[OrderingColumn(d)],
-            spec=_spec(method.value, params_json=_lit(params_json)),
-            args=(g, d, y_col.value))
-
-    def emit(self, rows):
-        group_col, ds_col, y_col = self.args
-        g = rows[0][group_col]
-        folds: dict = {}
-        for r in rows:
-            folds.setdefault(r["fold_id"], []).append(r)
-        for fold in sorted(folds):
-            train = [r for r in folds[fold] if r["split"] == "train"]
-            test = [r for r in folds[fold] if r["split"] == "test"]
-            h = len(test)
-            if h == 0 or len(train) < 3:
-                continue
-            r = fit_one(self.spec, _nan_y(train, y_col), h)
-            if r is None:
-                continue
-            for i, t in enumerate(test):
-                yield (fold, g, t[ds_col],
-                       None if t[y_col] is None else float(t[y_col]), "test",
-                       float(r.point[i]), float(r.lower[i]),
-                       float(r.upper[i]), r.model_name)
-
-
-class CvHydrateUDTF:
-    """``ts_cv_hydrate_by(TABLE(folds ⋈ features), 'id', 'ds', 'x1,x2'[,
-    strategy, fill_value])`` — mask 'unknown' features in test rows (mirror
-    of cv.ts_cv_hydrate_by; takes the folds-to-features pre-join since Spark
-    UDTFs accept one TABLE argument)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, unknown_csv, *rest):
-        return AnalyzeResult(schema=T.StructType(list(table.dataType.fields)),
-                             partitionBy=[PartitioningColumn(group_col.value)],
-                             orderBy=[OrderingColumn(ds_col.value)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, unknown_csv, *rest):
-        self._args = (group_col, ds_col, str(unknown_csv),
-                      str(rest[0]) if rest else "last_value",
-                      float(rest[1]) if len(rest) > 1 else 0.0)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, ds_col, unknown_csv, strategy, fill_value = self._args
-        cols = list(self._rows[0].asDict().keys())
-        unknown = [c for c in unknown_csv.split(",") if c.strip()]
-        missing = [c for c in unknown if c not in cols]
-        if missing:
-            raise ValueError(f"unknown_feature {missing[0]!r} not in "
-                             "source columns")
-        folds: dict = {}
-        for r in self._rows:
-            folds.setdefault(r["fold_id"], []).append(r)
-        for fold in sorted(folds):
-            last: dict = {c: None for c in unknown}
-            for r in folds[fold]:
-                vals = r.asDict()
-                if vals.get("split") == "train":
-                    for c in unknown:
-                        if vals[c] is not None:
-                            last[c] = vals[c]
-                else:
-                    for c in unknown:
-                        if strategy == "null":
-                            vals[c] = None
-                        elif strategy == "default":
-                            vals[c] = fill_value
-                        elif strategy == "last_value":
-                            vals[c] = last[c]
-                        else:
-                            raise ValueError(
-                                f"unknown strategy {strategy!r}")
-                yield tuple(vals[c] for c in cols)
-
-
 class PrepareRegressionInputUDTF:
     """``ts_prepare_regression_input_by(TABLE(cv ⋈ features pre-join),
     'id', 'ds', 'y')`` — fit-predict adapter (mirror of
@@ -2305,137 +2078,6 @@ class PrepareRegressionInputUDTF:
                      vals.get(d),
                      None if is_test or tgt is None else float(tgt),
                      is_test] + [vals.get(n) for n in feats])
-
-
-class HydrateFeaturesUDTF:
-    """``ts_hydrate_features_by(TABLE(cv ⋈ features pre-join), 'id', 'ds',
-    'y')`` — leakage-safe feature hydration (mirror of
-    cv.ts_hydrate_features_by). Partitioned by fold so ``_train_cutoff``
-    (the fold's max train date) is computable per partition."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, target_col):
-        g, d, y = group_col.value, ds_col.value, target_col.value
-        fields = {f.name: f.dataType for f in table.dataType.fields}
-        feats = [n for n in fields
-                 if n not in (g, d, y, "fold_id", "split")]
-        return AnalyzeResult(schema=T.StructType(
-            [_f("fold_id", fields["fold_id"]), _f("split", T.StringType()),
-             _f("group_col", fields[g]), _f("date_col", fields[d]),
-             _f("target_col", fields[y]), _f("_is_test", T.BooleanType()),
-             _f("_train_cutoff", fields[d])]
-            + [_f(n, fields[n]) for n in feats]),
-            partitionBy=[PartitioningColumn("fold_id")])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, target_col):
-        self._args = (group_col, ds_col, target_col)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        g, d, y = self._args
-        feats = [n for n in self._rows[0].asDict()
-                 if n not in (g, d, y, "fold_id", "split")]
-        cutoff = max((r[d] for r in self._rows if r["split"] == "train"),
-                     default=None)
-        for r in self._rows:
-            vals = r.asDict()
-            yield tuple([vals.get("fold_id"), vals.get("split"),
-                         vals.get(g), vals.get(d), vals.get(y),
-                         vals.get("split") == "test", cutoff]
-                        + [vals.get(n) for n in feats])
-
-
-def _det_py(m: list[list[float]]) -> float:
-    """Cofactor expansion matching regression._det_sql's evaluation order."""
-    n = len(m)
-    if n == 1:
-        return m[0][0]
-    acc = 0.0
-    for j in range(n):
-        minor = [[m[r][c] for c in range(n) if c != j] for r in range(1, n)]
-        term = m[0][j] * _det_py(minor)
-        acc = acc + term if j % 2 == 0 else acc - term
-    return acc
-
-
-class OlsFitPredictUDTF:
-    """``ols_fit_predict_by(TABLE(reg_input), 'fold_id',
-    'group_col,date_col', 'masked_target', 'x1,x2')`` — per-group OLS
-    fit-predict (mirror of regression.ols_fit_predict_by; the regression
-    leg of the reference's backtest examples, shipped there by the
-    companion anofox_statistics extension)."""
-
-    @staticmethod
-    def analyze(table, group_col, order_csv, target_col, x_csv, *rest):
-        g = group_col.value
-        fields = {f.name: f.dataType for f in table.dataType.fields}
-        ords = [c for c in order_csv.value.split(",") if c]
-        return AnalyzeResult(schema=T.StructType(
-            [_f(g, fields[g])] + [_f(c, fields[c]) for c in ords]
-            + [_f(target_col.value, T.DoubleType()),
-               _f("yhat", T.DoubleType())]),
-            partitionBy=[PartitioningColumn(g)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, order_csv, target_col, x_csv, *rest):
-        self._args = (group_col, str(order_csv).split(","),
-                      target_col, [c for c in str(x_csv).split(",") if c],
-                      float(rest[0]) if rest else 0.0)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        g, ords, y, xs, l2 = self._args
-        k = len(xs)
-        rows = sorted(self._rows, key=lambda r: tuple(r[c] for c in ords))
-        train = [r for r in rows
-                 if r[y] is not None
-                 and all(r[c] is not None for c in xs)]
-        # sequential normal-equation sums (same order as the fold exprs)
-        dim = k + 1
-
-        def feat(r):
-            return [1.0] + [float(r[c]) for c in xs]
-
-        a = [[0.0] * dim for _ in range(dim)]
-        b = [0.0] * dim
-        for r in train:
-            f = feat(r)
-            for i in range(dim):
-                for j in range(i, dim):
-                    a[i][j] += f[i] * f[j]
-                b[i] += f[i] * float(r[y])
-        for i in range(dim):
-            for j in range(i):
-                a[i][j] = a[j][i]
-        for i in range(1, dim):
-            a[i][i] += l2  # ridge: intercept unpenalized
-        det = _det_py(a)
-        coefs = None
-        if len(train) >= dim and det != 0.0:
-            coefs = []
-            for i in range(dim):
-                ai = [[(b[r] if c == i else a[r][c]) for c in range(dim)]
-                      for r in range(dim)]
-                coefs.append(_det_py(ai) / det)
-        for r in rows:
-            if coefs is None:
-                yh = None
-            else:
-                f = feat(r) if all(r[c] is not None for c in xs) else None
-                yh = (None if f is None else
-                      sum(cf * fv for cf, fv in zip(coefs, f)))
-            tv = r[y]
-            yield tuple([r[g]] + [r[c] for c in ords]
-                        + [None if tv is None else float(tv), yh])
 
 
 _R4B_UDTFS = {
@@ -3659,207 +3301,6 @@ class StatsSkewReportUDTF:
                mx / mean, top)
 
 
-def _scale_stats(vals: list, method: str):
-    """(loc, scale) over a group's non-null values — the Python replay of
-    ``prep.ts_scale_by``'s sorted-array arithmetic (same fold order)."""
-    v = sorted(vals)
-    n = len(v)
-    if n == 0:
-        return None, None
-    if method == "zscore":
-        s = 0.0
-        for x in v:
-            s = s + x
-        loc = s / float(n)
-        if n < 2:
-            return loc, None
-        s2 = 0.0
-        for x in v:
-            d = x - loc
-            s2 = s2 + d * d
-        return loc, math.sqrt(s2 / float(n - 1))
-    if method == "minmax":
-        return v[0], v[-1] - v[0]
-    # robust: type-7 median / IQR
-    return _q7_list(v, 0.5), _q7_list(v, 0.75) - _q7_list(v, 0.25)
-
-
-def _q7_list(v: list, p: float) -> float:
-    n = len(v)
-    if n == 1:
-        return float(v[0])
-    ix = float(p) * float(n - 1)
-    lo = math.floor(ix)
-    frac = ix - float(lo)
-    hi = min(lo + 1, n - 1)
-    return float(v[int(lo)]) * (1.0 - frac) + float(v[int(hi)]) * frac
-
-
-class TsScaleUDTF:
-    """``ts_scale_by(TABLE(t), group_col, ds_col, y_col, method)`` — SQL
-    form of ``operators/prep.py::ts_scale_by`` (zscore | minmax | robust),
-    value-identical to the DataFrame op (same sorted-fold arithmetic).
-    Grouped partitioning; the DataFrame op's broadcast-stats-join plan is
-    the scale path."""
-
-    @staticmethod
-    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
-                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
-                method: AnalyzeArgument) -> AnalyzeResult:
-        schema = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        if method.value not in ("zscore", "minmax", "robust"):
-            raise ValueError(f"unknown scaling method: {method.value!r}")
-        return AnalyzeResult(schema=T.StructType([
-            T.StructField(g, schema[g].dataType),
-            T.StructField(d, schema[d].dataType),
-            T.StructField(y, schema[y].dataType),
-            T.StructField("scale_loc", T.DoubleType()),
-            T.StructField("scale_scale", T.DoubleType()),
-            T.StructField("y_scaled", T.DoubleType())]),
-            partitionBy=[PartitioningColumn(g)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, method):
-        self._args = (group_col, ds_col, y_col, method)
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, ds_col, y_col, method = self._args
-        loc, scale = _scale_stats(
-            [float(r[y_col]) for r in self._rows if r[y_col] is not None],
-            method)
-        for r in self._rows:
-            y = r[y_col]
-            scaled = ((float(y) - loc) / scale
-                      if y is not None and scale is not None and scale > 0
-                      else None)
-            yield (r[group_col], r[ds_col], y, loc, scale, scaled)
-
-
-class TsWinsorizeUDTF:
-    """``ts_winsorize_by(TABLE(t), group_col, ds_col, y_col, lower,
-    upper)`` — SQL form of ``operators/prep.py::ts_winsorize_by``
-    (per-group type-7 quantile clipping), value-identical to the
-    DataFrame op."""
-
-    @staticmethod
-    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
-                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
-                lower: AnalyzeArgument, upper: AnalyzeArgument) -> AnalyzeResult:
-        schema = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        if not (0.0 <= float(lower.value) < float(upper.value) <= 1.0):
-            raise ValueError("need 0 <= lower < upper <= 1")
-        return AnalyzeResult(schema=T.StructType([
-            T.StructField(g, schema[g].dataType),
-            T.StructField(d, schema[d].dataType),
-            T.StructField(y, schema[y].dataType),
-            T.StructField("clip_lo", T.DoubleType()),
-            T.StructField("clip_hi", T.DoubleType()),
-            T.StructField("y_winsorized", T.DoubleType()),
-            T.StructField("was_clipped", T.BooleanType())]),
-            partitionBy=[PartitioningColumn(g)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, lower, upper):
-        self._args = (group_col, ds_col, y_col, float(lower), float(upper))
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, ds_col, y_col, lower, upper = self._args
-        v = sorted(float(r[y_col]) for r in self._rows
-                   if r[y_col] is not None)
-        lo = _q7_list(v, lower) if v else None
-        hi = _q7_list(v, upper) if v else None
-        for r in self._rows:
-            y = r[y_col]
-            if y is None or lo is None:
-                yield (r[group_col], r[ds_col], y, lo, hi, None, False)
-            else:
-                fy = float(y)
-                wz = lo if fy < lo else (hi if fy > hi else fy)
-                yield (r[group_col], r[ds_col], y, lo, hi, wz,
-                       fy < lo or fy > hi)
-
-
-class TsDetectAnomaliesOnlineUDTF:
-    """``ts_detect_anomalies_online(TABLE(t), group_col, ds_col, y_col,
-    z_threshold, min_obs)`` — SQL form of
-    ``operators/detect.py::ts_detect_anomalies_online_by`` (expanding
-    Welford z-score, prior-prefix scoring), value-identical to the
-    DataFrame op's fold."""
-
-    @staticmethod
-    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
-                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
-                z_threshold: AnalyzeArgument,
-                min_obs: AnalyzeArgument) -> AnalyzeResult:
-        schema = table.dataType
-        g, d, y = group_col.value, ds_col.value, y_col.value
-        if float(z_threshold.value) <= 0:
-            raise ValueError("z_threshold must be positive")
-        if int(min_obs.value) < 1:
-            raise ValueError("min_obs must be >= 1")
-        return AnalyzeResult(schema=T.StructType([
-            T.StructField(g, schema[g].dataType),
-            T.StructField(d, schema[d].dataType),
-            T.StructField(y, T.DoubleType()),
-            T.StructField("exp_mean", T.DoubleType()),
-            T.StructField("exp_std", T.DoubleType()),
-            T.StructField("online_z", T.DoubleType()),
-            T.StructField("is_anomaly", T.BooleanType())]),
-            partitionBy=[PartitioningColumn(g)])
-
-    def __init__(self):
-        self._rows: list = []
-
-    def eval(self, row, group_col, ds_col, y_col, z_threshold, min_obs):
-        self._args = (group_col, ds_col, y_col, float(z_threshold),
-                      int(min_obs))
-        self._rows.append(row)
-
-    def terminate(self):
-        if not self._rows:
-            return
-        group_col, ds_col, y_col, thr, mo = self._args
-        g = self._rows[0][group_col]
-        # NULL ds sorts FIRST, then (ds, y) — mirrors the DataFrame op's
-        # array_sort over (ds, y) structs (NULL field smallest), and a
-        # plain tuple sort would raise TypeError on None-vs-timestamp
-        walk = sorted(((r[ds_col], float(r[y_col])) for r in self._rows
-                       if r[y_col] is not None),
-                      key=lambda t: ((0, 0, t[1]) if t[0] is None
-                                     else (1, t[0], t[1])))
-        n, mean, m2 = 0.0, 0.0, 0.0
-        for ds, x in walk:
-            # m2 can round a hair negative on near-constant series;
-            # Spark's F.sqrt yields NaN there (z then falls to the
-            # NULL branch) — mirror that instead of a domain error
-            s2 = m2 / (n - 1.0) if n >= 2.0 else None
-            std = (math.sqrt(s2) if s2 >= 0.0 else float("nan")) \
-                if s2 is not None else None
-            pm = mean if n >= 1.0 else None
-            z = ((x - mean) / std
-                 if n >= float(mo) and std is not None and std > 0
-                 else None)
-            yield (g, ds, x, pm, std, z,
-                   bool(z is not None and abs(z) > thr))
-            n1 = n + 1.0
-            d = x - mean
-            mean = mean + d / n1
-            m2 = m2 + d * (x - mean)
-            n = n1
-
-
 class PipelineBuildVocabUDTF:
     """``pipeline_build_vocab(TABLE(t), id_col, text_col[, max_terms])``
     — SQL form of ``operators/pipeline.py::build_vocab`` (vocabulary +
@@ -4010,16 +3451,18 @@ def register_all(spark: SparkSession) -> None:
         reg_udtf(name, _make_metric_by_udtf(metric, n_vals, extra))
     for name, op in _PREP_UDTF_NAMES.items():
         reg_udtf(name, _make_prep_udtf(op))
-    for name, cls in _detection_udtfs().items():
+    for name, cls in _DETECTION_UDTFS.items():
         reg_udtf(name, cls)
     reg_udtf("ts_combine_keys", CombineKeysUDTF)
     reg_udtf("ts_split_keys", SplitKeysUDTF)
     reg_udtf("ts_validate_separator", ValidateSeparatorUDTF)
     reg_udtf("ts_aggregate_hierarchy", AggregateHierarchyUDTF)
-    for name, cls in _conformal_udtfs().items():
-        reg_udtf(name, cls)
-    for name, cls in _cv_udtfs().items():
-        reg_udtf(name, cls)
+    reg_udtf("ts_conformal_by", ConformalByUDTF)
+    reg_udtf("ts_conformal_coverage_by", CoverageByUDTF)
+    reg_udtf("ts_interval_width_by", IntervalWidthUDTF)
+    reg_udtf("ts_conformal_evaluate", ConformalEvaluateUDTF)
+    reg_udtf("ts_cv_split_index_by", CvSplitIndexUDTF)
+    reg_udtf("ts_backtest_auto_by", BacktestAutoUDTF)
     reg_udtf("ts_stats", StatsUDTF)  # ref registers both spellings
     for name, cls in _R4B_UDTFS.items():
         reg_udtf(name, cls)

@@ -20,6 +20,8 @@ PELT is the standard pruned dynamic program with L2/L1/Normal costs.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -836,14 +838,180 @@ def bocpd(y: np.ndarray, hazard_lambda: float = 250.0) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark operators
+# Per-series kernels. Each detection operator is one ``SeriesOp``: its output
+# fields after the group column, and ONE computation over a ds-sorted series
+# that both surfaces call — the DataFrame operators through
+# ``batched_grouped_map`` (``_grouped_udf``), the SQL table functions
+# through the UDTF shell in ``functions/sql.py``.
 # ---------------------------------------------------------------------------
 
-def _grouped_udf(df, group_col, ds_col, y_col, schema, build_rows):
+_D, _I = T.DoubleType(), T.IntegerType()
+_B, _S = T.BooleanType(), T.StringType()
+
+
+def _f(name: str, dtype: T.DataType) -> T.StructField:
+    return T.StructField(name, dtype)
+
+
+@dataclass(frozen=True)
+class SeriesOp:
+    """A per-series operator. ``fields(ds_name, ds_type, y_name)`` lists
+    its output fields after the group column; ``kernel(ds, y, *args)``
+    returns those columns for one series, in field order (``ds`` the
+    sorted dates, ``y`` the values as doubles with NULL as NaN)."""
+
+    fields: Callable[[str, T.DataType, str], list]
+    kernel: Callable[..., tuple]
+
+
+def _grouped_udf(df, group_col, ds_col, y_col, op: SeriesOp, *args):
+    """Run ``op`` per ``group_col`` series of ``df`` (the DataFrame form)."""
     from ..functions.batched import batched_grouped_map
+    schema = T.StructType(
+        [_f(group_col, df.schema[group_col].dataType)]
+        + op.fields(ds_col, df.schema[ds_col].dataType, y_col))
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
-    return batched_grouped_map(base, [group_col], ds_col, schema,
-                               lambda kt, g: build_rows(kt[0], g))
+
+    def one(kt, pdf):
+        cols = op.kernel(pdf[ds_col].to_numpy(),
+                         pdf[y_col].to_numpy(dtype=float), *args)
+        return ([kt[0]] * len(cols[0]), *cols)
+
+    return batched_grouped_map(base, [group_col], ds_col, schema, one)
+
+
+_PERIOD_KEYS = ("period", "confidence", "strength", "amplitude", "phase",
+                "iteration", "matches_expected", "matched_expected_period",
+                "match_deviation")
+_NO_PERIOD = {"period": 0.0, "confidence": 0.0, "strength": 0.0,
+              "amplitude": 0.0, "phase": 0.0, "iteration": 0,
+              "matches_expected": False, "matched_expected_period": None,
+              "match_deviation": None}
+
+
+def _periods(ds, y, method="auto", expected=None, min_confidence=None):
+    res = detect_periods(y, method, expected, min_confidence=min_confidence)
+    found = res["periods"] or [_NO_PERIOD]
+    n = len(found)
+    return (*([d[k] for d in found] for k in _PERIOD_KEYS),
+            [res["n_periods"]] * n, [res["primary_period"]] * n,
+            [res["method"]] * n)
+
+
+PERIODS = SeriesOp(lambda ds, dt, y: [
+    _f("period", _D), _f("confidence", _D), _f("strength", _D),
+    _f("amplitude", _D), _f("phase", _D), _f("iteration", _I),
+    _f("matches_expected", _B), _f("matched_expected_period", _D),
+    _f("match_deviation", _D), _f("n_periods", _I),
+    _f("primary_period", _D), _f("method", _S)], _periods)
+
+
+def _seasonality(ds, y):
+    y = interpolate_nulls(y)
+    p = int(detect_seasonality(y))
+    s = seasonal_strength(y, p) if p > 1 else 0.0
+    t = np.arange(len(y), dtype=float)
+    b1, b0 = np.polyfit(t, y, 1) if len(y) > 1 else (0.0, float(y[0]))
+    resid = y - (b0 + b1 * t)
+    vy = float(np.var(y))
+    ts = min(max(1.0 - float(np.var(resid)) / vy, 0.0), 1.0) if vy > 0 else 0.0
+    return [[p] if p > 1 else []], [p if p > 1 else 0], [float(s)], [ts]
+
+
+SEASONALITY = SeriesOp(lambda ds, dt, y: [
+    _f("detected_periods", T.ArrayType(_I)), _f("primary_period", _I),
+    _f("seasonal_strength", _D), _f("trend_strength", _D)], _seasonality)
+
+
+def _classify(ds, y, period):
+    res = classify_seasonality(y, period)
+    return ([res["classification"]], [res["additive_strength"]],
+            [res["multiplicative_strength"]])
+
+
+CLASSIFY = SeriesOp(lambda ds, dt, y: [
+    _f("classification", _S), _f("additive_strength", _D),
+    _f("multiplicative_strength", _D)], _classify)
+
+STRENGTH = SeriesOp(
+    lambda ds, dt, y: [_f("seasonal_strength", _D)],
+    lambda ds, y, period, method="variance": (
+        [float(seasonal_strength(y, period, method))],))
+
+
+def _detrended(ds, y, method="linear", degree=2, order=1, bandwidth=0.3):
+    r = detrend(y, method, degree=degree, order=order, bandwidth=bandwidth)
+    return ds, y, r["trend"], r["detrended"], [r["method"]] * len(y)
+
+
+DETREND = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f(y, _D), _f("trend", _D), _f("detrended", _D),
+    _f("method", _S)], _detrended)
+
+
+def _decomposed(ds, y, period, method="additive"):
+    try:
+        r = decompose_seasonal(y, period, method)
+    except ValueError:
+        return [], [], [], [], []
+    return ds, y, r["trend"], r["seasonal"], r["remainder"]
+
+
+DECOMPOSE = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f(y, _D), _f("trend", _D), _f("seasonal", _D),
+    _f("remainder", _D)], _decomposed)
+
+
+def _peaks(ds, y, min_prominence=0.0):
+    r = find_peaks(y, min_prominence)
+    idx = r["indices"]
+    return [ds[i] for i in idx], r["values"], idx, r["prominences"]
+
+
+PEAKS = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f(y, _D), _f("peak_index", _I), _f("prominence", _D)],
+    _peaks)
+
+
+def _peak_timing(ds, y, period, min_prominence=0.0):
+    r = analyze_peak_timing(y, period, min_prominence)
+    return tuple([r[k]] for k in (
+        "timing_classification", "modulation_type", "has_stable_timing",
+        "timing_variability", "seasonal_strength", "is_seasonal",
+        "cycle_strengths", "weak_seasons"))
+
+
+PEAK_TIMING = SeriesOp(lambda ds, dt, y: [
+    _f("timing_classification", _S), _f("modulation_type", _S),
+    _f("has_stable_timing", _B), _f("timing_variability", _D),
+    _f("seasonal_strength", _D), _f("is_seasonal", _B),
+    _f("cycle_strengths", T.ArrayType(_D)),
+    _f("weak_seasons", T.ArrayType(_I))], _peak_timing)
+
+
+def _changepoints(ds, y, min_size=2, penalty=None, cost="l2",
+                  method="pelt", hazard=250.0):
+    if method == "bocpd":
+        prob = bocpd(y, hazard)
+        return ds, prob > 0.5, prob
+    cps = set(pelt(y, penalty, min_size, cost))
+    is_cp = np.array([i in cps for i in range(len(y))])
+    return ds, is_cp, is_cp.astype(float)
+
+
+CHANGEPOINTS = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f("is_changepoint", _B),
+    _f("changepoint_probability", _D)], _changepoints)
+
+
+def _mstl(ds, y, periods=None):
+    trend, seasonal, remainder, ms = mstl_decompose(y, periods)
+    return ds, trend, seasonal, remainder, [ms] * len(trend)
+
+
+MSTL = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f("trend", _D), _f("seasonal", _D), _f("remainder", _D),
+    _f("periods", T.ArrayType(_I))], _mstl)
 
 
 def estimate_period_udf(kind: str, max_lag: int | None = None):
@@ -909,108 +1077,29 @@ def ts_detect_periods_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     amplitude, phase, iteration, matches_expected, matched_expected_period,
     match_deviation, n_periods, primary_period, method)."""
     p = dict(params or {})
-    method = str(p.get("method", "auto"))
-    expected = p.get("expected_periods")
     min_confidence = p.get("min_confidence")
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("period", T.DoubleType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("strength", T.DoubleType()),
-        T.StructField("amplitude", T.DoubleType()),
-        T.StructField("phase", T.DoubleType()),
-        T.StructField("iteration", T.IntegerType()),
-        T.StructField("matches_expected", T.BooleanType()),
-        T.StructField("matched_expected_period", T.DoubleType()),
-        T.StructField("match_deviation", T.DoubleType()),
-        T.StructField("n_periods", T.IntegerType()),
-        T.StructField("primary_period", T.DoubleType()),
-        T.StructField("method", T.StringType()),
-    ])
-
-    def build(g, pdf):
-        res = detect_periods(pdf[y_col].to_numpy(dtype=float), method,
-                             expected,
-                             min_confidence=(None if min_confidence is None
-                                             else float(min_confidence)))
-        rows = []
-        for d in res["periods"] or [{"period": 0.0, "confidence": 0.0, "strength": 0.0,
-                                     "amplitude": 0.0, "phase": 0.0, "iteration": 0,
-                                     "matches_expected": False,
-                                     "matched_expected_period": None,
-                                     "match_deviation": None}]:
-            rows.append({group_col: g, **d, "n_periods": res["n_periods"],
-                         "primary_period": res["primary_period"],
-                         "method": res["method"]})
-        return pd.DataFrame(rows)
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, PERIODS,
+                        str(p.get("method", "auto")),
+                        p.get("expected_periods"),
+                        None if min_confidence is None else float(min_confidence))
 
 
 def ts_analyze_seasonality_by(df: DataFrame, group_col: str, ds_col: str,
                               y_col: str) -> DataFrame:
     """(<group>, detected_periods[], primary_period, seasonal_strength,
     trend_strength) — ``seasonality.rs:323-380``."""
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("detected_periods", T.ArrayType(T.IntegerType())),
-        T.StructField("primary_period", T.IntegerType()),
-        T.StructField("seasonal_strength", T.DoubleType()),
-        T.StructField("trend_strength", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        y = interpolate_nulls(pdf[y_col].to_numpy(dtype=float))
-        p = detect_seasonality(y)
-        s = seasonal_strength(y, p) if p > 1 else 0.0
-        t = np.arange(len(y), dtype=float)
-        b1, b0 = np.polyfit(t, y, 1) if len(y) > 1 else (0.0, float(y[0]))
-        resid = y - (b0 + b1 * t)
-        vy = float(np.var(y))
-        ts = min(max(1.0 - float(np.var(resid)) / vy, 0.0), 1.0) if vy > 0 else 0.0
-        # columnar return (see batched_grouped_map, r14): one pandas frame
-        # per Arrow batch instead of per series; fields in schema order
-        return ([g], [[p] if p > 1 else []], [p if p > 1 else 0],
-                [float(s)], [ts])
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, SEASONALITY)
 
 
 def ts_classify_seasonality_by(df: DataFrame, group_col: str, ds_col: str,
                                y_col: str, period: int) -> DataFrame:
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("classification", T.StringType()),
-        T.StructField("additive_strength", T.DoubleType()),
-        T.StructField("multiplicative_strength", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        res = classify_seasonality(pdf[y_col].to_numpy(dtype=float), period)
-        # columnar return, dict indexed by schema field names (r14)
-        return ([g], [res["classification"]], [res["additive_strength"]],
-                [res["multiplicative_strength"]])
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, CLASSIFY, period)
 
 
 def ts_seasonal_strength_by(df: DataFrame, group_col: str, ds_col: str,
                             y_col: str, period: int,
                             method: str = "variance") -> DataFrame:
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("seasonal_strength", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        s = seasonal_strength(pdf[y_col].to_numpy(dtype=float), period, method)
-        return ([g], [float(s)])  # columnar return (r14)
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, STRENGTH, period, method)
 
 
 def ts_detrend_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -1018,54 +1107,15 @@ def ts_detrend_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     """Row-per-observation detrended output: (<group>, <ds>, <y>, trend,
     detrended, method) — macro ``ts_macros.cpp:434-460``."""
     p = dict(params or {})
-    method = str(p.get("method", "linear"))
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField(y_col, T.DoubleType()),
-        T.StructField("trend", T.DoubleType()),
-        T.StructField("detrended", T.DoubleType()),
-        T.StructField("method", T.StringType()),
-    ])
-
-    def build(g, pdf):
-        y = pdf[y_col].to_numpy(dtype=float)
-        r = detrend(y, method, degree=int(p.get("degree", 2)),
-                    order=int(p.get("order", 1)),
-                    bandwidth=float(p.get("bandwidth", 0.3)))
-        return pd.DataFrame({group_col: g, ds_col: pdf[ds_col].to_numpy(),
-                             y_col: y, "trend": r["trend"],
-                             "detrended": r["detrended"], "method": r["method"]})
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, DETREND,
+                        str(p.get("method", "linear")), int(p.get("degree", 2)),
+                        int(p.get("order", 1)), float(p.get("bandwidth", 0.3)))
 
 
 def ts_decompose_seasonal_by(df: DataFrame, group_col: str, ds_col: str,
                              y_col: str, period: int,
                              method: str = "additive") -> DataFrame:
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField(y_col, T.DoubleType()),
-        T.StructField("trend", T.DoubleType()),
-        T.StructField("seasonal", T.DoubleType()),
-        T.StructField("remainder", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        y = pdf[y_col].to_numpy(dtype=float)
-        try:
-            r = decompose_seasonal(y, period, method)
-        except ValueError:
-            return pd.DataFrame({c.name: pd.Series(dtype="object") for c in schema})
-        return pd.DataFrame({group_col: g, ds_col: pdf[ds_col].to_numpy(),
-                             y_col: y, "trend": r["trend"],
-                             "seasonal": r["seasonal"],
-                             "remainder": r["remainder"]})
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, DECOMPOSE, period, method)
 
 
 def mstl_decompose(y: np.ndarray, periods: list[int] | None = None):
@@ -1092,86 +1142,23 @@ def ts_mstl_decomposition_by(df: DataFrame, group_col: str, ds_col: str,
                              y_col: str, params: dict | None = None) -> DataFrame:
     """(<group>, <ds>, trend, seasonal, remainder, periods) — macro
     ``ts_macros.cpp:419-433``, native ``ts_mstl_decomposition_native.cpp``."""
-    p = dict(params or {})
-    periods = p.get("seasonal_periods")
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField("trend", T.DoubleType()),
-        T.StructField("seasonal", T.DoubleType()),
-        T.StructField("remainder", T.DoubleType()),
-        T.StructField("periods", T.ArrayType(T.IntegerType())),
-    ])
-
-    def build(g, pdf):
-        trend, seasonal_total, remainder, ms = mstl_decompose(
-            pdf[y_col].to_numpy(dtype=float), periods)
-        return pd.DataFrame({group_col: g, ds_col: pdf[ds_col].to_numpy(),
-                             "trend": trend, "seasonal": seasonal_total,
-                             "remainder": remainder,
-                             "periods": [ms] * len(trend)})
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    periods = dict(params or {}).get("seasonal_periods")
+    return _grouped_udf(df, group_col, ds_col, y_col, MSTL, periods)
 
 
 def ts_detect_peaks_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                        params: dict | None = None) -> DataFrame:
     """One row per peak: (<group>, <ds>, <y>, peak_index, prominence)."""
-    p = dict(params or {})
-    min_prom = float(p.get("min_prominence", 0.0))
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField(y_col, T.DoubleType()),
-        T.StructField("peak_index", T.IntegerType()),
-        T.StructField("prominence", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        y = pdf[y_col].to_numpy(dtype=float)
-        res = find_peaks(y, min_prom)
-        ds_vals = pdf[ds_col].to_numpy()
-        return pd.DataFrame({
-            group_col: [g] * res["n_peaks"],
-            ds_col: [ds_vals[i] for i in res["indices"]],
-            y_col: res["values"],
-            "peak_index": res["indices"],
-            "prominence": res["prominences"],
-        })
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    min_prom = float(dict(params or {}).get("min_prominence", 0.0))
+    return _grouped_udf(df, group_col, ds_col, y_col, PEAKS, min_prom)
 
 
 def ts_analyze_peak_timing_by(df: DataFrame, group_col: str, ds_col: str,
                               y_col: str, period: int,
                               params: dict | None = None) -> DataFrame:
-    p = dict(params or {})
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("timing_classification", T.StringType()),
-        T.StructField("modulation_type", T.StringType()),
-        T.StructField("has_stable_timing", T.BooleanType()),
-        T.StructField("timing_variability", T.DoubleType()),
-        T.StructField("seasonal_strength", T.DoubleType()),
-        T.StructField("is_seasonal", T.BooleanType()),
-        T.StructField("cycle_strengths", T.ArrayType(T.DoubleType())),
-        T.StructField("weak_seasons", T.ArrayType(T.IntegerType())),
-    ])
-
-    def build(g, pdf):
-        res = analyze_peak_timing(pdf[y_col].to_numpy(dtype=float), period,
-                                  float(p.get("min_prominence", 0.0)))
-        # columnar return, dict indexed by schema field names (r14)
-        return ([g], [res["timing_classification"]],
-                [res["modulation_type"]], [res["has_stable_timing"]],
-                [res["timing_variability"]], [res["seasonal_strength"]],
-                [res["is_seasonal"]], [res["cycle_strengths"]],
-                [res["weak_seasons"]])
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    min_prom = float(dict(params or {}).get("min_prominence", 0.0))
+    return _grouped_udf(df, group_col, ds_col, y_col, PEAK_TIMING, period,
+                        min_prom)
 
 
 def ts_detect_changepoints_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1179,35 +1166,12 @@ def ts_detect_changepoints_by(df: DataFrame, group_col: str, ds_col: str,
     """(<group>, <ds>, is_changepoint, changepoint_probability) — macro
     ``ts_macros.cpp:489-538``, output ``ts_changepoints.cpp:519-528``."""
     p = dict(params or {})
-    min_size = int(p.get("min_size", 2))
     penalty = p.get("penalty")
-    cost = str(p.get("cost", "l2"))
-    use_bocpd = str(p.get("method", "pelt")) == "bocpd"
-    hazard = float(p.get("hazard_lambda", 250.0))
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField("is_changepoint", T.BooleanType()),
-        T.StructField("changepoint_probability", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        y = pdf[y_col].to_numpy(dtype=float)
-        n = len(y)
-        if use_bocpd:
-            prob = bocpd(y, hazard)
-            is_cp = prob > 0.5
-        else:
-            cps = set(pelt(y, None if penalty is None else float(penalty),
-                           min_size, cost))
-            is_cp = np.array([i in cps for i in range(n)])
-            prob = is_cp.astype(float)
-        return pd.DataFrame({group_col: [g] * n, ds_col: pdf[ds_col].to_numpy(),
-                             "is_changepoint": is_cp,
-                             "changepoint_probability": prob})
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, CHANGEPOINTS,
+                        int(p.get("min_size", 2)),
+                        None if penalty is None else float(penalty),
+                        str(p.get("cost", "l2")), str(p.get("method", "pelt")),
+                        float(p.get("hazard_lambda", 250.0)))
 
 
 # ---------------------------------------------------------------------------
@@ -1229,6 +1193,26 @@ def _hilbert_analytic(y: np.ndarray) -> np.ndarray:
     return np.fft.ifft(spec * h)
 
 
+def _window_strengths(y, period: int, win: int):
+    """(window start, window end, seasonal strength) per window position."""
+    step = max(period, 1)
+    for s in range(0, max(len(y) - win + 1, 1), step):
+        e = min(s + win, len(y))
+        if e - s < 2 * period:
+            break
+        yield s, e, float(seasonal_strength(y[s:e], period))
+
+
+def _windowed(ds, y, period, win):
+    rows = list(_window_strengths(interpolate_nulls(y), period, win))
+    return tuple([r[i] for r in rows] for i in range(3))
+
+
+WINDOWED = SeriesOp(lambda ds, dt, y: [
+    _f("window_start", _I), _f("window_end", _I),
+    _f("seasonal_strength", _D)], _windowed)
+
+
 def ts_seasonal_strength_windowed_by(df: DataFrame, group_col: str, ds_col: str,
                                      y_col: str, period: int,
                                      window: int | None = None) -> DataFrame:
@@ -1238,28 +1222,32 @@ def ts_seasonal_strength_windowed_by(df: DataFrame, group_col: str, ds_col: str,
     default 2×period like ``seasonality.rs:703`` (win_size)."""
     period = int(period)
     win = int(window) if window else 2 * period
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("window_start", T.IntegerType()),
-        T.StructField("window_end", T.IntegerType()),
-        T.StructField("seasonal_strength", T.DoubleType()),
-    ])
+    return _grouped_udf(df, group_col, ds_col, y_col, WINDOWED, period, win)
 
-    def build(g, pdf):
-        y = interpolate_nulls(pdf[y_col].to_numpy(dtype=float))
-        n = len(y)
-        rows = []
-        step = max(period, 1)
-        for s in range(0, max(n - win + 1, 1), step):
-            e = min(s + win, n)
-            if e - s < 2 * period:
-                break
-            rows.append({group_col: g, "window_start": s, "window_end": e,
-                         "seasonal_strength": float(seasonal_strength(y[s:e], period))})
-        return pd.DataFrame(rows, columns=[c.name for c in schema])
 
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+def _seasonality_changes(ds, y, period, win, thr):
+    rows = []
+    prev = None
+    for s, _e, cur in _window_strengths(interpolate_nulls(y), period, win):
+        if prev is not None:
+            kind = None
+            if prev < thr <= cur:
+                kind = "appeared"
+            elif cur < thr <= prev:
+                kind = "disappeared"
+            elif cur - prev > thr / 2:
+                kind = "increased"
+            elif prev - cur > thr / 2:
+                kind = "decreased"
+            if kind:
+                rows.append((s, kind, prev, cur))
+        prev = cur
+    return tuple([r[i] for r in rows] for i in range(4))
+
+
+SEASONALITY_CHANGES = SeriesOp(lambda ds, dt, y: [
+    _f("index", _I), _f("change_type", _S), _f("strength_before", _D),
+    _f("strength_after", _D)], _seasonality_changes)
 
 
 def ts_detect_seasonality_changes_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1270,46 +1258,31 @@ def ts_detect_seasonality_changes_by(df: DataFrame, group_col: str, ds_col: str,
     output struct ``ts_detrend.cpp:456-460``. change_type ∈
     {appeared, disappeared, increased, decreased} against `threshold`."""
     p = dict(params or {})
-    thr = float(p.get("threshold", 0.3))
     period = int(period)
-    win = int(p.get("window_size", 2 * period))
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("index", T.IntegerType()),
-        T.StructField("change_type", T.StringType()),
-        T.StructField("strength_before", T.DoubleType()),
-        T.StructField("strength_after", T.DoubleType()),
-    ])
+    return _grouped_udf(df, group_col, ds_col, y_col, SEASONALITY_CHANGES,
+                        period, int(p.get("window_size", 2 * period)),
+                        float(p.get("threshold", 0.3)))
 
-    def build(g, pdf):
-        y = interpolate_nulls(pdf[y_col].to_numpy(dtype=float))
-        n = len(y)
-        rows = []
-        step = max(period, 1)
-        prev = None
-        for s in range(0, max(n - win + 1, 1), step):
-            e = min(s + win, n)
-            if e - s < 2 * period:
-                break
-            cur = float(seasonal_strength(y[s:e], period))
-            if prev is not None:
-                kind = None
-                if prev < thr <= cur:
-                    kind = "appeared"
-                elif cur < thr <= prev:
-                    kind = "disappeared"
-                elif cur - prev > thr / 2:
-                    kind = "increased"
-                elif prev - cur > thr / 2:
-                    kind = "decreased"
-                if kind:
-                    rows.append({group_col: g, "index": s, "change_type": kind,
-                                 "strength_before": prev, "strength_after": cur})
-            prev = cur
-        return pd.DataFrame(rows, columns=[c.name for c in schema])
 
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+def _instantaneous(ds, y):
+    y = interpolate_nulls(y)
+    n = len(y)
+    if n < 4:
+        return [], [], [], []
+    analytic = _hilbert_analytic(y - y.mean())
+    amp = np.abs(analytic)
+    phase = np.unwrap(np.angle(analytic))
+    freq = np.empty(n)
+    freq[1:] = np.diff(phase) / (2.0 * np.pi)
+    freq[0] = freq[1]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        per = np.where(np.abs(freq) > EPS, 1.0 / np.abs(freq), np.nan)
+    return ds, per, freq, amp
+
+
+INSTANTANEOUS = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f("period", _D), _f("frequency", _D),
+    _f("amplitude", _D)], _instantaneous)
 
 
 def ts_instantaneous_period_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1317,33 +1290,45 @@ def ts_instantaneous_period_by(df: DataFrame, group_col: str, ds_col: str,
     """Hilbert-transform instantaneous period/frequency/amplitude per
     observation: (<group>, <ds>, period, frequency, amplitude) — ref
     ``seasonality.rs:744-760``, output ``ts_detrend.cpp:612-695`` (arrays;
-    we emit rows, the relational form)."""
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype), T.StructField(ds_col, ds_type),
-        T.StructField("period", T.DoubleType()),
-        T.StructField("frequency", T.DoubleType()),
-        T.StructField("amplitude", T.DoubleType()),
-    ])
+    we emit rows, the relational form). ``period`` is NaN where
+    |frequency| <= EPS."""
+    return _grouped_udf(df, group_col, ds_col, y_col, INSTANTANEOUS)
 
-    def build(g, pdf):
-        y = interpolate_nulls(pdf[y_col].to_numpy(dtype=float))
-        n = len(y)
-        if n < 4:
-            return pd.DataFrame({c.name: pd.Series(dtype="object") for c in schema})
-        analytic = _hilbert_analytic(y - y.mean())
-        amp = np.abs(analytic)
-        phase = np.unwrap(np.angle(analytic))
-        freq = np.empty(n)
-        freq[1:] = np.diff(phase) / (2.0 * np.pi)
-        freq[0] = freq[1]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            per = np.where(np.abs(freq) > EPS, 1.0 / np.abs(freq), np.nan)
-        return pd.DataFrame({group_col: [g] * n, ds_col: pdf[ds_col].to_numpy(),
-                             "period": per, "frequency": freq, "amplitude": amp})
 
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+def _amplitude_modulation(ds, y, period, mod_thr, seas_thr):
+    y = interpolate_nulls(y)
+    n = len(y)
+    if n < 2 * period or period < 2:
+        return [], [], [], [], [], []
+    strength = float(seasonal_strength(y, period))
+    is_seasonal = strength >= seas_thr
+    amp = np.abs(_hilbert_analytic(y - y.mean()))
+    ncyc = n // period
+    cyc_amp = np.array([amp[i * period:(i + 1) * period].mean()
+                        for i in range(ncyc)])
+    mu = float(cyc_amp.mean())
+    score = float(cyc_amp.std(ddof=0) / mu) if mu > EPS else 0.0
+    t = np.arange(ncyc, dtype=float)
+    trend = float(np.polyfit(t, cyc_amp, 1)[0]) if ncyc > 1 else 0.0
+    has_mod = is_seasonal and score > mod_thr
+    if not is_seasonal:
+        kind = "none"
+    elif not has_mod:
+        kind = "stable"
+    elif trend > 0:
+        kind = "increasing"
+    elif trend < 0:
+        kind = "decreasing"
+    else:
+        kind = "varying"
+    return [is_seasonal], [strength], [has_mod], [kind], [score], [trend]
+
+
+AMPLITUDE_MODULATION = SeriesOp(lambda ds, dt, y: [
+    _f("is_seasonal", _B), _f("seasonal_strength", _D),
+    _f("has_modulation", _B), _f("modulation_type", _S),
+    _f("modulation_score", _D), _f("amplitude_trend", _D)],
+    _amplitude_modulation)
 
 
 def ts_detect_amplitude_modulation_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1356,51 +1341,9 @@ def ts_detect_amplitude_modulation_by(df: DataFrame, group_col: str, ds_col: str
     (numpy stand-in for the reference's Morlet wavelet), modulation score =
     CV of the per-cycle envelope."""
     p = dict(params or {})
-    mod_thr = float(p.get("modulation_threshold", 0.2))
-    seas_thr = float(p.get("seasonality_threshold", 0.3))
-    period = int(period)
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType([
-        T.StructField(group_col, gtype),
-        T.StructField("is_seasonal", T.BooleanType()),
-        T.StructField("seasonal_strength", T.DoubleType()),
-        T.StructField("has_modulation", T.BooleanType()),
-        T.StructField("modulation_type", T.StringType()),
-        T.StructField("modulation_score", T.DoubleType()),
-        T.StructField("amplitude_trend", T.DoubleType()),
-    ])
-
-    def build(g, pdf):
-        y = interpolate_nulls(pdf[y_col].to_numpy(dtype=float))
-        n = len(y)
-        if n < 2 * period or period < 2:
-            return pd.DataFrame({c.name: pd.Series(dtype="object") for c in schema})
-        strength = float(seasonal_strength(y, period))
-        is_seasonal = strength >= seas_thr
-        amp = np.abs(_hilbert_analytic(y - y.mean()))
-        ncyc = n // period
-        cyc_amp = np.array([amp[i * period:(i + 1) * period].mean()
-                            for i in range(ncyc)])
-        mu = float(cyc_amp.mean())
-        score = float(cyc_amp.std(ddof=0) / mu) if mu > EPS else 0.0
-        t = np.arange(ncyc, dtype=float)
-        trend = float(np.polyfit(t, cyc_amp, 1)[0]) if ncyc > 1 else 0.0
-        has_mod = is_seasonal and score > mod_thr
-        if not is_seasonal:
-            kind = "none"
-        elif not has_mod:
-            kind = "stable"
-        elif trend > 0:
-            kind = "increasing"
-        elif trend < 0:
-            kind = "decreasing"
-        else:
-            kind = "varying"
-        # columnar return, fields in schema order (r14)
-        return ([g], [is_seasonal], [strength], [has_mod], [kind],
-                [score], [trend])
-
-    return _grouped_udf(df, group_col, ds_col, y_col, schema, build)
+    return _grouped_udf(df, group_col, ds_col, y_col, AMPLITUDE_MODULATION,
+                        int(period), float(p.get("modulation_threshold", 0.2)),
+                        float(p.get("seasonality_threshold", 0.3)))
 
 
 def ts_detect_anomalies_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1514,11 +1457,7 @@ def ts_detect_anomalies_online_by(df: DataFrame, group_col: str,
     twin ``stream_zscore_anomaly`` (genuinely O(1) state per key) or
     split the series and carry the three scalars across chunks.
     """
-    thr, mo = float(z_threshold), int(min_obs)
-    if thr <= 0:
-        raise ValueError("z_threshold must be positive")
-    if mo < 1:
-        raise ValueError("min_obs must be >= 1")
+    thr, mo = online_zscore_args(z_threshold, min_obs)
     base = df.filter(F.col(y_col).isNotNull())
     ev = F.array_sort(F.collect_list(F.struct(
         F.col(ds_col).alias("ds"),
@@ -1568,3 +1507,48 @@ def ts_detect_anomalies_online_by(df: DataFrame, group_col: str,
         z["s"]["ps"].alias("exp_std"),
         zz.alias("online_z"),
         F.coalesce(F.abs(zz) > thr, F.lit(False)).alias("is_anomaly"))
+
+
+def online_zscore_args(z_threshold, min_obs) -> tuple[float, int]:
+    """The validated ``(z_threshold, min_obs)`` of the online detector."""
+    thr, mo = float(z_threshold), int(min_obs)
+    if thr <= 0:
+        raise ValueError("z_threshold must be positive")
+    if mo < 1:
+        raise ValueError("min_obs must be >= 1")
+    return thr, mo
+
+
+def _online_zscore(ds, y, thr, mo):
+    """Python replay of ``ts_detect_anomalies_online_by``'s fold (the SQL
+    form runs it). ``y`` holds None for NULL: those rows are excluded, a
+    NaN is a value, as in the DataFrame op."""
+    # NULL ds sorts FIRST, then (ds, y) — the DataFrame op's array_sort
+    # over (ds, y) structs (NULL field smallest); a plain tuple sort would
+    # raise TypeError on None-vs-timestamp
+    walk = sorted(((d, float(v)) for d, v in zip(ds, y) if v is not None),
+                  key=lambda t: ((0, 0, t[1]) if t[0] is None
+                                 else (1, t[0], t[1])))
+    rows = []
+    n, mean, m2 = 0.0, 0.0, 0.0
+    for d, x in walk:
+        # m2 can round a hair negative on near-constant series; Spark's
+        # F.sqrt yields NaN there (z then falls to the NULL branch)
+        s2 = m2 / (n - 1.0) if n >= 2.0 else None
+        std = (math.sqrt(s2) if s2 >= 0.0 else float("nan")) \
+            if s2 is not None else None
+        pm = mean if n >= 1.0 else None
+        z = ((x - mean) / std
+             if n >= float(mo) and std is not None and std > 0 else None)
+        rows.append((d, x, pm, std, z, bool(z is not None and abs(z) > thr)))
+        n1 = n + 1.0
+        dx = x - mean
+        mean = mean + dx / n1
+        m2 = m2 + dx * (x - mean)
+        n = n1
+    return tuple([r[i] for r in rows] for i in range(6))
+
+
+ONLINE_ZSCORE = SeriesOp(lambda ds, dt, y: [
+    _f(ds, dt), _f(y, _D), _f("exp_mean", _D), _f("exp_std", _D),
+    _f("online_z", _D), _f("is_anomaly", _B)], _online_zscore)

@@ -414,6 +414,22 @@ def _safe(name: str) -> str:
     return name.replace(".", "_")
 
 
+def selected_features(features) -> list[str]:
+    """The requested feature names (all when none are given); an unknown
+    name raises ``ValueError``."""
+    selected = list(features or FEATURE_NAMES)
+    unknown = [x for x in selected if x not in FEATURE_NAMES]
+    if unknown:
+        raise ValueError(f"unknown features: {unknown}")
+    return selected
+
+
+def feature_columns(ds, y, selected: list[str]) -> tuple:
+    """The ``selected`` feature columns of one ds-sorted series."""
+    feats = extract_features(y)
+    return tuple([feats[x]] for x in selected)
+
+
 def ts_features_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                    features: list[str] | None = None) -> DataFrame:
     """Wide per-series feature table: (<group>, one column per feature).
@@ -422,20 +438,17 @@ def ts_features_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     ``ts_features_config_*``; unknown names raise like ``features.rs:449``
     warns). Dots in names are mapped to underscores for Spark columns.
     """
-    selected = features or FEATURE_NAMES
-    unknown = [x for x in selected if x not in FEATURE_NAMES]
-    if unknown:
-        raise ValueError(f"unknown features: {unknown}")
+    selected = selected_features(features)
     gtype = df.schema[group_col].dataType
     schema = T.StructType(
         [T.StructField(group_col, gtype)]
         + [T.StructField(_safe(x), T.DoubleType()) for x in selected])
 
     def one(kt, pdf: pd.DataFrame):
-        feats = extract_features(pdf[y_col].to_numpy(dtype=float))
         # columnar return (see batched_grouped_map): one 118-column
         # pandas DataFrame per series was the dominant per-series cost
-        return ((kt[0],), *[(feats[x],) for x in selected])
+        return ([kt[0]], *feature_columns(
+            None, pdf[y_col].to_numpy(dtype=float), selected))
 
     from ..functions.batched import batched_grouped_map
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))

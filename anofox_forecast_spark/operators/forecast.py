@@ -204,6 +204,12 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _type_sql(dt: T.DataType) -> str:
+    """``dt`` as SQL type text; TIMESTAMP is spelled ``timestamp_ltz`` so
+    that ``spark.sql.timestampType`` cannot turn it into TIMESTAMP_NTZ."""
+    return "timestamp_ltz" if isinstance(dt, T.TimestampType) else dt.simpleString()
+
+
 def _future_ds_sql(max_ds: str, step: str, freq: Frequency,
                    ds_type: T.DataType) -> str:
     """SQL-text expression for the forecast timestamp at ``step`` after
@@ -215,7 +221,7 @@ def _future_ds_sql(max_ds: str, step: str, freq: Frequency,
     Column form cost ~15-55 py4j round trips of driver latency per query
     build; one string resolves to the identical Catalyst operators
     (bit-audited against the previous Column path)."""
-    dt = ds_type.simpleString()
+    dt = _type_sql(ds_type)
     if freq.kind == "int" or isinstance(ds_type, (T.IntegerType, T.LongType)):
         n = freq.n if freq.kind == "int" else 1
         return f"CAST({max_ds} + {step} * {n} AS {dt})"

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
 from ..sources import NO_NAN_METADATA
-from .forecast import _q
+from .forecast import _q, _type_sql
 
 # ---------------------------------------------------------------------------
 # Gap filling
@@ -50,12 +50,6 @@ def _unit_start(col: Column, n_months: int) -> Column:
     if n_months % 3 == 0:
         return F.date_trunc("quarter", col)
     return F.date_trunc("month", col)
-
-
-def _type_sql(dt: T.DataType) -> str:
-    """``dt`` as SQL type text; TIMESTAMP is spelled ``timestamp_ltz`` so
-    that ``spark.sql.timestampType`` cannot turn it into TIMESTAMP_NTZ."""
-    return "timestamp_ltz" if isinstance(dt, T.TimestampType) else dt.simpleString()
 
 
 def _gap_sql(freq: Frequency, ds_type: T.DataType, ds: str, nxt: str):

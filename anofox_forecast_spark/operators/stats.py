@@ -183,7 +183,8 @@ def _strengths(v: np.ndarray):
 
 def compute_series_stats(y_raw: np.ndarray, dates_us: np.ndarray | None,
                          freq: Frequency | None) -> dict:
-    """All 36 statistics for one series (stats.rs:106-312)."""
+    """All 36 statistics for one series (stats.rs:106-312): the 19 moment
+    statistics here, the 17 order-dependent ones from ``_rest_stats``."""
     length = len(y_raw)
     out = {name: None for name, _ in STATS_FIELDS}
     out["length"] = length
@@ -193,35 +194,16 @@ def compute_series_stats(y_raw: np.ndarray, dates_us: np.ndarray | None,
     # pandas merges NULL and NaN into NaN; the reference distinguishes — we
     # report all missing as n_nulls and n_nan = 0 (Arrow has no NaN/NULL split
     # once it crosses the boundary; documented deviation).
-    n_nulls = int(isnull.sum())
     v = np.asarray(y_raw[~isnull], dtype=float)
-    out.update(n_nulls=n_nulls, n_nan=0)
+    out.update(n_nulls=int(isnull.sum()), n_nan=0)
     n_valid = len(v)
     if n_valid == 0:
         return out
+    out.update(_rest_stats(y_raw, dates_us, freq))
     out["n_zeros"] = int((v == 0.0).sum())
     out["n_positive"] = int((v > 0.0).sum())
     out["n_negative"] = int((v < 0.0).sum())
-    out["n_unique_values"] = int(len(np.unique(v)))
     out["is_constant"] = bool(out["n_unique_values"] == 1)
-
-    # leading/trailing zeros over the original series (NULL breaks the run)
-    lead = 0
-    for i in range(length):
-        if not isnull[i] and y_raw[i] == 0.0:
-            lead += 1
-        else:
-            break
-    trail = 0
-    for i in range(length - 1, -1, -1):
-        if not isnull[i] and y_raw[i] == 0.0:
-            trail += 1
-        else:
-            break
-    out["n_zeros_start"] = lead
-    out["n_zeros_end"] = trail
-    out["plateau_size"] = _plateau(v)
-    out["plateau_size_nonzero"] = _plateau_nonzero(v)
 
     s = float(v.sum())
     mean = s / n_valid
@@ -235,11 +217,6 @@ def compute_series_stats(y_raw: np.ndarray, dates_us: np.ndarray | None,
     out["variance"] = variance
     out["std_dev"] = std
     out["coef_variation"] = std / abs(mean) if abs(mean) > EPS else float("nan")
-
-    sv = np.sort(v)
-    out["median"] = _percentile(sv, 0.5)
-    out["q1"] = _percentile(sv, 0.25)
-    out["q3"] = _percentile(sv, 0.75)
     out["iqr"] = out["q3"] - out["q1"]
 
     if n_valid > 2 and std > EPS:
@@ -255,43 +232,21 @@ def compute_series_stats(y_raw: np.ndarray, dates_us: np.ndarray | None,
         out["kurtosis"] = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * g2 + 6.0)
     else:
         out["kurtosis"] = float("nan")
-    out["tail_index"] = _hill(v)
     if (n_valid > 3 and math.isfinite(out["kurtosis"])
             and math.isfinite(out["skewness"])):
         out["bimodality_coef"] = (out["skewness"] ** 2 + 1.0) / (out["kurtosis"] + 3.0)
     else:
         out["bimodality_coef"] = float("nan")
-
-    # 10% trimmed mean (stats.rs:776-800)
-    trim = int(n_valid * 0.1)
-    core = sv[trim: n_valid - trim]
-    out["trimmed_mean"] = float(core.mean()) if len(core) else mean
-
-    out["autocorr_lag1"] = _autocorr(v, 1)
-    out["trend_strength"], out["seasonality_strength"] = _strengths(v)
-    out["entropy"] = _approx_entropy(v)
-    out["stability"] = _stability(v)
-
-    if dates_us is not None and len(dates_us) >= 2 and freq is not None:
-        d = np.sort(dates_us)
-        if freq.kind == "month":
-            dt = pd.to_datetime(d, unit="us")
-            if freq.n % 12 == 0:
-                units = dt.year.to_numpy()
-            elif freq.n % 3 == 0:
-                units = (dt.year * 4 + (dt.month - 1) // 3).to_numpy()
-            else:
-                units = (dt.year * 12 + dt.month).to_numpy()
-            out["expected_length"] = int(units[-1] - units[0] + 1)
-            out["n_gaps"] = int((np.diff(units) > 1).sum())
-        else:
-            fus = (freq.n if freq.kind == "int" else freq.n * 1_000_000)
-            out["expected_length"] = int((d[-1] - d[0]) // fus + 1)
-            out["n_gaps"] = int((np.diff(d) > fus * 1.5).sum())
-    elif dates_us is not None:
-        out["expected_length"] = len(dates_us)
-        out["n_gaps"] = 0
     return out
+
+
+def dates_us(ds) -> np.ndarray:
+    """The non-NULL ``ds`` values as int64: epoch microseconds for dates
+    and timestamps, the values themselves for integer dates."""
+    s = pd.Series(ds).dropna().infer_objects()
+    if s.dtype.kind in "iuf":
+        return s.to_numpy().astype("int64")
+    return pd.to_datetime(s).astype("int64").to_numpy() // 1000
 
 
 # ---------------------------------------------------------------------------
@@ -305,9 +260,8 @@ def _rest_stats(y: np.ndarray, dates_us: np.ndarray | None,
     expand a native countDistinct/percentile forces through the aggregate),
     leading/trailing zero runs, plateaus, Hill tail, trimmed mean, lag-1 ACF,
     trend/seasonality strengths, entropy, stability, expected_length/n_gaps.
-    Same formulas as ``compute_series_stats`` (stats.rs citations there);
-    split out so the pushed-down path computes only what the JVM can't do
-    cheaply."""
+    Shared by ``compute_series_stats`` and the pushed-down path, which
+    computes here only what the JVM can't do cheaply (stats.rs:312-800)."""
     out = {k: None for k in _REST_KEYS}
     length = len(y)
     if length == 0:
@@ -614,27 +568,27 @@ def _dq_scores(y_raw: np.ndarray, dates_us: np.ndarray | None) -> dict:
     }
 
 
+def data_quality(ds, y) -> tuple:
+    """The ``DQ_FIELDS`` columns of one ds-sorted series."""
+    s = _dq_scores(y, dates_us(ds))
+    return tuple([s[n]] for n, _ in DQ_FIELDS)
+
+
 def ts_data_quality(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                     n_short: int = 10, frequency=None) -> DataFrame:
     """Per-series quality verdicts: (<group> as unique_id, 4 scores, overall,
     n_gaps, n_missing, is_constant) — ref macro ``ts_macros.cpp:124-148``."""
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    is_int_ds = isinstance(ds_type, (T.IntegerType, T.LongType))
-    schema = T.StructType([T.StructField("unique_id", gtype)]
-                          + [T.StructField(n, t) for n, t in DQ_FIELDS])
+    from ..functions.batched import batched_grouped_map
+    schema = T.StructType(
+        [T.StructField("unique_id", df.schema[group_col].dataType)]
+        + [T.StructField(n, t) for n, t in DQ_FIELDS])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ds_col)
-        y = pdf[y_col].to_numpy(dtype=float)
-        if is_int_ds:
-            dates = pdf[ds_col].to_numpy(dtype="int64")
-        else:
-            dates = pd.to_datetime(pdf[ds_col]).astype("int64").to_numpy() // 1000
-        return pd.DataFrame([{"unique_id": key[0], **_dq_scores(y, dates)}])
+    def one(kt, pdf):
+        return ([kt[0]], *data_quality(pdf[ds_col].to_numpy(),
+                                        pdf[y_col].to_numpy(dtype=float)))
 
-    return (df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
-              .groupBy(group_col).applyInPandas(fn, schema))
+    base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
+    return batched_grouped_map(base, [group_col], ds_col, schema, one)
 
 
 ts_data_quality_by = ts_data_quality

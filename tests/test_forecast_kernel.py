@@ -15,6 +15,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import types as T
 
 from anofox_forecast_spark.functions.sql import register_all
 from anofox_forecast_spark.operators.cv import (ts_cv_folds_by,
@@ -95,6 +96,22 @@ _SQL_CASES = {
     "sql_cv_forecast_by_level_1.5": (
         "SELECT * FROM ts_cv_forecast_by(TABLE(kfolds), 'id', 'ds', 'y', "
         "'Naive', '{\"confidence_level\": 1.5}')", "confidence_level"),
+    # every buffered table function parses its literals in analyze
+    "sql_fill_gaps_by_bad_frequency": (
+        "SELECT * FROM ts_fill_gaps_by(TABLE(kpanel), 'id', 'ds', 'y', "
+        "'bogus')", "invalid frequency"),
+    "sql_cv_folds_by_bad_n_folds": (
+        "SELECT * FROM ts_cv_folds_by(TABLE(kpanel), 'id', 'ds', 'y', "
+        "'x', 5)", "invalid literal for int"),
+    "sql_stats_by_bad_frequency": (
+        "SELECT * FROM ts_stats_by(TABLE(kpanel), 'id', 'ds', 'y', "
+        "'bogus')", "invalid frequency"),
+    "sql_fill_nulls_const_by_bad_value": (
+        "SELECT * FROM ts_fill_nulls_const_by(TABLE(kpanel), 'id', 'ds', "
+        "'y', 'abc')", "could not convert string to float"),
+    "sql_detrend_by_fractional_degree": (
+        "SELECT * FROM ts_detrend_by(TABLE(kpanel), 'id', 'ds', 'y', "
+        "'polynomial', '2.5')", "invalid literal for int"),
 }
 
 
@@ -113,6 +130,25 @@ def test_bad_argument_raises_before_any_job(spark, kpanel, case):
             assert "TABLE_VALUED_FUNCTION_FAILED_TO_ANALYZE_IN_PYTHON" in text
             assert "ValueError" in text and msg in text
     assert not started, f"{case} started Spark jobs {sorted(started)}"
+
+
+@pytest.mark.parametrize("model,params", [
+    ("Naive", None), ("SES", {"alpha": 0.3}), ("Theta", None)])
+def test_forecast_dates_keep_the_input_timestamp_type(spark, kpanel, model,
+                                                      params):
+    """A TIMESTAMP ds forecasts TIMESTAMP dates on every path, also when
+    the session's default timestamp type is TIMESTAMP_NTZ: the SQL fast
+    path (Naive, SES) spells the type it casts to, like the Python path
+    (Theta) declares the input's type."""
+    key = "spark.sql.timestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "TIMESTAMP_NTZ")
+    try:
+        out = ts_forecast_by(kpanel, "id", "ds", "y", model, 3, "1d", params)
+        assert isinstance(out.schema["ds"].dataType, T.TimestampType)
+        assert out.count() == 6
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_forecast_spec_validates():

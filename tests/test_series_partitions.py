@@ -21,7 +21,8 @@ from anofox_forecast_spark.operators.conformal import ts_conformal_by
 from anofox_forecast_spark.operators.cv import (ts_cv_folds_by,
                                                 ts_cv_forecast_by)
 from anofox_forecast_spark.operators.forecast import ts_forecast_by
-from anofox_forecast_spark.operators.stats import ts_stats_by
+from anofox_forecast_spark.operators.stats import (ts_data_quality,
+                                                   ts_stats_by)
 
 _SUPPLIERS, _DAYS = 24, 60
 
@@ -75,6 +76,7 @@ _REQUESTS = {
         p, "id", "ds", "y", "SES", 7, "1d", {"alpha": 0.3}),
     "cv_forecast": lambda p: ts_cv_forecast_by(
         ts_cv_folds_by(p, "id", "ds", "y", 3, 7), "id", "ds", "y", "Naive"),
+    "data_quality": lambda p: ts_data_quality(p, "id", "ds", "y"),
 }
 
 
@@ -128,6 +130,8 @@ _SWEEP = {
         ts_cv_folds_by(p, "id", "ds", "y", 2, 5), "id", "ds", "y", "Theta"),
         ["id", "fold_id", "ds"], True),
     "stats": (lambda p: ts_stats_by(p, "id", "ds", "y", "1d"), ["id"], False),
+    "data_quality": (lambda p: ts_data_quality(p, "id", "ds", "y"),
+                     ["unique_id"], True),
     "conformal": (_conformal, ["id"], False),
 }
 
