@@ -8,9 +8,10 @@ BATCH: ``repartition(keys) + sortWithinPartitions(keys, order) +
 mapInPandas`` with carry-buffer stitching for groups that span adjacent
 batches (the sort guarantees each group is contiguous within its partition).
 
-Used by every per-series UDF operator (forecast, stats, features, detect,
-cv-forecast). Results are byte-identical to the grouped-map formulation —
-same rows per group — only the batching changes.
+Used by every per-series UDF operator (forecast, stats, data quality,
+features, detect, cv-forecast, bootstrap). Results are byte-identical to
+the grouped-map formulation — same rows per group — only the batching
+changes.
 
 The module is also the one home of the partition policy for per-series
 stages (``series_partitions``): one task per core, with an explicit
@@ -26,6 +27,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def _same(kv: np.ndarray) -> np.ndarray:
+    """``kv[i + 1]`` equals ``kv[i]``, a NULL key (None, NaN, NaT) equal
+    to another NULL key: one group per key, NULL included, as
+    ``groupBy`` makes them."""
+    a, b = kv[1:], kv[:-1]
+    eq = np.asarray(a == b, dtype=bool)
+    return eq | (pd.isna(a) & pd.isna(b))
 
 
 def series_partitions(spark: SparkSession) -> int:
@@ -74,6 +84,9 @@ def batched_grouped_map(
     """Apply ``one_group(key_tuple, sorted_pdf)`` to every distinct
     ``key_cols`` group of ``df``; ``None`` skips the group (error
     isolation). Rows inside each group arrive sorted by ``order_col``.
+    The groups of a batch are its runs of equal keys, found with numpy
+    (no ``DataFrame.groupby``); NULL keys form one group, as in
+    ``groupBy``.
 
     ``one_group`` may return either a ``pd.DataFrame`` or — the cheap
     columnar form (r13) — a tuple of per-column sequences in ``schema``
@@ -100,6 +113,33 @@ def batched_grouped_map(
                 cols[nm] = flat
         return pd.DataFrame(cols)
 
+    def emit(pdf: pd.DataFrame, starts: list[int]) -> Iterator[pd.DataFrame]:
+        """``one_group`` over the key runs of ``pdf`` that begin at
+        ``starts``, the last one ending at the frame's end."""
+        # keys boxed as pandas' groupby boxes them (int, str, Timestamp)
+        kts = zip(*[pdf[k].iloc[starts].tolist() for k in keys])
+        out = []
+        tup = []
+        for kt, s, e in zip(kts, starts, starts[1:] + [len(pdf)]):
+            r = one_group(kt, pdf.iloc[s:e])
+            if r is None:
+                continue
+            if isinstance(r, tuple):
+                tup.append(r)
+            elif len(r):
+                out.append(r)
+        if tup:
+            # skip all-empty assemblies (e.g. every group returned
+            # zero-length columns at h=0) — the legacy DataFrame
+            # path's len(r) guard never yielded empties, and an
+            # empty object-dtype frame would lean on Arrow's
+            # null-array coercion against the typed schema
+            adf = assemble(tup)
+            if len(adf):
+                yield adf
+        if out:
+            yield pd.concat(out, ignore_index=True)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
         for pdf in batches:
@@ -108,47 +148,17 @@ def batched_grouped_map(
             if not len(pdf):
                 carry = None
                 continue
+            new = np.zeros(len(pdf), dtype=bool)
+            new[0] = True
+            for k in keys:
+                new[1:] |= ~_same(pdf[k].to_numpy())
+            starts = np.flatnonzero(new).tolist()
             # hold back the trailing run — it may continue in the next batch
-            kvals = [pdf[k].to_numpy() for k in keys]
-            last = tuple(kv[-1] for kv in kvals)
-            boundary = len(pdf)
-            while boundary > 0 and all(
-                    kv[boundary - 1] == lv for kv, lv in zip(kvals, last)):
-                boundary -= 1
-            carry = pdf.iloc[boundary:]
-            done = pdf.iloc[:boundary]
-            if len(done):
-                out = []
-                tup = []
-                for kt, g in done.groupby(keys, sort=False):
-                    kt = kt if isinstance(kt, tuple) else (kt,)
-                    r = one_group(kt, g)
-                    if r is None:
-                        continue
-                    if isinstance(r, tuple):
-                        tup.append(r)
-                    elif len(r):
-                        out.append(r)
-                if tup:
-                    # skip all-empty assemblies (e.g. every group returned
-                    # zero-length columns at h=0) — the legacy DataFrame
-                    # path's len(r) guard never yielded empties, and an
-                    # empty object-dtype frame would lean on Arrow's
-                    # null-array coercion against the typed schema
-                    adf = assemble(tup)
-                    if len(adf):
-                        yield adf
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+            carry = pdf.iloc[starts[-1]:]
+            if len(starts) > 1:
+                yield from emit(pdf.iloc[:starts[-1]], starts[:-1])
         if carry is not None and len(carry):
-            kt = tuple(carry[k].iloc[0] for k in keys)
-            r = one_group(kt, carry)
-            if isinstance(r, tuple):
-                adf = assemble([r])
-                if len(adf):
-                    yield adf
-            elif r is not None and len(r):
-                yield r
+            yield from emit(carry, [0])
 
     # one task per core (see series_partitions); results are
     # partitioning-invariant (pinned by tests)

@@ -17,7 +17,7 @@ module recreates that surface on Spark:
 - the per-series computation behind a UDTF is the DataFrame operator's own
   kernel (``operators/``): the forecast kernel (``forecast_spec``,
   ``fit_one``, ``forecast_block``), the detection ``SeriesOp`` kernels
-  (``operators/detect.py``), ``compute_series_stats``, ``data_quality``,
+  (``operators/detect.py``), ``series_stats``, ``data_quality``,
   ``feature_columns``. Only the UDTFs whose DataFrame operator is a
   Catalyst plan — the prep family, the ``_by`` metrics, conformal, CV
   layout, hierarchy, OLS — replay that plan in Python here, because a UDTF
@@ -136,7 +136,10 @@ def _column_rows(lead: tuple, cols):
 
 def _parse_ts(s):
     import pandas as _pd
-    return _pd.Timestamp(str(s)).to_pydatetime()
+    try:
+        return _pd.Timestamp(str(s)).to_pydatetime()
+    except ValueError as e:  # pandas' DateParseError names no ValueError
+        raise ValueError(f"invalid timestamp {s!r}: {e}") from None
 
 
 # ---------------------------------------------------------------------------
@@ -528,10 +531,8 @@ _DETECTION_UDTFS = {
 
 class StatsUDTF(_SeriesUDTF):
     """``ts_stats_by(TABLE(t), group_col, ds_col, y_col, frequency)`` — SQL
-    form of the 36-column statistics operator, through the per-series
-    kernel ``compute_series_stats`` (the DataFrame operator computes 19 of
-    the statistics as JVM aggregates and the rest with the same
-    ``_rest_stats``)."""
+    form of the 36-column statistics operator, through its per-series
+    kernel ``stats.series_stats``."""
 
     @staticmethod
     def analyze(table, group_col, ds_col, y_col, frequency):
@@ -544,23 +545,10 @@ class StatsUDTF(_SeriesUDTF):
             (g, ds_col.value, y_col.value, freq), by=g, order=ds_col.value)
 
     def emit(self, rows):
-        from ..operators.stats import (STATS_FIELDS, compute_series_stats,
-                                       dates_us)
+        from ..operators.stats import series_stats
         g, d, y, freq = self.p
-        st = compute_series_stats(_nan_y(rows, y), dates_us(_ds(rows, d)),
-                                  freq)
-
-        def plain(v, typ):
-            if v is None:
-                return None
-            if isinstance(typ, T.LongType):
-                return int(v)
-            if isinstance(typ, T.BooleanType):
-                return bool(v)
-            return float(v)
-
-        yield tuple([rows[0][g]]
-                    + [plain(st[name], typ) for name, typ in STATS_FIELDS])
+        yield from _column_rows((rows[0][g],), series_stats(
+            _ds(rows, d), _nan_y(rows, y), freq))
 
 
 class DataQualityUDTF(_SeriesUDTF):
@@ -1803,16 +1791,17 @@ class QualityReportUDTF:
 
     @staticmethod
     def analyze(table, min_length):
-        return AnalyzeResult(schema=T.StructType(
+        return _result(
             [_f(n, T.LongType()) for n in
              ("n_passed", "n_nan_issues", "n_missing_issues", "n_constant",
-              "n_total")]), withSinglePartition=True)
+              "n_total")], _int(min_length.value))
 
-    def __init__(self):
+    def __init__(self, analyze_result: _Analysis):
+        self._min_length = analyze_result.parsed
         self._c = [0, 0, 0, 0, 0]
 
-    def eval(self, row, min_length):
-        ml = int(min_length)
+    def eval(self, row, *_):
+        ml = self._min_length
         nan_, nulls = row["n_nan"] or 0, row["n_nulls"] or 0
         const = bool(row["is_constant"])
         if (row["length"] or 0) >= ml and nulls == 0 and nan_ == 0 \
@@ -1901,28 +1890,31 @@ class ValidateTimestampsUDTF:
     '2024-01-01,2024-01-02')`` (mirror of prep.ts_validate_timestamps_by)."""
 
     @staticmethod
+    def _expected(expected) -> list:
+        return [_trunc_second(_parse_ts(t))
+                for t in str(expected.value).split(",") if t.strip()]
+
+    @staticmethod
     def analyze(table, group_col, ds_col, expected):
         g = group_col.value
-        return AnalyzeResult(schema=T.StructType([
+        return _result([
             _f(g, table.dataType[g].dataType),
             _f("is_valid", T.BooleanType()),
             _f("n_expected", T.LongType()), _f("n_found", T.LongType()),
             _f("n_missing", T.LongType()),
-            _f("missing_timestamps", T.ArrayType(T.TimestampType()))]),
-            partitionBy=[PartitioningColumn(g)])
+            _f("missing_timestamps", T.ArrayType(T.TimestampType()))],
+            ValidateTimestampsUDTF._expected(expected), by=g)
 
-    def __init__(self):
+    def __init__(self, analyze_result: _Analysis):
+        self._exp = analyze_result.parsed
         self._per_group: dict = {}
 
-    def eval(self, row, group_col, ds_col, expected):
-        self._args = (ds_col, str(expected))
+    def eval(self, row, group_col, ds_col, *_):
         self._per_group.setdefault(row[group_col], set()).add(
             _trunc_second(row[ds_col]))
 
     def _verdicts(self):
-        ds_col, expected = self._args
-        exp = [_trunc_second(_parse_ts(t)) for t in expected.split(",")
-               if t.strip()]
+        exp = self._exp
         for g, found in self._per_group.items():
             missing = sorted(t for t in exp if t not in found)
             yield (g, len(missing) == 0, len(exp), len(exp) - len(missing),
@@ -1938,12 +1930,12 @@ class ValidateTimestampsSummaryUDTF(ValidateTimestampsUDTF):
     @staticmethod
     def analyze(table, group_col, ds_col, expected):
         gt = table.dataType[group_col.value].dataType
-        return AnalyzeResult(schema=T.StructType([
+        return _result([
             _f("all_valid", T.BooleanType()), _f("n_groups", T.LongType()),
             _f("n_valid_groups", T.LongType()),
             _f("n_invalid_groups", T.LongType()),
-            _f("invalid_groups", T.ArrayType(gt))]),
-            withSinglePartition=True)
+            _f("invalid_groups", T.ArrayType(gt))],
+            ValidateTimestampsUDTF._expected(expected))
 
     def terminate(self):
         if not self._per_group:
@@ -1988,22 +1980,23 @@ class ConformalCalibrateUDTF:
 
     @staticmethod
     def analyze(table, actual, forecast, *rest):
-        return AnalyzeResult(schema=T.StructType([
+        return _result([
             _f("conformity_score", T.DoubleType()),
             _f("coverage", T.DoubleType()),
-            _f("n_residuals", T.LongType())]), withSinglePartition=True)
+            _f("n_residuals", T.LongType())],
+            float(rest[0].value) if rest else 0.1)
 
-    def __init__(self):
+    def __init__(self, analyze_result: _Analysis):
+        self._alpha = analyze_result.parsed
         self._res: list = []
 
-    def eval(self, row, actual, forecast, *rest):
-        self._alpha = float(rest[0]) if rest else 0.1
+    def eval(self, row, actual, forecast, *_):
         a, f = row[actual], row[forecast]
         if a is not None and f is not None:
             self._res.append(float(a) - float(f))
 
     def terminate(self):
-        alpha = getattr(self, "_alpha", 0.1)
+        alpha = self._alpha
         score = _corrected_quantile(np.sort(np.abs(self._res)), alpha) \
             if self._res else None
         yield (score, 1.0 - alpha, len(self._res))
@@ -2018,30 +2011,32 @@ class CvSplitFoldsUDTF:
     def analyze(table, group_col, ds_col, cutoffs, horizon, frequency, *rest):
         TS = T.TimestampType()
         L = T.LongType()
-        return AnalyzeResult(schema=T.StructType([
+        extra = [_int(a.value) for a in rest[:2]]
+        gap, embargo = (extra + [0, 0])[:2]
+        cuts = sorted(_parse_ts(c) for c in str(cutoffs.value).split(",")
+                      if c.strip())
+        return _result([
             _f("fold_id", L), _f("train_start", TS), _f("train_end", TS),
             _f("test_start", TS), _f("test_end", TS), _f("horizon", L),
-            _f("gap", L), _f("embargo", L)]), withSinglePartition=True)
+            _f("gap", L), _f("embargo", L)],
+            (cuts, _int(horizon.value), parse_frequency(str(frequency.value)),
+             gap, embargo))
 
-    def __init__(self):
+    def __init__(self, analyze_result: _Analysis):
+        self.p = analyze_result.parsed
         self._min = None
+        self._seen = False
 
-    def eval(self, row, group_col, ds_col, cutoffs, horizon, frequency,
-             *rest):
-        self._args = (str(cutoffs), int(horizon), str(frequency),
-                      int(rest[0]) if rest else 0,
-                      int(rest[1]) if len(rest) > 1 else 0)
+    def eval(self, row, group_col, ds_col, *_):
+        self._seen = True
         d = row[ds_col]
         if d is not None and (self._min is None or d < self._min):
             self._min = d
 
     def terminate(self):
-        if not hasattr(self, "_args"):
+        if not self._seen:
             return
-        from ..frequency import parse_frequency
-        cutoffs, h, frequency, gap, embargo = self._args
-        freq = parse_frequency(frequency)
-        cuts = sorted(_parse_ts(c) for c in cutoffs.split(",") if c.strip())
+        cuts, h, freq, gap, embargo = self.p
         for fold_id, te in enumerate(cuts):
             ts_, te_ = _fold_bounds(te, h, gap, freq)
             yield (fold_id, self._min, te, ts_, te_, h, gap, embargo)

@@ -447,11 +447,11 @@ def ts_bootstrap_quantiles(df: DataFrame, group_col: str, resid_col: str,
         T.StructField("values", T.ArrayType(T.DoubleType())),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            resid = np.asarray(row[resid_col], dtype=float)
-            fc = np.asarray(row[forecast_col], dtype=float)
+    def fn(key: tuple, pdf: pd.DataFrame):
+        qcol, vals = [], []
+        for resid, fc in zip(pdf[resid_col], pdf[forecast_col]):
+            resid = np.asarray(resid, dtype=float)
+            fc = np.asarray(fc, dtype=float)
             if len(resid) == 0 or len(fc) == 0:
                 continue
             h = len(fc)
@@ -466,14 +466,12 @@ def ts_bootstrap_quantiles(df: DataFrame, group_col: str, resid_col: str,
                                    replace=True)
             paths = fc[None, :] + np.cumsum(steps, axis=1)
             for q in qs:
-                out.append({group_col: key[0], "quantile": q,
-                            "values": np.quantile(paths, q, axis=0).tolist()})
-        if not out:
-            return pd.DataFrame({c.name: pd.Series(dtype="object")
-                                 for c in schema})
-        return pd.DataFrame(out)
+                qcol.append(q)
+                vals.append(np.quantile(paths, q, axis=0).tolist())
+        return ([key[0]] * len(qcol), qcol, vals) if qcol else None
 
-    return df.groupBy(group_col).applyInPandas(fn, schema)
+    from ..functions.batched import batched_grouped_map
+    return batched_grouped_map(df, [group_col], group_col, schema, fn)
 
 
 def ts_adaptive_conformal_by(df: DataFrame, group_col: str, ds_col: str,

@@ -18,8 +18,8 @@ Parity targets:
 
 Spark shape: ``groupBy(id).cogroup(future.groupBy(id)).applyInPandas`` for
 exog (the shuffle co-locates each series' history with its future regressors
-— one exchange per side, no driver involvement); plain ``applyInPandas`` for
-inspect/explain.
+— one exchange per side, no driver involvement); ``batched_grouped_map``
+for inspect/explain.
 """
 
 from __future__ import annotations

@@ -10,11 +10,13 @@ Parity targets:
 - ``ts_data_quality`` (+``_by``/``_summary``) — 4-dimension quality scores
   (``quality.rs:66-280``; macro ``ts_macros.cpp:124-173``).
 
-``ts_stats_by`` runs as one Arrow-batched pandas UDF per series (exact parity
-with the reference's per-series array computation); the rollups are plain
-Spark aggregations. The numpy helpers below re-derive the reference formulas
-— bias-corrected G1/G2 moments, Hill tail index with k=√n, histogram entropy,
-rolling-mean stability — from the cited lines.
+``ts_stats_by`` and its SQL form run one per-series kernel,
+``series_stats``: every statistic of a series in one pass over its arrays,
+as the reference computes them. The DataFrame operator runs it through
+``batched_grouped_map``; the rollups are plain Spark aggregations. The
+numpy helpers below re-derive the reference formulas — bias-corrected
+G1/G2 moments, Hill tail index with k=√n, histogram entropy, rolling-mean
+stability — from the cited lines.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ STATS_FIELDS = [
     ("entropy", T.DoubleType()), ("stability", T.DoubleType()),
     ("expected_length", T.LongType()), ("n_gaps", T.LongType()),
 ]
+_STATS_NAMES = [n for n, _ in STATS_FIELDS]
 
 
 # ---------------------------------------------------------------------------
@@ -70,18 +73,14 @@ def _percentile(sorted_v: np.ndarray, p: float) -> float:
     return float(sorted_v[lo] * (1 - frac) + sorted_v[hi] * frac)
 
 
-def _autocorr(v: np.ndarray, lag: int) -> float:
-    """ACF with full-series denominator (stats.rs:503-527)."""
-    n = len(v)
-    if n <= lag:
+def _acf(dev: np.ndarray, ss: float, lag: int) -> float:
+    """ACF with full-series denominator (stats.rs:503-527), from the
+    deviations from the mean and their sum of squares."""
+    if len(dev) <= lag:
         return float("nan")
-    mean = v.mean()
-    d = v - mean
-    denom = float(np.sum(d * d))
-    if abs(denom) < EPS:
+    if abs(ss) < EPS:
         return 0.0
-    num = float(np.sum(d[lag:] * d[:-lag]))
-    return num / denom
+    return float((dev[lag:] * dev[:-lag]).sum()) / ss
 
 
 def _hill(v: np.ndarray) -> float:
@@ -102,11 +101,11 @@ def _hill(v: np.ndarray) -> float:
     return 1.0 / h if h > EPS else float("nan")
 
 
-def _approx_entropy(v: np.ndarray) -> float:
-    """Histogram entropy over 10 bins (stats.rs:571-604)."""
+def _approx_entropy(v: np.ndarray, lo: float, hi: float) -> float:
+    """Histogram entropy over 10 bins between the series' min and max
+    (stats.rs:571-604)."""
     if len(v) < 10:
         return float("nan")
-    lo, hi = float(v.min()), float(v.max())
     rng = hi - lo
     if abs(rng) < EPS:
         return 0.0
@@ -141,11 +140,10 @@ def _longest_true_run(mask: np.ndarray) -> int:
 
 
 def _plateau(v: np.ndarray) -> int:
-    """Longest run of bitwise-equal values (stats.rs:660-682)."""
+    """Longest run of equal values (stats.rs:660-682); ``v`` has no NaN."""
     if len(v) == 0:
         return 0
-    same = (v[1:] == v[:-1]) | (np.isnan(v[1:]) & np.isnan(v[:-1]))
-    return _longest_true_run(same) + 1
+    return _longest_true_run(v[1:] == v[:-1]) + 1
 
 
 def _plateau_nonzero(v: np.ndarray) -> int:
@@ -161,307 +159,201 @@ def _plateau_nonzero(v: np.ndarray) -> int:
     return 1 if (v != 0.0).any() else 0
 
 
-def _strengths(v: np.ndarray):
+def _strengths(dev: np.ndarray, ss: float):
     """Trend = |r| of linear fit; seasonality = max |ACF| at lags 2/4/7/12
-    (stats.rs:530-568)."""
-    if len(v) < 4:
+    (stats.rs:530-568), from the deviations from the mean and their sum
+    of squares."""
+    n = len(dev)
+    if n < 4:
         return 0.0, 0.0
-    n = len(v)
-    x = np.arange(n, dtype=float)
-    xm, ym = x.mean(), v.mean()
-    ss_xy = float(np.sum((x - xm) * (v - ym)))
-    ss_xx = float(np.sum((x - xm) ** 2))
-    ss_yy = float(np.sum((v - ym) ** 2))
-    if abs(ss_xx) > EPS and abs(ss_yy) > EPS:
-        trend = min(max(math.sqrt(ss_xy ** 2 / (ss_xx * ss_yy)), 0.0), 1.0)
+    xd = np.arange(n, dtype=float) - (n - 1) / 2  # x minus its mean
+    ss_xy = float((xd * dev).sum())
+    ss_xx = float((xd * xd).sum())
+    if abs(ss_xx) > EPS and abs(ss) > EPS:
+        trend = min(max(math.sqrt(ss_xy ** 2 / (ss_xx * ss)), 0.0), 1.0)
     else:
         trend = 0.0
-    acfs = [abs(_autocorr(v, l)) for l in (2, 4, 7, 12)]
+    acfs = [abs(_acf(dev, ss, l)) for l in (2, 4, 7, 12)]
     seas = max([a for a in acfs if math.isfinite(a)], default=0.0)
     return trend, min(max(seas, 0.0), 1.0)
 
 
-def compute_series_stats(y_raw: np.ndarray, dates_us: np.ndarray | None,
-                         freq: Frequency | None) -> dict:
-    """All 36 statistics for one series (stats.rs:106-312): the 19 moment
-    statistics here, the 17 order-dependent ones from ``_rest_stats``."""
-    length = len(y_raw)
-    out = {name: None for name, _ in STATS_FIELDS}
-    out["length"] = length
-    if length == 0:
-        return out
-    isnull = pd.isna(y_raw)
-    # pandas merges NULL and NaN into NaN; the reference distinguishes — we
-    # report all missing as n_nulls and n_nan = 0 (Arrow has no NaN/NULL split
-    # once it crosses the boundary; documented deviation).
-    v = np.asarray(y_raw[~isnull], dtype=float)
-    out.update(n_nulls=int(isnull.sum()), n_nan=0)
-    n_valid = len(v)
-    if n_valid == 0:
-        return out
-    out.update(_rest_stats(y_raw, dates_us, freq))
-    out["n_zeros"] = int((v == 0.0).sum())
-    out["n_positive"] = int((v > 0.0).sum())
-    out["n_negative"] = int((v < 0.0).sum())
-    out["is_constant"] = bool(out["n_unique_values"] == 1)
-
-    s = float(v.sum())
-    mean = s / n_valid
-    out["sum"] = s
-    out["mean"] = mean
-    out["min"] = float(v.min())
-    out["max"] = float(v.max())
-    out["range"] = out["max"] - out["min"]
-    variance = float(np.sum((v - mean) ** 2) / (n_valid - 1)) if n_valid > 1 else 0.0
-    std = math.sqrt(variance)
-    out["variance"] = variance
-    out["std_dev"] = std
-    out["coef_variation"] = std / abs(mean) if abs(mean) > EPS else float("nan")
-    out["iqr"] = out["q3"] - out["q1"]
-
-    if n_valid > 2 and std > EPS:
-        n = float(n_valid)
-        m3 = float(np.sum((v - mean) ** 3)) / n
-        out["skewness"] = m3 / std ** 3 * math.sqrt(n * (n - 1)) / (n - 2)
+def _ds_micros(ds) -> tuple[np.ndarray, np.ndarray]:
+    """(NULL mask, int64 values of the non-NULL rows) of a ``ds`` array:
+    epoch microseconds for dates and timestamps, the values themselves for
+    integer dates. numpy only — ``pd.to_datetime`` costs about 0.75 ms a
+    call, more than all 36 statistics of a 180-point series."""
+    a = np.asarray(ds)
+    if a.dtype == object:
+        # None, NaN and NaT are the values not equal to themselves
+        null = np.array([x is None or x != x for x in a], dtype=bool)
+        vals = a[~null].tolist()
+        a = np.array(vals) if vals else np.zeros(0, np.int64)
+        if a.dtype.kind not in "iuf":
+            a = a.astype("datetime64[us]")
+    elif a.dtype.kind == "M":
+        null = np.isnat(a)
+        a = a[~null].astype("datetime64[us]")
+    elif a.dtype.kind == "f":  # an integer column with NULLs
+        null = np.isnan(a)
+        a = a[~null]
     else:
-        out["skewness"] = float("nan")
-    if n_valid > 3 and std > EPS:
-        n = float(n_valid)
-        m4 = float(np.sum((v - mean) ** 4)) / n
-        g2 = m4 / std ** 4 - 3.0
-        out["kurtosis"] = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * g2 + 6.0)
-    else:
-        out["kurtosis"] = float("nan")
-    if (n_valid > 3 and math.isfinite(out["kurtosis"])
-            and math.isfinite(out["skewness"])):
-        out["bimodality_coef"] = (out["skewness"] ** 2 + 1.0) / (out["kurtosis"] + 3.0)
-    else:
-        out["bimodality_coef"] = float("nan")
-    return out
+        null = np.zeros(len(a), dtype=bool)
+    return null, a.astype(np.int64)
 
 
 def dates_us(ds) -> np.ndarray:
     """The non-NULL ``ds`` values as int64: epoch microseconds for dates
     and timestamps, the values themselves for integer dates."""
-    s = pd.Series(ds).dropna().infer_objects()
-    if s.dtype.kind in "iuf":
-        return s.to_numpy().astype("int64")
-    return pd.to_datetime(s).astype("int64").to_numpy() // 1000
+    return _ds_micros(ds)[1]
+
+
+def _gap_stats(d: np.ndarray, freq: Frequency | None) -> tuple[int, int]:
+    """(expected_length, n_gaps) of the non-NULL dates ``d``."""
+    if freq is None or len(d) < 2:
+        return len(d), 0
+    d = np.sort(d)
+    if freq.kind == "month":
+        # calendar months since the epoch, counted in years, quarters or
+        # months as the frequency steps
+        months = d.astype("datetime64[us]").astype("datetime64[M]") \
+            .astype(np.int64)
+        units = months // (12 if freq.n % 12 == 0
+                           else 3 if freq.n % 3 == 0 else 1)
+        return (int(units[-1] - units[0] + 1),
+                int(np.count_nonzero(np.diff(units) > 1)))
+    step = freq.n if freq.kind == "int" else freq.n * 1_000_000
+    return (int((d[-1] - d[0]) // step + 1),
+            int(np.count_nonzero(np.diff(d) > step * 1.5)))
+
+
+def _value_stats(y: np.ndarray, v: np.ndarray) -> dict:
+    """The statistics of the valid values ``v`` of the ordered series
+    ``y`` (NaN = missing): one sort serves the order statistics, one
+    deviation array the moments, the ACF and the trend."""
+    n = len(v)
+    sv = np.sort(v)
+    lo, hi = float(sv[0]), float(sv[-1])
+    total = float(v.sum())
+    mean = total / n
+    dev = v - mean
+    dev2 = dev * dev
+    ss = float(dev2.sum())
+    variance = ss / (n - 1) if n > 1 else 0.0
+    std = math.sqrt(variance)
+    nan = float("nan")
+    skew = kurt = bimod = nan
+    if n > 2 and std > EPS:
+        m3 = float((dev2 * dev).sum()) / n
+        skew = m3 / std ** 3 * math.sqrt(n * (n - 1)) / (n - 2)
+    if n > 3 and std > EPS:
+        g2 = float((dev2 * dev2).sum()) / n / std ** 4 - 3.0
+        kurt = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * g2 + 6.0)
+    if n > 3 and math.isfinite(kurt) and math.isfinite(skew):
+        # IEEE division, as the reference's f64: a kurtosis of exactly -3
+        # gives inf rather than an error
+        bimod = ((skew ** 2 + 1.0) / (kurt + 3.0) if kurt != -3.0
+                 else math.inf)
+    neg = int(np.searchsorted(sv, 0.0, "left"))
+    non_pos = int(np.searchsorted(sv, 0.0, "right"))
+    n_unique = int(np.count_nonzero(np.diff(sv))) + 1
+    zero = y == 0.0  # a missing value ends a zero run
+    trim = int(n * 0.1)
+    core = sv[trim: n - trim]
+    q1, q3 = _percentile(sv, 0.25), _percentile(sv, 0.75)
+    trend, seas = _strengths(dev, ss)
+    return {
+        "n_zeros": non_pos - neg, "n_positive": n - non_pos,
+        "n_negative": neg, "n_unique_values": n_unique,
+        "is_constant": n_unique == 1,
+        "n_zeros_start": len(y) if zero.all() else int(np.argmin(zero)),
+        "n_zeros_end": len(y) if zero.all() else int(np.argmin(zero[::-1])),
+        "plateau_size": _plateau(v),
+        "plateau_size_nonzero": _plateau_nonzero(v),
+        "mean": mean, "median": _percentile(sv, 0.5), "std_dev": std,
+        "variance": variance, "min": lo, "max": hi, "range": hi - lo,
+        "sum": total, "skewness": skew, "kurtosis": kurt,
+        "tail_index": _hill(v), "bimodality_coef": bimod,
+        "trimmed_mean": float(core.mean()) if len(core) else mean,
+        "coef_variation": std / abs(mean) if abs(mean) > EPS else nan,
+        "q1": q1, "q3": q3, "iqr": q3 - q1,
+        "autocorr_lag1": _acf(dev, ss, 1), "trend_strength": trend,
+        "seasonality_strength": seas, "entropy": _approx_entropy(v, lo, hi),
+        "stability": _stability(v),
+    }
+
+
+def series_stats(ds, y: np.ndarray, freq: Frequency | None) -> tuple:
+    """The ``STATS_FIELDS`` columns of one series (stats.rs:106-312), each
+    a one-element list: the kernel of ``ts_stats_by`` and of its SQL form.
+
+    ``y`` is float with NaN for a missing value (NULL and NaN both count
+    as ``n_nulls``; ``n_nan`` is 0, as pandas and Arrow do not keep them
+    apart). Rows come ordered by ``ds``; rows that share a ds, the NULL ds
+    among them, are put in the order ``sort_array(struct(ds, y))`` gives
+    (missing y first, then by value), so the order-dependent statistics do
+    not depend on how the engine broke the tie. NULL-ds rows count in
+    ``length``; the gap statistics use the valid dates only."""
+    y = np.asarray(y, dtype=float)
+    null_ds, d = _ds_micros(ds)
+    k = int(np.count_nonzero(null_ds))
+    if k > 1 or (k and not null_ds[:k].all()) or (
+            len(d) > 1 and not (np.diff(d) > 0).all()):
+        full = np.zeros(len(y), np.int64)
+        full[~null_ds] = d
+        missing = np.isnan(y)
+        y = y[np.lexsort((np.where(missing, 0.0, y), ~missing, full,
+                          ~null_ds))]
+    out = dict.fromkeys(_STATS_NAMES)
+    v = y[~np.isnan(y)]
+    out.update(length=len(y), n_nulls=len(y) - len(v), n_nan=0)
+    if len(v):
+        out.update(_value_stats(y, v))
+        out["expected_length"], out["n_gaps"] = _gap_stats(d, freq)
+    return tuple([out[name]] for name in _STATS_NAMES)
 
 
 # ---------------------------------------------------------------------------
 # Operators
 # ---------------------------------------------------------------------------
 
-def _rest_stats(y: np.ndarray, dates_us: np.ndarray | None,
-                freq: Frequency | None) -> dict:
-    """The 17 order/sort-dependent statistics that stay in Python:
-    percentiles + distinct count (one np.sort — cheaper than the two-phase
-    expand a native countDistinct/percentile forces through the aggregate),
-    leading/trailing zero runs, plateaus, Hill tail, trimmed mean, lag-1 ACF,
-    trend/seasonality strengths, entropy, stability, expected_length/n_gaps.
-    Shared by ``compute_series_stats`` and the pushed-down path, which
-    computes here only what the JVM can't do cheaply (stats.rs:312-800)."""
-    out = {k: None for k in _REST_KEYS}
-    length = len(y)
-    if length == 0:
-        return out
-    isnull = pd.isna(y)
-    v = np.asarray(y[~isnull], dtype=float)
-    if len(v) == 0:
-        return out
-    sv = np.sort(v)
-    out["median"] = _percentile(sv, 0.5)
-    out["q1"] = _percentile(sv, 0.25)
-    out["q3"] = _percentile(sv, 0.75)
-    # distinct count from the sorted array: a native countDistinct would
-    # rewrite the whole aggregate into a two-phase (id, y)-keyed expand —
-    # measured 3.5x slower end-to-end than one sort here
-    out["n_unique_values"] = int((np.diff(sv) != 0).sum() + 1) if len(sv) else 0
-    lead = 0
-    for i in range(length):
-        if not isnull[i] and y[i] == 0.0:
-            lead += 1
-        else:
-            break
-    trail = 0
-    for i in range(length - 1, -1, -1):
-        if not isnull[i] and y[i] == 0.0:
-            trail += 1
-        else:
-            break
-    out["n_zeros_start"] = lead
-    out["n_zeros_end"] = trail
-    out["plateau_size"] = _plateau(v)
-    out["plateau_size_nonzero"] = _plateau_nonzero(v)
-    out["tail_index"] = _hill(v)
-    trim = int(len(v) * 0.1)
-    core = sv[trim: len(v) - trim]
-    out["trimmed_mean"] = float(core.mean()) if len(core) else float(v.mean())
-    out["autocorr_lag1"] = _autocorr(v, 1)
-    out["trend_strength"], out["seasonality_strength"] = _strengths(v)
-    out["entropy"] = _approx_entropy(v)
-    out["stability"] = _stability(v)
-    if dates_us is not None and len(dates_us) >= 2 and freq is not None:
-        d = np.sort(np.asarray(dates_us, dtype="int64"))
-        if freq.kind == "month":
-            dt = pd.to_datetime(d, unit="us")
-            if freq.n % 12 == 0:
-                units = dt.year.to_numpy()
-            elif freq.n % 3 == 0:
-                units = (dt.year * 4 + (dt.month - 1) // 3).to_numpy()
-            else:
-                units = (dt.year * 12 + dt.month).to_numpy()
-            out["expected_length"] = int(units[-1] - units[0] + 1)
-            out["n_gaps"] = int((np.diff(units) > 1).sum())
-        else:
-            fus = (freq.n if freq.kind == "int" else freq.n * 1_000_000)
-            out["expected_length"] = int((d[-1] - d[0]) // fus + 1)
-            out["n_gaps"] = int((np.diff(d) > fus * 1.5).sum())
-    elif dates_us is not None:
-        out["expected_length"] = len(dates_us)
-        out["n_gaps"] = 0
-    return out
-
-
-_REST_KEYS = [
-    "n_unique_values", "median", "q1", "q3",
-    "n_zeros_start", "n_zeros_end", "plateau_size", "plateau_size_nonzero",
-    "tail_index", "trimmed_mean", "autocorr_lag1", "trend_strength",
-    "seasonality_strength", "entropy", "stability", "expected_length",
-    "n_gaps",
-]
-_REST_SCHEMA = T.StructType(
-    [T.StructField(n, t) for n, t in STATS_FIELDS if n in _REST_KEYS])
-
-
 def ts_stats_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                 frequency=None) -> DataFrame:
     """Per-series 36-column statistics table. Output: (<group>, 36 stats).
 
-    Pushed-down hybrid, one shuffle: 19 of the 36 statistics are native JVM
-    aggregates (count/avg/min/max/var_samp/skewness/kurtosis with the
-    reference's bias corrections re-derived from Spark's population moments),
-    evaluated in the same ``groupBy`` that collects the ds-sorted series; the
-    17 order/sort-dependent statistics (percentiles, runs, plateaus, Hill
-    tail, ACF, entropy, stability, gaps) run as ONE Arrow-batched scalar
-    pandas UDF over the pre-aggregated (one-row-per-series) frame — many
-    series per Python call, instead of one ``applyInPandas`` invocation per
-    group. Native countDistinct/percentile are deliberately NOT used: they
-    rewrite the whole aggregate into a two-phase (key, value) expand that
-    measured 3.5x slower than one np.sort in the batched UDF.
-    """
+    One ``batched_grouped_map`` stage over ``series_stats``, the kernel
+    the SQL form ``ts_stats_by(TABLE(...))`` runs too: one pass over each
+    series' arrays, as the reference computes them (stats.rs:106-312).
+    A non-integer ``ds`` is cast to TIMESTAMP, so dates reach the kernel
+    as datetime64. ``length``, ``n_nulls`` and ``n_nan`` are
+    non-nullable; an undefined statistic (a tail index of fewer than 10
+    points, say) is NaN, as in the reference and the SQL form."""
+    from ..functions.batched import batched_grouped_map
     freq = parse_frequency(frequency) if frequency is not None else None
-    gtype = df.schema[group_col].dataType
-    ds_type = df.schema[ds_col].dataType
-    is_int_ds = isinstance(ds_type, (T.IntegerType, T.LongType))
+    key = df.schema[group_col]
+    schema = T.StructType(
+        [T.StructField(group_col, key.dataType, key.nullable)]
+        + [T.StructField(n, t, n not in ("length", "n_nulls", "n_nan"))
+           for n, t in STATS_FIELDS])
+    ds = f"`{ds_col}`"
+    if not isinstance(df.schema[ds_col].dataType,
+                      (T.IntegerType, T.LongType)):
+        ds = f"CAST({ds} AS TIMESTAMP)"
 
-    y0 = F.col(y_col).cast("double")
-    # pandas folds NaN into missing; mirror that JVM-side so every native
-    # aggregate skips NaN exactly like the UDF's pd.isna() mask
-    yv = F.when(F.isnan(y0), F.lit(None).cast("double")).otherwise(y0)
-    ds_us = (F.col(ds_col).cast("long") if is_int_ds
-             else F.unix_micros(F.col(ds_col).cast("timestamp")))
-    pre = df.select(F.col(group_col), ds_us.alias("__ds"), yv.alias("__y"))
+    def one(kt, pdf):
+        return ([kt[0]], *series_stats(pdf[ds_col].to_numpy(),
+                                        pdf[y_col].to_numpy(dtype=float),
+                                        freq))
 
-    n = F.count(F.lit(1))
-    nv = F.count("__y")
-    agg = pre.groupBy(group_col).agg(
-        n.alias("length"), nv.alias("__nv"),
-        F.avg("__y").alias("mean"), F.sum("__y").alias("sum"),
-        F.min("__y").alias("min"), F.max("__y").alias("max"),
-        F.var_samp("__y").alias("__var"), F.stddev_samp("__y").alias("__std"),
-        F.skewness("__y").alias("__g1"), F.kurtosis("__y").alias("__g2"),
-        F.count(F.when(F.col("__y") == 0.0, 1)).alias("__nz"),
-        F.count(F.when(F.col("__y") > 0.0, 1)).alias("__np"),
-        F.count(F.when(F.col("__y") < 0.0, 1)).alias("__nn"),
-        F.sort_array(F.collect_list(F.struct(
-            F.col("__ds"), F.col("__y")))).alias("__series"),
-    )
-
-    @F.pandas_udf(_REST_SCHEMA)
-    def rest_udf(ds_arrs: pd.Series, y_arrs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for ds_a, y_a in zip(ds_arrs, y_arrs):
-            y = np.asarray(y_a, dtype=float)
-            # a NULL ds arrives as NaN (Arrow widens int64+null to float64)
-            # or None; a blind int64 cast would fold it into garbage micros.
-            # Gap stats use only the valid dates, like the old applyInPandas
-            # path tolerated NaT.
-            d = np.asarray(ds_a)
-            if d.dtype == object:
-                d = np.asarray([v for v in d if v is not None],
-                               dtype="int64")
-            elif d.dtype.kind == "f":
-                d = d[~np.isnan(d)].astype("int64")
-            else:
-                d = d.astype("int64")
-            rows.append(_rest_stats(y, d, freq))
-        return pd.DataFrame(rows, columns=_REST_KEYS)
-
-    nvc = F.col("__nv")
-    NAN = F.lit(float("nan"))
-    nz = F.when(nvc > 0, F.col("__nz"))
-    npos = F.when(nvc > 0, F.col("__np"))
-    nneg = F.when(nvc > 0, F.col("__nn"))
-    variance = F.when(nvc > 1, F.col("__var")).when(nvc == 1, F.lit(0.0))
-    std = F.when(nvc > 1, F.col("__std")).when(nvc == 1, F.lit(0.0))
-    nd = nvc.cast("double")
-    # reference skewness = m3/s^3 * sqrt(n(n-1))/(n-2) with s = SAMPLE std;
-    # Spark's skewness() is the population g1 = m3/m2^1.5, and
-    # (m2/s^2) = (n-1)/n, so ref = g1 * (n-1)^2 / (n * (n-2))
-    skew = F.when((nvc > 2) & (F.col("__std") > EPS),
-                  F.col("__g1") * (nd - 1) * (nd - 1) / (nd * (nd - 2)))
-    skew = skew.when(nvc > 0, NAN)
-    # reference kurtosis = (n-1)/((n-2)(n-3)) * ((n+1)*g2' + 6) with
-    # g2' = m4/s^4 - 3 = (g2_spark + 3) * ((n-1)/n)^2 - 3
-    g2p = ((F.col("__g2") + 3.0) * ((nd - 1) / nd) * ((nd - 1) / nd) - 3.0)
-    kurt = F.when((nvc > 3) & (F.col("__std") > EPS),
-                  (nd - 1) / ((nd - 2) * (nd - 3)) * ((nd + 1) * g2p + 6.0))
-    kurt = kurt.when(nvc > 0, NAN)
-    finite = lambda c: ~F.isnan(c) & (F.abs(c) != float("inf"))  # noqa: E731
-    bimod = F.when((nvc > 3) & finite(kurt) & finite(skew),
-                   (skew * skew + 1.0) / (kurt + 3.0))
-    bimod = bimod.when(nvc > 0, NAN)
-    cv = F.when(nvc > 0,
-                F.when(F.abs(F.col("mean")) > EPS, std / F.abs(F.col("mean")))
-                 .otherwise(NAN))
-
-    out = (agg.withColumn("__rest", rest_udf(F.col("__series.__ds"),
-                                             F.col("__series.__y")))
-           .select(
-               F.col(group_col), F.col("length"),
-               (F.col("length") - nvc).alias("n_nulls"),
-               F.lit(0).cast("long").alias("n_nan"),
-               nz.alias("n_zeros"), npos.alias("n_positive"),
-               nneg.alias("n_negative"),
-               F.col("__rest.n_unique_values").alias("n_unique_values"),
-               F.when(nvc > 0, F.col("__rest.n_unique_values") == 1)
-                .alias("is_constant"),
-               F.col("__rest.n_zeros_start").alias("n_zeros_start"),
-               F.col("__rest.n_zeros_end").alias("n_zeros_end"),
-               F.col("__rest.plateau_size").alias("plateau_size"),
-               F.col("__rest.plateau_size_nonzero").alias("plateau_size_nonzero"),
-               F.col("mean"), F.col("__rest.median").alias("median"),
-               std.alias("std_dev"),
-               variance.alias("variance"), F.col("min"), F.col("max"),
-               (F.col("max") - F.col("min")).alias("range"), F.col("sum"),
-               skew.alias("skewness"), kurt.alias("kurtosis"),
-               F.col("__rest.tail_index").alias("tail_index"),
-               bimod.alias("bimodality_coef"),
-               F.col("__rest.trimmed_mean").alias("trimmed_mean"),
-               cv.alias("coef_variation"),
-               F.col("__rest.q1").alias("q1"), F.col("__rest.q3").alias("q3"),
-               (F.col("__rest.q3") - F.col("__rest.q1")).alias("iqr"),
-               F.col("__rest.autocorr_lag1").alias("autocorr_lag1"),
-               F.col("__rest.trend_strength").alias("trend_strength"),
-               F.col("__rest.seasonality_strength").alias("seasonality_strength"),
-               F.col("__rest.entropy").alias("entropy"),
-               F.col("__rest.stability").alias("stability"),
-               F.col("__rest.expected_length").alias("expected_length"),
-               F.col("__rest.n_gaps").alias("n_gaps"),
-           ))
-    return out
+    base = df.selectExpr(f"`{group_col}`", f"{ds} AS `{ds_col}`",
+                         f"CAST(`{y_col}` AS DOUBLE) AS `{y_col}`")
+    out = batched_grouped_map(base, [group_col], ds_col, schema, one)
+    # Arrow turns the kernel's NaN into NULL; only a series without a
+    # valid value has NULL statistics, so give the others their NaN back
+    nan = "IF(length > n_nulls, CAST('NaN' AS DOUBLE), NULL)"
+    return out.selectExpr(f"`{group_col}`", *[
+        f"coalesce(`{n}`, {nan}) AS `{n}`" if isinstance(t, T.DoubleType)
+        else f"`{n}`" for n, t in STATS_FIELDS])
 
 
 # the reference exposes both ts_stats and ts_stats_by with the same grouped
@@ -552,12 +444,12 @@ def _dq_scores(y_raw: np.ndarray, dates_us: np.ndarray | None) -> dict:
     if len(v) < 3:
         behavioral = 0.5
     else:
-        mean = v.mean()
-        var = float(np.mean((v - mean) ** 2))
-        if abs(var) < EPS:
+        d = v - v.mean()
+        ss = float((d * d).sum())
+        if abs(ss / len(v)) < EPS:
             behavioral = 0.0
         else:
-            acf1 = _autocorr(v, 1)
+            acf1 = _acf(d, ss, 1)
             behavioral = min(max(1.0 - (0.2 if abs(acf1) > 0.95 else 0.0), 0.0), 1.0)
     overall = (structural + temporal + magnitude + behavioral) / 4.0
     return {

@@ -112,6 +112,19 @@ _SQL_CASES = {
     "sql_detrend_by_fractional_degree": (
         "SELECT * FROM ts_detrend_by(TABLE(kpanel), 'id', 'ds', 'y', "
         "'polynomial', '2.5')", "invalid literal for int"),
+    # so do the streaming table functions
+    "sql_cv_split_folds_by_bad_frequency": (
+        "SELECT * FROM ts_cv_split_folds_by(TABLE(kpanel), 'id', 'ds', "
+        "'2024-01-20', 5, 'bogus')", "invalid frequency"),
+    "sql_conformal_calibrate_bad_alpha": (
+        "SELECT * FROM ts_conformal_calibrate(TABLE(kpanel), 'y', 'y', "
+        "'x')", "could not convert string to float"),
+    "sql_quality_report_bad_min_length": (
+        "SELECT * FROM ts_quality_report(TABLE(kpanel), 'x')",
+        "invalid literal for int"),
+    "sql_validate_timestamps_by_bad_timestamp": (
+        "SELECT * FROM ts_validate_timestamps_by(TABLE(kpanel), 'id', 'ds', "
+        "'x')", "invalid timestamp"),
 }
 
 

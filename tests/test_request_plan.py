@@ -4,7 +4,8 @@
   constant fill, so a gap-filled forecast skips the null-repair pass.
 - ``load_table`` reuses a session's inferred parquet schema while the
   files are unchanged, so a repeated read starts no Spark job.
-- Building a gap-filled forecast costs a bounded number of py4j calls.
+- Building a gap-filled forecast, or ``ts_stats_by``, costs a bounded
+  number of py4j calls.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from anofox_forecast_spark.operators.forecast import ts_forecast_by
 from anofox_forecast_spark.operators.prep import (ts_fill_forward_by,
                                                   ts_fill_gaps_by,
                                                   ts_fill_nulls_const_by)
+from anofox_forecast_spark.operators.stats import ts_stats_by
 from anofox_forecast_spark.sources import (NO_NAN_METADATA, lineitem_panel,
                                            load_table)
 from tests.conftest import SF_DIR
@@ -144,3 +146,22 @@ def test_gap_filled_forecast_build_py4j_budget(spark, monkeypatch):
     _ses(df).schema
     monkeypatch.undo()
     assert calls[0] <= 400, f"{calls[0]} py4j calls to build the request"
+
+
+def test_stats_build_py4j_budget(spark, monkeypatch):
+    """Building ``ts_stats_by`` over ``lineitem_panel`` takes a bounded
+    number of py4j round trips (about 2,400 when 19 of the statistics
+    were JVM aggregates built column by column)."""
+    lineitem_panel(spark, SF_DIR).schema  # the first read infers, uncounted
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    ts_stats_by(lineitem_panel(spark, SF_DIR), "id", "ds", "y", "1d").schema
+    monkeypatch.undo()
+    assert calls[0] <= 300, f"{calls[0]} py4j calls to build ts_stats_by"

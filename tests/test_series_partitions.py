@@ -14,10 +14,12 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from anofox_forecast_spark import sources
 from anofox_forecast_spark.functions.batched import series_partitions
-from anofox_forecast_spark.operators.conformal import ts_conformal_by
+from anofox_forecast_spark.operators.conformal import (ts_bootstrap_quantiles,
+                                                       ts_conformal_by)
 from anofox_forecast_spark.operators.cv import (ts_cv_folds_by,
                                                 ts_cv_forecast_by)
 from anofox_forecast_spark.operators.forecast import ts_forecast_by
@@ -53,6 +55,17 @@ def lineitem_dir(spark, tmp_path_factory):
     return str(d)
 
 
+def _bootstrap(p):
+    """Bootstrap quantiles over each series' ds-ordered values as
+    residuals, from its last value."""
+    resid = F.transform(F.array_sort(F.collect_list(F.struct("ds", "y"))),
+                        lambda s: s["y"])
+    arrays = p.groupBy("id").agg(resid.alias("resid")).withColumn(
+        "fc", F.array_repeat(F.element_at("resid", -1), 3))
+    return ts_bootstrap_quantiles(arrays, "id", "resid", "fc", [0.1, 0.9],
+                                  n_paths=20)
+
+
 def _fit_stage_tasks(spark, df, group: str) -> int:
     """Runs ``df`` to a noop sink under a job group and returns the task
     count of its last stage: the one reading the series-keyed exchange,
@@ -77,6 +90,8 @@ _REQUESTS = {
     "cv_forecast": lambda p: ts_cv_forecast_by(
         ts_cv_folds_by(p, "id", "ds", "y", 3, 7), "id", "ds", "y", "Naive"),
     "data_quality": lambda p: ts_data_quality(p, "id", "ds", "y"),
+    "stats": lambda p: ts_stats_by(p, "id", "ds", "y", "1d"),
+    "bootstrap": lambda p: _bootstrap(p),
 }
 
 
@@ -129,10 +144,11 @@ _SWEEP = {
     "cv_forecast": (lambda p: ts_cv_forecast_by(
         ts_cv_folds_by(p, "id", "ds", "y", 2, 5), "id", "ds", "y", "Theta"),
         ["id", "fold_id", "ds"], True),
-    "stats": (lambda p: ts_stats_by(p, "id", "ds", "y", "1d"), ["id"], False),
+    "stats": (lambda p: ts_stats_by(p, "id", "ds", "y", "1d"), ["id"], True),
     "data_quality": (lambda p: ts_data_quality(p, "id", "ds", "y"),
                      ["unique_id"], True),
     "conformal": (_conformal, ["id"], False),
+    "bootstrap": (_bootstrap, ["id", "quantile"], True),
 }
 
 

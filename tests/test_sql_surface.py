@@ -100,23 +100,30 @@ def test_cv_folds_udtf_matches_dataframe_api(spark):
 
 
 def test_stats_udtf_matches_dataframe_api(spark):
+    """The SQL form and the DataFrame operator run one kernel: all 36
+    statistics bit for bit, NaN where NaN."""
+    import math
+
+    from anofox_forecast_spark.operators.stats import (STATS_FIELDS,
+                                                       ts_stats_by)
     register_all(spark)
     panel = lineitem_panel(spark, SF_DIR)
     panel.createOrReplaceTempView("sql_panel6")
-    sql_out = spark.sql(
-        "SELECT id, length, mean, std_dev, autocorr_lag1, n_gaps "
-        "FROM ts_stats_by(TABLE(sql_panel6), 'id', 'ds', 'y', '1d')").toPandas()
-    from anofox_forecast_spark.operators.stats import ts_stats_by
-    df_out = ts_stats_by(panel, "id", "ds", "y", "1d") \
-        .select("id", "length", "mean", "std_dev", "autocorr_lag1", "n_gaps") \
-        .toPandas()
-    import numpy as np
-    a = sql_out.sort_values("id").reset_index(drop=True)
-    b = df_out.sort_values("id").reset_index(drop=True)
+    sql_out = spark.sql("SELECT * FROM ts_stats_by(TABLE(sql_panel6), "
+                        "'id', 'ds', 'y', '1d')").collect()
+    df_out = ts_stats_by(panel, "id", "ds", "y", "1d").collect()
+    a = sorted(sql_out, key=lambda r: r["id"])
+    b = sorted(df_out, key=lambda r: r["id"])
     assert len(a) == len(b) > 0
-    for c in ["length", "mean", "std_dev", "autocorr_lag1", "n_gaps"]:
-        np.testing.assert_allclose(a[c].astype(float), b[c].astype(float),
-                                   rtol=1e-9, err_msg=c)
+    for ra, rb in zip(a, b):
+        assert ra["id"] == rb["id"]
+        for c, _ in STATS_FIELDS:
+            x, y = ra[c], rb[c]
+            if isinstance(x, float) and isinstance(y, float):
+                assert x.hex() == y.hex() or (math.isnan(x)
+                                              and math.isnan(y)), (c, x, y)
+            else:
+                assert x == y and type(x) is type(y), (c, x, y)
 
 
 def _metric_frame(spark):

@@ -18,7 +18,7 @@ import zipimport
 import pytest
 
 from anofox_forecast_spark import worker
-from anofox_forecast_spark.operators.conformal import ts_bootstrap_quantiles
+from anofox_forecast_spark.operators.forecast import ts_forecast
 
 _ENGINE_CLASS = "anofox_forecast_spark.worker.StatCheckedZipImporter"
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -141,15 +141,13 @@ def _make_probe():
 
 
 def test_workers_run_the_engine_importer(spark):
-    """After a non-batched engine entry point (``ts_bootstrap_quantiles``,
-    a grouped ``applyInPandas``) has run, every worker that imported the
-    package holds only the engine's importer over its zip entries."""
-    groups = spark.createDataFrame(
-        [(g, [0.5, -0.25, 1.0, -1.0], [10.0 + g, 11.0, 12.0])
-         for g in range(16)],
-        "id int, resid array<double>, fc array<double>")
-    ts_bootstrap_quantiles(groups, "id", "resid", "fc", [0.1, 0.9],
-                           n_paths=20).write.format("noop") \
+    """After a non-batched engine entry point (the single-series
+    ``ts_forecast``, a grouped ``applyInPandas``) has run, every worker
+    that imported the package holds only the engine's importer over its
+    zip entries."""
+    series = spark.createDataFrame(
+        [(i, 10.0 + (i % 7) + 0.1 * i) for i in range(30)], "ds int, y double")
+    ts_forecast(series, "ds", "y", "Theta", 3).write.format("noop") \
         .mode("overwrite").save()
 
     n = spark.sparkContext.defaultParallelism
