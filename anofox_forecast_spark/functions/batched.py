@@ -1,17 +1,26 @@
-"""Batched grouped-map execution.
+"""Batched grouped-map execution, and the one DataFrame runner of a
+per-series operator.
 
 ``groupBy(key).applyInPandas`` crosses the JVM↔Python boundary once per
 GROUP; with millions of small series the per-crossing overhead (Arrow
 framing, worker dispatch, pandas construction) dominates the actual math.
-This helper provides the same per-group semantics at one crossing per Arrow
-BATCH: ``repartition(keys) + sortWithinPartitions(keys, order) +
-mapInPandas`` with carry-buffer stitching for groups that span adjacent
-batches (the sort guarantees each group is contiguous within its partition).
-
-Used by every per-series UDF operator (forecast, stats, data quality,
-features, detect, cv-forecast, bootstrap). Results are byte-identical to
-the grouped-map formulation — same rows per group — only the batching
+``batched_grouped_map`` provides the same per-group semantics at one
+crossing per Arrow BATCH: ``repartition(keys) + sortWithinPartitions(keys,
+order) + mapInPandas`` with carry-buffer stitching for groups that span
+adjacent batches (the sort guarantees each group is contiguous within its
+partition). Each column is converted to numpy once per batch; a group
+reaches its function as numpy slices of those arrays and returns its
+output as columns, which become one pandas DataFrame per batch. Results
+are row-identical to the grouped-map formulation; only the batching
 changes.
+
+A per-series operator is a :class:`SeriesOp` (output fields + one kernel
+over a series' ``ds`` and ``y`` arrays). It has one runner per surface:
+:func:`series_map` here for the DataFrame operators (stats, data quality,
+features, detection, the model-library forecast), and
+``functions/sql.py::_series_udtf`` for their SQL table functions. CV,
+conformal, bootstrap, inspect and explain call ``batched_grouped_map``
+directly.
 
 The module is also the one home of the partition policy for per-series
 stages (``series_partitions``): one task per core, with an explicit
@@ -22,6 +31,7 @@ operator's repartition over a source panel costs no exchange.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -79,23 +89,22 @@ def batched_grouped_map(
     key_cols: list[str],
     order_col: str,
     schema: T.StructType,
-    one_group: Callable[[tuple, pd.DataFrame], pd.DataFrame | None],
+    one_group: Callable[[tuple, dict], tuple | None],
 ) -> DataFrame:
-    """Apply ``one_group(key_tuple, sorted_pdf)`` to every distinct
-    ``key_cols`` group of ``df``; ``None`` skips the group (error
-    isolation). Rows inside each group arrive sorted by ``order_col``.
-    The groups of a batch are its runs of equal keys, found with numpy
-    (no ``DataFrame.groupby``); NULL keys form one group, as in
-    ``groupBy``.
+    """Apply ``one_group(key_tuple, cols)`` to every distinct ``key_cols``
+    group of ``df``, its rows sorted by ``order_col``.
 
-    ``one_group`` may return either a ``pd.DataFrame`` or — the cheap
-    columnar form (r13) — a tuple of per-column sequences in ``schema``
-    field order. With the tuple form ONE pandas DataFrame is assembled
-    per Arrow batch instead of one per series, which removes the
-    dominant per-series overhead of the Python path (a 14-row DataFrame
-    construction costs ~0.3 ms — 3x a whole SES fit after the C-twin
-    work). Row content is identical either way: the legacy path
-    ``pd.concat``-ed the same per-series pieces in the same order."""
+    ``cols`` maps each column of ``df`` to the group's slice of a numpy
+    array: every column is converted to numpy once per Arrow batch, and
+    a group costs a slice (a view), no pandas object. The groups of a
+    batch are its runs of equal keys, found with numpy; NULL keys form
+    one group, as in ``groupBy``. Key values are boxed as pandas boxes
+    them (int, str, ``Timestamp``; a NULL key as None, NaN or NaT).
+
+    ``one_group`` returns the group's output as a tuple of columns in
+    ``schema`` field order (sequences of one length), or ``None`` to skip
+    the group (error isolation). The columns of a batch's groups become
+    ONE pandas DataFrame per Arrow batch."""
     keys = list(key_cols)
     names = [f.name for f in schema.fields]
 
@@ -113,55 +122,99 @@ def batched_grouped_map(
                 cols[nm] = flat
         return pd.DataFrame(cols)
 
-    def emit(pdf: pd.DataFrame, starts: list[int]) -> Iterator[pd.DataFrame]:
-        """``one_group`` over the key runs of ``pdf`` that begin at
-        ``starts``, the last one ending at the frame's end."""
-        # keys boxed as pandas' groupby boxes them (int, str, Timestamp)
-        kts = zip(*[pdf[k].iloc[starts].tolist() for k in keys])
-        out = []
-        tup = []
-        for kt, s, e in zip(kts, starts, starts[1:] + [len(pdf)]):
-            r = one_group(kt, pdf.iloc[s:e])
-            if r is None:
-                continue
-            if isinstance(r, tuple):
-                tup.append(r)
-            elif len(r):
-                out.append(r)
-        if tup:
-            # skip all-empty assemblies (e.g. every group returned
-            # zero-length columns at h=0) — the legacy DataFrame
-            # path's len(r) guard never yielded empties, and an
-            # empty object-dtype frame would lean on Arrow's
-            # null-array coercion against the typed schema
-            adf = assemble(tup)
+    def emit(cols: dict, starts: list[int], end: int) -> Iterator[pd.DataFrame]:
+        """``one_group`` over the key runs of ``cols`` that begin at
+        ``starts``, the last one ending at ``end``."""
+        kts = zip(*[pd.Series(cols[k][starts]).tolist() for k in keys])
+        parts = []
+        for kt, s, e in zip(kts, starts, starts[1:] + [end]):
+            r = one_group(kt, {c: a[s:e] for c, a in cols.items()})
+            if r is not None:
+                parts.append(r)
+        if parts:
+            # groups that all returned zero-length columns (e.g. h=0)
+            # yield nothing: an empty object-dtype frame would lean on
+            # Arrow's null-array coercion against the typed schema
+            adf = assemble(parts)
             if len(adf):
                 yield adf
-        if out:
-            yield pd.concat(out, ignore_index=True)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+        carry: dict | None = None
         for pdf in batches:
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
             if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
+                cols = {c: np.concatenate([carry[c], a])
+                        for c, a in cols.items()}
+            n = len(cols[keys[0]])
+            if not n:
                 carry = None
                 continue
-            new = np.zeros(len(pdf), dtype=bool)
+            new = np.zeros(n, dtype=bool)
             new[0] = True
             for k in keys:
-                new[1:] |= ~_same(pdf[k].to_numpy())
+                new[1:] |= ~_same(cols[k])
             starts = np.flatnonzero(new).tolist()
             # hold back the trailing run — it may continue in the next batch
-            carry = pdf.iloc[starts[-1]:]
+            carry = {c: a[starts[-1]:] for c, a in cols.items()}
             if len(starts) > 1:
-                yield from emit(pdf.iloc[:starts[-1]], starts[:-1])
-        if carry is not None and len(carry):
-            yield from emit(carry, [0])
+                yield from emit(cols, starts[:-1], starts[-1])
+        if carry is not None:
+            yield from emit(carry, [0], len(carry[keys[0]]))
 
     # one task per core (see series_partitions); results are
     # partitioning-invariant (pinned by tests)
     parts = repartition_series(df, *keys).sortWithinPartitions(*keys,
                                                                order_col)
     return parts.mapInPandas(fn, schema)
+
+
+@dataclass(frozen=True)
+class SeriesOp:
+    """A per-series operator: ONE computation over a ds-sorted series
+    that both surfaces run — the DataFrame operators through
+    :func:`series_map`, the SQL table functions through
+    ``functions/sql.py::_series_udtf``.
+
+    ``fields(ds_name, ds_type, y_name, *args)`` lists its output fields
+    after the group column. ``kernel(ds, y, *args)`` returns those
+    columns for one series, in field order, or ``None`` to skip the
+    series. ``ds`` holds the dates, NULL first (datetime64 or integers on
+    the DataFrame side; objects for DATE and on the SQL side), and ``y``
+    the values as float64 with NULL as NaN. With ``int_ds`` the kernel takes one more argument,
+    whether the ds column has an integer type (its dates are ordinals)."""
+
+    fields: Callable[..., list]
+    kernel: Callable[..., tuple | None]
+    int_ds: bool = False
+
+    def kernel_args(self, ds_type: T.DataType, args: tuple) -> tuple:
+        """The kernel's arguments after ``(ds, y)`` over a ds column of
+        ``ds_type``."""
+        if not self.int_ds:
+            return args
+        return (*args, isinstance(ds_type, (T.IntegerType, T.LongType)))
+
+
+def series_map(df: DataFrame, group_col: str, ds_col: str, y_col: str,
+               op: SeriesOp, *args, lead: T.StructField | None = None
+               ) -> DataFrame:
+    """Run ``op`` over every ``group_col`` series of ``df``, the one
+    DataFrame runner of a :class:`SeriesOp`: ``y`` is cast to DOUBLE, and
+    the output is the group column then ``op.fields``. ``lead``, when
+    given, is the group column's output field (its name, type and
+    nullability)."""
+    ds_type = df.schema[ds_col].dataType
+    if lead is None:
+        lead = T.StructField(group_col, df.schema[group_col].dataType)
+    schema = T.StructType([lead] + op.fields(ds_col, ds_type, y_col, *args))
+    kargs = op.kernel_args(ds_type, args)
+    g, d, y = (f"`{c.replace('`', '``')}`" for c in (group_col, ds_col,
+                                                      y_col))
+    base = df.selectExpr(g, d, f"CAST({y} AS DOUBLE) AS {y}")
+
+    def one(kt, cols):
+        out = op.kernel(cols[ds_col], cols[y_col], *kargs)
+        return None if out is None else ([kt[0]] * len(out[0]), *out)
+
+    return batched_grouped_map(base, [group_col], ds_col, schema, one)

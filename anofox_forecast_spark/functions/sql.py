@@ -15,10 +15,12 @@ module recreates that surface on Spark:
   called, before any Spark job. Each instance buffers its partition's rows
   and hands them once to ``emit``.
 - the per-series computation behind a UDTF is the DataFrame operator's own
-  kernel (``operators/``): the forecast kernel (``forecast_spec``,
-  ``fit_one``, ``forecast_block``), the detection ``SeriesOp`` kernels
-  (``operators/detect.py``), ``series_stats``, ``data_quality``,
-  ``feature_columns``. Only the UDTFs whose DataFrame operator is a
+  kernel (``operators/``). A ``SeriesOp`` — ``FORECAST``, ``STATS``,
+  ``DATA_QUALITY``, ``FEATURES`` and the detection ops — has one SQL
+  runner, ``_series_udtf``, as it has one DataFrame runner,
+  ``batched.series_map``; the other forecast UDTFs (CV, backtest, inspect,
+  explain, exog) fit through the forecast kernel (``forecast_spec``,
+  ``fit_one``, ``forecast_block``). Only the UDTFs whose DataFrame operator is a
   Catalyst plan — the prep family, the ``_by`` metrics, conformal, CV
   layout, hierarchy, OLS — replay that plan in Python here, because a UDTF
   cannot run a Column plan; ``tests/test_sql_surface.py`` pins each to
@@ -35,7 +37,7 @@ from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any
 
 import numpy as np
@@ -47,8 +49,12 @@ from pyspark.sql.functions import OrderingColumn, PartitioningColumn, udtf
 
 from ..frequency import parse_frequency
 from ..operators import detect as D
-from ..operators.forecast import (ForecastSpec, fit_one, forecast_block,
-                                  forecast_schema, forecast_spec)
+from ..operators.features import FEATURES, selected_features
+from ..operators.forecast import (FORECAST, ForecastSpec, fit_one,
+                                  forecast_block, forecast_schema,
+                                  forecast_spec)
+from ..operators.stats import DATA_QUALITY, STATS
+from .batched import SeriesOp
 from ..operators.forecast_ext import (explain_decompose, explainable,
                                       inspect_result)
 
@@ -121,6 +127,12 @@ def _ds(rows, ds_col):
     return np.array([r[ds_col] for r in rows], dtype=object)
 
 
+def _dated(rows, ds_col):
+    """``rows`` without the NULL-ds rows, which are not part of a series
+    (as in ``forecast.forecast_series``)."""
+    return [r for r in rows if r[ds_col] is not None]
+
+
 def _plain(v):
     """A kernel's output cell as a value the UDTF row serializer takes."""
     if isinstance(v, np.ndarray):
@@ -158,66 +170,23 @@ def _spec(method, horizon=1, frequency=None, params_json=None,
     return forecast_spec(method, horizon, frequency, params)
 
 
-def _block_rows(block):
-    """Row tuples of a forecast block; numpy scalars become Python floats
-    for the UDTF row serializer."""
-    for g, step, ds, p, lo, up, name in zip(*block):
-        yield (g, step, ds, float(p), float(lo), float(up), name)
+def _forecast_args(method, horizon, frequency, confidence_level=None,
+                   params_json=None) -> tuple:
+    """The ``FORECAST`` op's arguments from ``ts_forecast_by``'s literals
+    ``(method, horizon, frequency[, confidence_level[, params_json]])``;
+    the trailing two are optional, matching the reference macro's named
+    parameters (``ts_macros.cpp``): ``confidence_level`` (default 0.90)
+    and a JSON dict of model params (``{"window": 7, ...}``)."""
+    return (_spec(method, horizon, frequency, params_json, confidence_level),)
 
 
-class ForecastUDTF(_SeriesUDTF):
-    """``ts_forecast_by(TABLE(t), group_col, ds_col, y_col, method, horizon,
-    frequency[, confidence_level[, params_json]])`` — SQL form of the
-    forecasting operator. The two trailing arguments are optional, matching
-    the reference macro's named parameters (``ts_macros.cpp``):
-    ``confidence_level`` (default 0.90) and a JSON dict of model params
-    (``{"window": 7, "seasonal_period": 12, ...}``)."""
-
-    @staticmethod
-    def analyze(table: AnalyzeArgument, group_col: AnalyzeArgument,
-                ds_col: AnalyzeArgument, y_col: AnalyzeArgument,
-                method: AnalyzeArgument, horizon: AnalyzeArgument,
-                frequency: AnalyzeArgument,
-                confidence_level: AnalyzeArgument | None = None,
-                params_json: AnalyzeArgument | None = None) -> AnalyzeResult:
-        g, d = group_col.value, ds_col.value
-        spec = _spec(method.value, horizon.value, frequency.value,
-                     _lit(params_json), _lit(confidence_level))
-        return _result(forecast_schema(table.dataType, g, d),
-                       (spec, g, d, y_col.value), by=g, order=d)
-
-    def emit(self, rows):
-        spec, g, d, y = self.p
-        r = fit_one(spec, _nan_y(rows, y))
-        if r is not None:
-            last = rows[-1][d]
-            yield from _block_rows(forecast_block(
-                spec, rows[0][g], last, r, isinstance(last, int)))
-
-
-class ForecastSingleUDTF(_SeriesUDTF):
-    """``ts_forecast(TABLE(t), 'ds', 'y', 'Naive', '7'[, frequency,
-    confidence_level, params_json])`` — single-series form of
-    ts_forecast_by (ref macro takes no group column)."""
-
-    @staticmethod
-    def analyze(table, ds_col, y_col, method, horizon, frequency=None,
-                confidence_level=None, params_json=None):
-        d = ds_col.value
-        spec = _spec(method.value, horizon.value,
-                     "1d" if frequency is None else frequency.value,
-                     _lit(params_json), _lit(confidence_level))
-        return _result(forecast_schema(table.dataType, None, d),
-                       (spec, d, y_col.value), order=d)
-
-    def emit(self, rows):
-        spec, d, y = self.p
-        r = fit_one(spec, _nan_y(rows, y))
-        if r is not None:
-            last = rows[-1][d]
-            for row in _block_rows(forecast_block(spec, None, last, r,
-                                                  isinstance(last, int))):
-                yield row[1:]
+def _forecast_single_args(method, horizon, frequency=None,
+                          confidence_level=None, params_json=None) -> tuple:
+    """``ts_forecast``'s literals: as ``ts_forecast_by``'s, with the
+    frequency optional (default ``'1d'``)."""
+    return _forecast_args(method, horizon,
+                          "1d" if frequency is None else frequency,
+                          confidence_level, params_json)
 
 
 class ForecastInspectUDTF(_SeriesUDTF):
@@ -236,11 +205,11 @@ class ForecastInspectUDTF(_SeriesUDTF):
              _f("phi", _DBL), _f("theta", _DBL), _f("aic", _DBL),
              _f("bic", _DBL), _f("seasonal_period", T.LongType())],
             (_spec(method.value, params_json=_lit(params_json)), g,
-             y_col.value), by=g, order=ds_col.value)
+             ds_col.value, y_col.value), by=g, order=ds_col.value)
 
     def emit(self, rows):
-        spec, g, y = self.p
-        r = fit_one(spec, _nan_y(rows, y))
+        spec, g, d, y = self.p
+        r = fit_one(spec, _nan_y(_dated(rows, d), y))
         if r is None:
             return
         i = inspect_result(r)
@@ -264,11 +233,11 @@ class ForecastExplainUDTF(_SeriesUDTF):
             [_f(g, table.dataType[g].dataType),
              _f("forecast_step", T.IntegerType()), _f("level", _DBL),
              _f("trend", _DBL), _f("seasonal", _DBL), _f("residual", _DBL)],
-            (spec, g, y_col.value), by=g, order=ds_col.value)
+            (spec, g, ds_col.value, y_col.value), by=g, order=ds_col.value)
 
     def emit(self, rows):
-        spec, g, y_col = self.p
-        y = _nan_y(rows, y_col)
+        spec, g, d, y_col = self.p
+        y = _nan_y(_dated(rows, d), y_col)
         r = fit_one(spec, y)
         if r is None:
             return
@@ -318,13 +287,12 @@ class ForecastExogByUDTF(_SeriesUDTF):
         if r is None:
             return None  # error isolation, matching the DataFrame op
         last = hist[-1][ds_col]
-        return forecast_block(spec, None if g is None else rows[0][g],
-                              last, r, isinstance(last, int))
+        return forecast_block(spec, last, r, isinstance(last, int))
 
     def emit(self, rows):
         block = self._block(rows)
         if block is not None:
-            yield from _block_rows(block)
+            yield from _column_rows((rows[0][self.p[1]],), block)
 
 
 class ForecastExogUDTF(ForecastExogByUDTF):
@@ -347,8 +315,8 @@ class ForecastExogUDTF(ForecastExogByUDTF):
     def emit(self, rows):
         block = self._block(rows)
         if block is not None:
-            yield tuple([float(v) for v in col] for col in block[3:6]) \
-                + (block[6][0],)
+            yield tuple([float(v) for v in col] for col in block[2:5]) \
+                + (block[5][0],)
 
 
 class CvForecastUDTF(_SeriesUDTF):
@@ -439,38 +407,43 @@ class BacktestAutoUDTF(_SeriesUDTF):
 
 
 # ---------------------------------------------------------------------------
-# Per-series kernels shared with the DataFrame operators: detection,
-# statistics, data quality, features.
+# Per-series ops shared with the DataFrame operators: detection,
+# statistics, data quality, features and the model-library forecast.
 # ---------------------------------------------------------------------------
 
-def _series_udtf(op: D.SeriesOp, parse=lambda: (), grouped: bool = True,
+def _series_udtf(op: SeriesOp, parse=lambda: (), grouped: bool = True,
                  y_name: str | None = "y", keep: tuple | None = None,
                  null_y: bool = False):
-    """The UDTF of a ``SeriesOp``: ``(TABLE(t), [group_col,] ds_col, y_col,
-    *literals)``; ``parse(*literals)`` gives the kernel's arguments.
-    ``y_name`` names the op's value field (None: the input's y column
-    name); ``keep`` projects the output onto those fields; ``null_y``
-    hands the kernel the raw y values (None for NULL) instead of NaN."""
+    """The UDTF of a ``SeriesOp``, its one SQL runner: ``(TABLE(t),
+    [group_col,] ds_col, y_col, *literals)``; ``parse(*literals)`` gives
+    the op's arguments. Every output field is nullable. ``y_name`` names
+    the op's value field (None: the input's y column name); ``keep``
+    projects the output onto those fields; ``null_y`` hands the kernel
+    the raw y values (None for NULL) instead of NaN."""
 
     class _Series(_SeriesUDTF):
         @staticmethod
         def analyze(table, *args):
             names = [a.value for a in args[:3 if grouped else 2]]
             g, d, y = names if grouped else [None, *names]
-            fields = op.fields(d, table.dataType[d].dataType, y_name or y)
+            dt = table.dataType[d].dataType
+            pargs = parse(*[a.value for a in args[len(names):]])
+            fields = op.fields(d, dt, y_name or y, *pargs)
             pos = (list(range(len(fields))) if keep is None else
                    [i for i, f in enumerate(fields) if f.name in keep])
             lead = [_f(g, table.dataType[g].dataType)] if grouped else []
-            kargs = parse(*[a.value for a in args[len(names):]])
-            return _result(lead + [fields[i] for i in pos],
-                           (g, d, y, kargs, pos), by=g, order=d)
+            return _result(lead + [_f(fields[i].name, fields[i].dataType)
+                                   for i in pos],
+                           (g, d, y, op.kernel_args(dt, pargs), pos), by=g,
+                           order=d)
 
         def emit(self, rows):
             g, d, y, kargs, pos = self.p
             ys = [r[y] for r in rows] if null_y else _nan_y(rows, y)
             cols = op.kernel(_ds(rows, d), ys, *kargs)
-            yield from _column_rows(() if g is None else (rows[0][g],),
-                                    [cols[i] for i in pos])
+            if cols is not None:
+                yield from _column_rows(() if g is None else (rows[0][g],),
+                                        [cols[i] for i in pos])
 
     return _Series
 
@@ -498,7 +471,27 @@ DetectPeriodsUDTF = _series_udtf(
 TsDetectAnomaliesOnlineUDTF = _series_udtf(
     D.ONLINE_ZSCORE, D.online_zscore_args, y_name=None, null_y=True)
 
-_DETECTION_UDTFS = {
+
+def _features_args(features=None) -> tuple:
+    """The ``FEATURES`` op's argument: the selected feature names, from an
+    optional comma-separated list (all features when absent or empty)."""
+    return (selected_features([x for x in str(features).split(",")
+                               if x.strip()] if features else None),)
+
+
+_STATS_UDTF = _series_udtf(STATS, lambda frequency: (
+    parse_frequency(frequency) if frequency else None,))
+
+_SERIES_UDTFS = {
+    "ts_forecast_by": _series_udtf(FORECAST, _forecast_args),
+    "ts_forecast": _series_udtf(FORECAST, _forecast_single_args,
+                                grouped=False),
+    # the reference registers both stats spellings (ts_macros.cpp:31-86)
+    "ts_stats_by": _STATS_UDTF,
+    "ts_stats": _STATS_UDTF,
+    "ts_features_by": _series_udtf(FEATURES, _features_args),
+    "ts_features_table": _series_udtf(FEATURES, _features_args,
+                                      grouped=False),
     # non-_by single-series spellings (ts_macros.cpp registers both)
     "ts_classify_seasonality": _series_udtf(D.CLASSIFY, _period,
                                             grouped=False),
@@ -529,90 +522,22 @@ _DETECTION_UDTFS = {
 }
 
 
-class StatsUDTF(_SeriesUDTF):
-    """``ts_stats_by(TABLE(t), group_col, ds_col, y_col, frequency)`` — SQL
-    form of the 36-column statistics operator, through its per-series
-    kernel ``stats.series_stats``."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, frequency):
-        from ..operators.stats import STATS_FIELDS
-        g = group_col.value
-        freq = parse_frequency(frequency.value) if frequency.value else None
-        return _result(
-            [_f(g, table.dataType[g].dataType)]
-            + [_f(n, t) for n, t in STATS_FIELDS],
-            (g, ds_col.value, y_col.value, freq), by=g, order=ds_col.value)
-
-    def emit(self, rows):
-        from ..operators.stats import series_stats
-        g, d, y, freq = self.p
-        yield from _column_rows((rows[0][g],), series_stats(
-            _ds(rows, d), _nan_y(rows, y), freq))
+_DQ = _series_udtf(DATA_QUALITY, lambda *_: ())
 
 
-class DataQualityUDTF(_SeriesUDTF):
+class DataQualityUDTF(_DQ):
     """``ts_data_quality(TABLE(t), 'id', 'ds', 'y'[, n_short, frequency])``
     — per-series 4-dimension quality scores through the DataFrame
-    operator's kernel, ``stats.data_quality`` (n_short/frequency accepted
-    for signature parity, unused by the scores exactly as in the DataFrame
-    op)."""
-
-    @staticmethod
-    def analyze(table, group_col, ds_col, y_col, *rest):
-        from ..operators.stats import DQ_FIELDS
-        g = group_col.value
-        return _result(
-            [_f("unique_id", table.dataType[g].dataType)]
-            + [_f(n, t) for n, t in DQ_FIELDS],
-            (g, ds_col.value, y_col.value), by=g, order=ds_col.value)
-
-    def emit(self, rows):
-        from ..operators.stats import data_quality
-        g, d, y = self.p
-        yield from _column_rows((rows[0][g],),
-                                data_quality(_ds(rows, d), _nan_y(rows, y)))
-
-
-class FeaturesByUDTF(_SeriesUDTF):
-    """``ts_features_by(TABLE(t), 'id', 'ds', 'y'[, 'mean,std,...'])`` —
-    wide per-series feature row through the DataFrame operator's kernel,
-    ``features.feature_columns``."""
-
-    @staticmethod
-    def _analyze(table, grouped, *args):
-        from ..operators.features import _safe, selected_features
-        names = [a.value for a in args]
-        if grouped:
-            g, d, y, *sel = names
-            lead = [_f(g, table.dataType[g].dataType)]
-        else:
-            (d, y, *sel), g, lead = names, None, []
-        sel = selected_features(
-            [s for s in str(sel[0]).split(",") if s.strip()]
-            if sel and sel[0] else None)
-        return _result(lead + [_f(_safe(x), _DBL) for x in sel],
-                       (g, d, y, sel), by=g, order=d)
+    operator's op, ``stats.DATA_QUALITY``, with the group column named
+    ``unique_id`` (n_short/frequency accepted for signature parity, unused
+    by the scores exactly as in the DataFrame op)."""
 
     @staticmethod
     def analyze(table, *args):
-        return FeaturesByUDTF._analyze(table, True, *args)
-
-    def emit(self, rows):
-        from ..operators.features import feature_columns
-        g, d, y, sel = self.p
-        yield from _column_rows(
-            () if g is None else (rows[0][g],),
-            feature_columns(_ds(rows, d), _nan_y(rows, y), sel))
-
-
-class FeaturesTableUDTF(FeaturesByUDTF):
-    """``ts_features_table(TABLE(t), 'ds', 'y'[, subset])`` — single-series
-    form."""
-
-    @staticmethod
-    def analyze(table, *args):
-        return FeaturesByUDTF._analyze(table, False, *args)
+        r = _DQ.analyze(table, *args)
+        lead, *rest = r.schema.fields
+        return replace(r, schema=T.StructType(
+            [_f("unique_id", lead.dataType), *rest]))
 
 
 # ---------------------------------------------------------------------------
@@ -2089,13 +2014,10 @@ _R4B_UDTFS = {
     "ts_check_leakage": CheckLeakageUDTF,
     "ts_conformal_calibrate": ConformalCalibrateUDTF,
     "ts_conformal_apply_by": ConformalApplyUDTF,
-    "ts_features_by": FeaturesByUDTF,
-    "ts_features_table": FeaturesTableUDTF,
     "ts_forecast_inspect_by": ForecastInspectUDTF,
     "ts_forecast_explain_by": ForecastExplainUDTF,
     "ts_forecast_exog_by": ForecastExogByUDTF,
     "ts_forecast_exog": ForecastExogUDTF,
-    "ts_forecast": ForecastSingleUDTF,
     "ts_cv_split_folds_by": CvSplitFoldsUDTF,
     "ts_cv_split_by": CvSplitUDTF,
     "ts_cv_forecast_by": CvForecastUDTF,
@@ -3436,17 +3358,15 @@ def register_all(spark: SparkSession) -> None:
         spark.udtf.register(f"anofox_fcst_{name}", fn)
         names.append(name)
 
-    reg_udtf("ts_forecast_by", ForecastUDTF)
     reg_udtf("ts_fill_gaps_by", FillGapsUDTF)
     reg_udtf("ts_cv_folds_by", CvFoldsUDTF)
-    reg_udtf("ts_stats_by", StatsUDTF)
     reg_udtf("ts_detect_periods", DetectPeriodsUDTF)
     reg_udtf("ts_detect_periods_by", DetectPeriodsUDTF)
     for name, (metric, n_vals, extra) in _METRIC_BY_SPECS.items():
         reg_udtf(name, _make_metric_by_udtf(metric, n_vals, extra))
     for name, op in _PREP_UDTF_NAMES.items():
         reg_udtf(name, _make_prep_udtf(op))
-    for name, cls in _DETECTION_UDTFS.items():
+    for name, cls in _SERIES_UDTFS.items():
         reg_udtf(name, cls)
     reg_udtf("ts_combine_keys", CombineKeysUDTF)
     reg_udtf("ts_split_keys", SplitKeysUDTF)
@@ -3458,7 +3378,6 @@ def register_all(spark: SparkSession) -> None:
     reg_udtf("ts_conformal_evaluate", ConformalEvaluateUDTF)
     reg_udtf("ts_cv_split_index_by", CvSplitIndexUDTF)
     reg_udtf("ts_backtest_auto_by", BacktestAutoUDTF)
-    reg_udtf("ts_stats", StatsUDTF)  # ref registers both spellings
     for name, cls in _R4B_UDTFS.items():
         reg_udtf(name, cls)
     # beyond-parity event/search families (r8) — SQL forms of the stable

@@ -20,7 +20,6 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -387,8 +386,8 @@ def ts_bootstrap_intervals_by(df: DataFrame, group_col: str, ds_col: str,
         T.StructField("yhat_upper", T.DoubleType()),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        y = pdf[y_col].astype(float).to_numpy()
+    def fn(key: tuple, cols: dict):
+        y = cols[y_col]
         y = y[np.isfinite(y)]
         if len(y) < 3:
             return None
@@ -413,8 +412,6 @@ def ts_bootstrap_intervals_by(df: DataFrame, group_col: str, ds_col: str,
         point = y[-1] + drift * np.arange(1, h + 1)
         lo = np.quantile(paths, (1 - cl) / 2, axis=0)
         up = np.quantile(paths, 1 - (1 - cl) / 2, axis=0)
-        # columnar return (see batched_grouped_map): same column values
-        # in the same schema order as the previous per-series DataFrame
         return ([key[0]] * h, list(range(1, h + 1)), point, lo, up)
 
     from ..functions.batched import batched_grouped_map
@@ -447,9 +444,9 @@ def ts_bootstrap_quantiles(df: DataFrame, group_col: str, resid_col: str,
         T.StructField("values", T.ArrayType(T.DoubleType())),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame):
+    def fn(key: tuple, cols: dict):
         qcol, vals = [], []
-        for resid, fc in zip(pdf[resid_col], pdf[forecast_col]):
+        for resid, fc in zip(cols[resid_col], cols[forecast_col]):
             resid = np.asarray(resid, dtype=float)
             fc = np.asarray(fc, dtype=float)
             if len(resid) == 0 or len(fc) == 0:

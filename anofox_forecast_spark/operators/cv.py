@@ -24,7 +24,6 @@ range-condition join — fully Catalyst-planned, one shuffle on the group key.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -231,20 +230,18 @@ def ts_cv_forecast_by(folds_df: DataFrame, group_col: str, ds_col: str,
         T.StructField("model_name", T.StringType()),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame):
+    def fn(key: tuple, cols: dict):
         gval, fold = key
-        train = pdf[pdf["split"] == "train"]
-        test = pdf[pdf["split"] == "test"]
-        h = len(test)
-        if h == 0 or len(train) < 3:
+        train, test = cols["split"] == "train", cols["split"] == "test"
+        h = int(test.sum())
+        if h == 0 or train.sum() < 3:
             return None
-        r = fit_one(spec, train[y_col].astype(float).to_numpy(), h)
+        y = cols[y_col].astype(float)
+        r = fit_one(spec, y[train], h)
         if r is None:
             return None
-        # columnar return (see batched_grouped_map)
-        return ([fold] * h, [gval] * h, test[ds_col].to_numpy(),
-                test[y_col].astype(float).to_numpy(), ["test"] * h,
-                r.point, r.lower, r.upper, [r.model_name] * h)
+        return ([fold] * h, [gval] * h, cols[ds_col][test], y[test],
+                ["test"] * h, r.point, r.lower, r.upper, [r.model_name] * h)
 
     return batched_grouped_map(folds_df, [group_col, "fold_id"], ds_col,
                                schema, fn)

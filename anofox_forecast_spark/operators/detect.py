@@ -20,8 +20,6 @@ PELT is the standard pruned dynamic program with L2/L1/Normal costs.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -29,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.batched import SeriesOp, series_map
 from ..functions.models import detect_seasonality, interpolate_nulls
 
 EPS = 2.220446049250313e-16
@@ -840,9 +839,8 @@ def bocpd(y: np.ndarray, hazard_lambda: float = 250.0) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # Per-series kernels. Each detection operator is one ``SeriesOp``: its output
 # fields after the group column, and ONE computation over a ds-sorted series
-# that both surfaces call — the DataFrame operators through
-# ``batched_grouped_map`` (``_grouped_udf``), the SQL table functions
-# through the UDTF shell in ``functions/sql.py``.
+# that both surfaces call — the DataFrame operators through ``series_map``,
+# the SQL table functions through ``functions/sql.py::_series_udtf``.
 # ---------------------------------------------------------------------------
 
 _D, _I = T.DoubleType(), T.IntegerType()
@@ -851,33 +849,6 @@ _B, _S = T.BooleanType(), T.StringType()
 
 def _f(name: str, dtype: T.DataType) -> T.StructField:
     return T.StructField(name, dtype)
-
-
-@dataclass(frozen=True)
-class SeriesOp:
-    """A per-series operator. ``fields(ds_name, ds_type, y_name)`` lists
-    its output fields after the group column; ``kernel(ds, y, *args)``
-    returns those columns for one series, in field order (``ds`` the
-    sorted dates, ``y`` the values as doubles with NULL as NaN)."""
-
-    fields: Callable[[str, T.DataType, str], list]
-    kernel: Callable[..., tuple]
-
-
-def _grouped_udf(df, group_col, ds_col, y_col, op: SeriesOp, *args):
-    """Run ``op`` per ``group_col`` series of ``df`` (the DataFrame form)."""
-    from ..functions.batched import batched_grouped_map
-    schema = T.StructType(
-        [_f(group_col, df.schema[group_col].dataType)]
-        + op.fields(ds_col, df.schema[ds_col].dataType, y_col))
-    base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
-
-    def one(kt, pdf):
-        cols = op.kernel(pdf[ds_col].to_numpy(),
-                         pdf[y_col].to_numpy(dtype=float), *args)
-        return ([kt[0]] * len(cols[0]), *cols)
-
-    return batched_grouped_map(base, [group_col], ds_col, schema, one)
 
 
 _PERIOD_KEYS = ("period", "confidence", "strength", "amplitude", "phase",
@@ -898,7 +869,7 @@ def _periods(ds, y, method="auto", expected=None, min_confidence=None):
             [res["method"]] * n)
 
 
-PERIODS = SeriesOp(lambda ds, dt, y: [
+PERIODS = SeriesOp(lambda ds, dt, y, *_: [
     _f("period", _D), _f("confidence", _D), _f("strength", _D),
     _f("amplitude", _D), _f("phase", _D), _f("iteration", _I),
     _f("matches_expected", _B), _f("matched_expected_period", _D),
@@ -918,7 +889,7 @@ def _seasonality(ds, y):
     return [[p] if p > 1 else []], [p if p > 1 else 0], [float(s)], [ts]
 
 
-SEASONALITY = SeriesOp(lambda ds, dt, y: [
+SEASONALITY = SeriesOp(lambda ds, dt, y, *_: [
     _f("detected_periods", T.ArrayType(_I)), _f("primary_period", _I),
     _f("seasonal_strength", _D), _f("trend_strength", _D)], _seasonality)
 
@@ -929,12 +900,12 @@ def _classify(ds, y, period):
             [res["multiplicative_strength"]])
 
 
-CLASSIFY = SeriesOp(lambda ds, dt, y: [
+CLASSIFY = SeriesOp(lambda ds, dt, y, *_: [
     _f("classification", _S), _f("additive_strength", _D),
     _f("multiplicative_strength", _D)], _classify)
 
 STRENGTH = SeriesOp(
-    lambda ds, dt, y: [_f("seasonal_strength", _D)],
+    lambda ds, dt, y, *_: [_f("seasonal_strength", _D)],
     lambda ds, y, period, method="variance": (
         [float(seasonal_strength(y, period, method))],))
 
@@ -944,7 +915,7 @@ def _detrended(ds, y, method="linear", degree=2, order=1, bandwidth=0.3):
     return ds, y, r["trend"], r["detrended"], [r["method"]] * len(y)
 
 
-DETREND = SeriesOp(lambda ds, dt, y: [
+DETREND = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f(y, _D), _f("trend", _D), _f("detrended", _D),
     _f("method", _S)], _detrended)
 
@@ -957,7 +928,7 @@ def _decomposed(ds, y, period, method="additive"):
     return ds, y, r["trend"], r["seasonal"], r["remainder"]
 
 
-DECOMPOSE = SeriesOp(lambda ds, dt, y: [
+DECOMPOSE = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f(y, _D), _f("trend", _D), _f("seasonal", _D),
     _f("remainder", _D)], _decomposed)
 
@@ -968,7 +939,7 @@ def _peaks(ds, y, min_prominence=0.0):
     return [ds[i] for i in idx], r["values"], idx, r["prominences"]
 
 
-PEAKS = SeriesOp(lambda ds, dt, y: [
+PEAKS = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f(y, _D), _f("peak_index", _I), _f("prominence", _D)],
     _peaks)
 
@@ -981,7 +952,7 @@ def _peak_timing(ds, y, period, min_prominence=0.0):
         "cycle_strengths", "weak_seasons"))
 
 
-PEAK_TIMING = SeriesOp(lambda ds, dt, y: [
+PEAK_TIMING = SeriesOp(lambda ds, dt, y, *_: [
     _f("timing_classification", _S), _f("modulation_type", _S),
     _f("has_stable_timing", _B), _f("timing_variability", _D),
     _f("seasonal_strength", _D), _f("is_seasonal", _B),
@@ -999,7 +970,7 @@ def _changepoints(ds, y, min_size=2, penalty=None, cost="l2",
     return ds, is_cp, is_cp.astype(float)
 
 
-CHANGEPOINTS = SeriesOp(lambda ds, dt, y: [
+CHANGEPOINTS = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f("is_changepoint", _B),
     _f("changepoint_probability", _D)], _changepoints)
 
@@ -1009,7 +980,7 @@ def _mstl(ds, y, periods=None):
     return ds, trend, seasonal, remainder, [ms] * len(trend)
 
 
-MSTL = SeriesOp(lambda ds, dt, y: [
+MSTL = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f("trend", _D), _f("seasonal", _D), _f("remainder", _D),
     _f("periods", T.ArrayType(_I))], _mstl)
 
@@ -1078,28 +1049,28 @@ def ts_detect_periods_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     match_deviation, n_periods, primary_period, method)."""
     p = dict(params or {})
     min_confidence = p.get("min_confidence")
-    return _grouped_udf(df, group_col, ds_col, y_col, PERIODS,
-                        str(p.get("method", "auto")),
-                        p.get("expected_periods"),
-                        None if min_confidence is None else float(min_confidence))
+    return series_map(df, group_col, ds_col, y_col, PERIODS,
+                      str(p.get("method", "auto")),
+                      p.get("expected_periods"),
+                      None if min_confidence is None else float(min_confidence))
 
 
 def ts_analyze_seasonality_by(df: DataFrame, group_col: str, ds_col: str,
                               y_col: str) -> DataFrame:
     """(<group>, detected_periods[], primary_period, seasonal_strength,
     trend_strength) — ``seasonality.rs:323-380``."""
-    return _grouped_udf(df, group_col, ds_col, y_col, SEASONALITY)
+    return series_map(df, group_col, ds_col, y_col, SEASONALITY)
 
 
 def ts_classify_seasonality_by(df: DataFrame, group_col: str, ds_col: str,
                                y_col: str, period: int) -> DataFrame:
-    return _grouped_udf(df, group_col, ds_col, y_col, CLASSIFY, period)
+    return series_map(df, group_col, ds_col, y_col, CLASSIFY, period)
 
 
 def ts_seasonal_strength_by(df: DataFrame, group_col: str, ds_col: str,
                             y_col: str, period: int,
                             method: str = "variance") -> DataFrame:
-    return _grouped_udf(df, group_col, ds_col, y_col, STRENGTH, period, method)
+    return series_map(df, group_col, ds_col, y_col, STRENGTH, period, method)
 
 
 def ts_detrend_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
@@ -1107,15 +1078,15 @@ def ts_detrend_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     """Row-per-observation detrended output: (<group>, <ds>, <y>, trend,
     detrended, method) — macro ``ts_macros.cpp:434-460``."""
     p = dict(params or {})
-    return _grouped_udf(df, group_col, ds_col, y_col, DETREND,
-                        str(p.get("method", "linear")), int(p.get("degree", 2)),
-                        int(p.get("order", 1)), float(p.get("bandwidth", 0.3)))
+    return series_map(df, group_col, ds_col, y_col, DETREND,
+                      str(p.get("method", "linear")), int(p.get("degree", 2)),
+                      int(p.get("order", 1)), float(p.get("bandwidth", 0.3)))
 
 
 def ts_decompose_seasonal_by(df: DataFrame, group_col: str, ds_col: str,
                              y_col: str, period: int,
                              method: str = "additive") -> DataFrame:
-    return _grouped_udf(df, group_col, ds_col, y_col, DECOMPOSE, period, method)
+    return series_map(df, group_col, ds_col, y_col, DECOMPOSE, period, method)
 
 
 def mstl_decompose(y: np.ndarray, periods: list[int] | None = None):
@@ -1143,22 +1114,22 @@ def ts_mstl_decomposition_by(df: DataFrame, group_col: str, ds_col: str,
     """(<group>, <ds>, trend, seasonal, remainder, periods) — macro
     ``ts_macros.cpp:419-433``, native ``ts_mstl_decomposition_native.cpp``."""
     periods = dict(params or {}).get("seasonal_periods")
-    return _grouped_udf(df, group_col, ds_col, y_col, MSTL, periods)
+    return series_map(df, group_col, ds_col, y_col, MSTL, periods)
 
 
 def ts_detect_peaks_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                        params: dict | None = None) -> DataFrame:
     """One row per peak: (<group>, <ds>, <y>, peak_index, prominence)."""
     min_prom = float(dict(params or {}).get("min_prominence", 0.0))
-    return _grouped_udf(df, group_col, ds_col, y_col, PEAKS, min_prom)
+    return series_map(df, group_col, ds_col, y_col, PEAKS, min_prom)
 
 
 def ts_analyze_peak_timing_by(df: DataFrame, group_col: str, ds_col: str,
                               y_col: str, period: int,
                               params: dict | None = None) -> DataFrame:
     min_prom = float(dict(params or {}).get("min_prominence", 0.0))
-    return _grouped_udf(df, group_col, ds_col, y_col, PEAK_TIMING, period,
-                        min_prom)
+    return series_map(df, group_col, ds_col, y_col, PEAK_TIMING, period,
+                      min_prom)
 
 
 def ts_detect_changepoints_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1167,11 +1138,11 @@ def ts_detect_changepoints_by(df: DataFrame, group_col: str, ds_col: str,
     ``ts_macros.cpp:489-538``, output ``ts_changepoints.cpp:519-528``."""
     p = dict(params or {})
     penalty = p.get("penalty")
-    return _grouped_udf(df, group_col, ds_col, y_col, CHANGEPOINTS,
-                        int(p.get("min_size", 2)),
-                        None if penalty is None else float(penalty),
-                        str(p.get("cost", "l2")), str(p.get("method", "pelt")),
-                        float(p.get("hazard_lambda", 250.0)))
+    return series_map(df, group_col, ds_col, y_col, CHANGEPOINTS,
+                      int(p.get("min_size", 2)),
+                      None if penalty is None else float(penalty),
+                      str(p.get("cost", "l2")), str(p.get("method", "pelt")),
+                      float(p.get("hazard_lambda", 250.0)))
 
 
 # ---------------------------------------------------------------------------
@@ -1208,7 +1179,7 @@ def _windowed(ds, y, period, win):
     return tuple([r[i] for r in rows] for i in range(3))
 
 
-WINDOWED = SeriesOp(lambda ds, dt, y: [
+WINDOWED = SeriesOp(lambda ds, dt, y, *_: [
     _f("window_start", _I), _f("window_end", _I),
     _f("seasonal_strength", _D)], _windowed)
 
@@ -1222,7 +1193,7 @@ def ts_seasonal_strength_windowed_by(df: DataFrame, group_col: str, ds_col: str,
     default 2×period like ``seasonality.rs:703`` (win_size)."""
     period = int(period)
     win = int(window) if window else 2 * period
-    return _grouped_udf(df, group_col, ds_col, y_col, WINDOWED, period, win)
+    return series_map(df, group_col, ds_col, y_col, WINDOWED, period, win)
 
 
 def _seasonality_changes(ds, y, period, win, thr):
@@ -1245,7 +1216,7 @@ def _seasonality_changes(ds, y, period, win, thr):
     return tuple([r[i] for r in rows] for i in range(4))
 
 
-SEASONALITY_CHANGES = SeriesOp(lambda ds, dt, y: [
+SEASONALITY_CHANGES = SeriesOp(lambda ds, dt, y, *_: [
     _f("index", _I), _f("change_type", _S), _f("strength_before", _D),
     _f("strength_after", _D)], _seasonality_changes)
 
@@ -1259,9 +1230,9 @@ def ts_detect_seasonality_changes_by(df: DataFrame, group_col: str, ds_col: str,
     {appeared, disappeared, increased, decreased} against `threshold`."""
     p = dict(params or {})
     period = int(period)
-    return _grouped_udf(df, group_col, ds_col, y_col, SEASONALITY_CHANGES,
-                        period, int(p.get("window_size", 2 * period)),
-                        float(p.get("threshold", 0.3)))
+    return series_map(df, group_col, ds_col, y_col, SEASONALITY_CHANGES,
+                      period, int(p.get("window_size", 2 * period)),
+                      float(p.get("threshold", 0.3)))
 
 
 def _instantaneous(ds, y):
@@ -1280,7 +1251,7 @@ def _instantaneous(ds, y):
     return ds, per, freq, amp
 
 
-INSTANTANEOUS = SeriesOp(lambda ds, dt, y: [
+INSTANTANEOUS = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f("period", _D), _f("frequency", _D),
     _f("amplitude", _D)], _instantaneous)
 
@@ -1292,7 +1263,7 @@ def ts_instantaneous_period_by(df: DataFrame, group_col: str, ds_col: str,
     ``seasonality.rs:744-760``, output ``ts_detrend.cpp:612-695`` (arrays;
     we emit rows, the relational form). ``period`` is NaN where
     |frequency| <= EPS."""
-    return _grouped_udf(df, group_col, ds_col, y_col, INSTANTANEOUS)
+    return series_map(df, group_col, ds_col, y_col, INSTANTANEOUS)
 
 
 def _amplitude_modulation(ds, y, period, mod_thr, seas_thr):
@@ -1324,7 +1295,7 @@ def _amplitude_modulation(ds, y, period, mod_thr, seas_thr):
     return [is_seasonal], [strength], [has_mod], [kind], [score], [trend]
 
 
-AMPLITUDE_MODULATION = SeriesOp(lambda ds, dt, y: [
+AMPLITUDE_MODULATION = SeriesOp(lambda ds, dt, y, *_: [
     _f("is_seasonal", _B), _f("seasonal_strength", _D),
     _f("has_modulation", _B), _f("modulation_type", _S),
     _f("modulation_score", _D), _f("amplitude_trend", _D)],
@@ -1341,9 +1312,9 @@ def ts_detect_amplitude_modulation_by(df: DataFrame, group_col: str, ds_col: str
     (numpy stand-in for the reference's Morlet wavelet), modulation score =
     CV of the per-cycle envelope."""
     p = dict(params or {})
-    return _grouped_udf(df, group_col, ds_col, y_col, AMPLITUDE_MODULATION,
-                        int(period), float(p.get("modulation_threshold", 0.2)),
-                        float(p.get("seasonality_threshold", 0.3)))
+    return series_map(df, group_col, ds_col, y_col, AMPLITUDE_MODULATION,
+                      int(period), float(p.get("modulation_threshold", 0.2)),
+                      float(p.get("seasonality_threshold", 0.3)))
 
 
 def ts_detect_anomalies_by(df: DataFrame, group_col: str, ds_col: str,
@@ -1549,6 +1520,6 @@ def _online_zscore(ds, y, thr, mo):
     return tuple([r[i] for r in rows] for i in range(6))
 
 
-ONLINE_ZSCORE = SeriesOp(lambda ds, dt, y: [
+ONLINE_ZSCORE = SeriesOp(lambda ds, dt, y, *_: [
     _f(ds, dt), _f(y, _D), _f("exp_mean", _D), _f("exp_std", _D),
     _f("online_z", _D), _f("is_anomaly", _B)], _online_zscore)

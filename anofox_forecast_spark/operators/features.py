@@ -4,7 +4,8 @@ Parity target: ``crates/anofox-fcst-core/src/features.rs`` (feature list
 :327-441, computations :7-326, helpers :465-1075); macros
 ``ts_macros.cpp:1644-1789``; native TF ``ts_features_native.cpp``.
 
-One Arrow-batched pandas UDF per series returns all features as a wide row.
+One ``SeriesOp``, ``FEATURES``, returns a series' selected features as a
+wide row, for ``ts_features_by`` and its SQL forms alike.
 Formulas re-derived from the cited reference lines (population moments,
 linear-interp quantiles, PACF via 2-lag Yule-Walker, Benford correlation,
 m=2/r=0.2σ sample & approximate entropy, order-3 permutation entropy,
@@ -16,10 +17,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.batched import SeriesOp, series_map
 
 EPS = 2.220446049250313e-16
 
@@ -430,6 +432,12 @@ def feature_columns(ds, y, selected: list[str]) -> tuple:
     return tuple([feats[x]] for x in selected)
 
 
+FEATURES = SeriesOp(
+    lambda ds, dt, y, selected: [T.StructField(_safe(x), T.DoubleType())
+                                 for x in selected],
+    feature_columns)
+
+
 def ts_features_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                    features: list[str] | None = None) -> DataFrame:
     """Wide per-series feature table: (<group>, one column per feature).
@@ -438,21 +446,8 @@ def ts_features_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
     ``ts_features_config_*``; unknown names raise like ``features.rs:449``
     warns). Dots in names are mapped to underscores for Spark columns.
     """
-    selected = selected_features(features)
-    gtype = df.schema[group_col].dataType
-    schema = T.StructType(
-        [T.StructField(group_col, gtype)]
-        + [T.StructField(_safe(x), T.DoubleType()) for x in selected])
-
-    def one(kt, pdf: pd.DataFrame):
-        # columnar return (see batched_grouped_map): one 118-column
-        # pandas DataFrame per series was the dominant per-series cost
-        return ([kt[0]], *feature_columns(
-            None, pdf[y_col].to_numpy(dtype=float), selected))
-
-    from ..functions.batched import batched_grouped_map
-    base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
-    return batched_grouped_map(base, [group_col], ds_col, schema, one)
+    return series_map(df, group_col, ds_col, y_col, FEATURES,
+                      selected_features(features))
 
 
 def ts_features_table(df: DataFrame, ds_col: str, y_col: str,

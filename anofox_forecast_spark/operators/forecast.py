@@ -17,7 +17,7 @@ Two physical strategies, chosen per model:
   ``explode(sequence(1, h))``. No Python in the data path; the whole plan
   is Catalyst-optimized and whole-stage-codegen'd. At 100 TB this is a
   single shuffle on the group key.
-- **Python path** (everything else): ``batched_grouped_map``
+- **Python path** (everything else): ``series_map`` over ``FORECAST``
   (``repartition + sortWithinPartitions + mapInPandas``, one crossing per
   Arrow batch) over the numpy model library (``functions/models.py``). The
   shuffle is the same; model fitting is embarrassingly parallel across
@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from ..frequency import Frequency, parse_frequency
 from ..sources import NO_NAN_METADATA
 from ..functions import models as M
-from ..functions.batched import batched_grouped_map, repartition_series
+from ..functions.batched import SeriesOp, repartition_series, series_map
 
 FORECAST_FIELDS = [
     ("forecast_step", T.IntegerType()),
@@ -157,23 +157,28 @@ def fit_one(spec: ForecastSpec, y, h: int | None = None,
         return None
 
 
+def forecast_fields(ds_col: str, ds_type: T.DataType) -> list:
+    """``(forecast_step, ds, yhat, yhat_lower, yhat_upper, model_name)``,
+    the forecast columns after the group column, with the input's date
+    name and type (ref ``ts_forecast_native.cpp:426-452``)."""
+    return ([T.StructField("forecast_step", T.IntegerType()),
+             T.StructField(ds_col, ds_type)]
+            + [T.StructField(n, t) for n, t in FORECAST_FIELDS[1:]])
+
+
 def forecast_schema(schema: T.StructType, group_col: str | None,
                     ds_col: str) -> T.StructType:
-    """``(group, forecast_step, ds, yhat, yhat_lower, yhat_upper,
-    model_name)`` with the input's group/date names and types (ref
-    ``ts_forecast_native.cpp:426-452``); no group column when
-    ``group_col`` is None."""
+    """``(group, *forecast_fields)`` with the input's group/date names and
+    types; no group column when ``group_col`` is None."""
     key = [] if group_col is None else [group_col]
     return T.StructType(
         [T.StructField(c, schema[c].dataType) for c in key]
-        + [T.StructField("forecast_step", T.IntegerType()),
-           T.StructField(ds_col, schema[ds_col].dataType)]
-        + [T.StructField(n, t) for n, t in FORECAST_FIELDS[1:]])
+        + forecast_fields(ds_col, schema[ds_col].dataType))
 
 
-def forecast_block(spec: ForecastSpec, key, last, r: M.ForecastResult,
+def forecast_block(spec: ForecastSpec, last, r: M.ForecastResult,
                    is_int: bool) -> tuple:
-    """One fitted series as columns in :func:`forecast_schema` order.
+    """One fitted series as columns in :func:`forecast_fields` order.
 
     Future dates step from the series' ``last`` ds: integer date columns
     are ordinals, calendar frequencies use month-end-clamped month
@@ -184,6 +189,7 @@ def forecast_block(spec: ForecastSpec, key, last, r: M.ForecastResult,
     freq = spec.freq
     if is_int or freq.kind == "int":
         n = freq.n if freq.kind == "int" else 1
+        last = int(last) if is_int else last
         ds = [last + n * s for s in range(1, h + 1)]
     elif freq.kind == "month":
         last = pd.Timestamp(last)
@@ -191,8 +197,25 @@ def forecast_block(spec: ForecastSpec, key, last, r: M.ForecastResult,
     else:
         last = pd.Timestamp(last)
         ds = [last + td for td in spec.tds[:h]]
-    return ([key] * h, list(range(1, h + 1)), ds, r.point, r.lower, r.upper,
+    return (list(range(1, h + 1)), ds, r.point, r.lower, r.upper,
             [r.model_name] * h)
+
+
+def forecast_series(ds, y, spec: ForecastSpec, is_int: bool) -> tuple | None:
+    """The forecast block of one ds-sorted series, or None when its fit
+    fails. Rows with a NULL ds are not part of the series."""
+    dated = ~pd.isna(ds)
+    if not dated.all():
+        ds, y = ds[dated], y[dated]
+    r = fit_one(spec, y)
+    return None if r is None else forecast_block(spec, ds[-1], r, is_int)
+
+
+#: the model-library forecast of ``ts_forecast_by`` (Python path) and of
+#: the SQL ``ts_forecast_by`` / ``ts_forecast``; its argument is a
+#: :class:`ForecastSpec`
+FORECAST = SeriesOp(lambda ds, dt, y, *_: forecast_fields(ds, dt),
+                    forecast_series, int_ds=True)
 
 
 def _z(level: float) -> float:
@@ -872,7 +895,7 @@ def _seasonal_es_sql(base: DataFrame, group_col: str, ds_col: str,
 
 
 # ---------------------------------------------------------------------------
-# pandas-UDF path
+# Calendar arithmetic of the Python path's future dates
 # ---------------------------------------------------------------------------
 
 def _add_months_clamped(ts: pd.Timestamp, k: int) -> pd.Timestamp:
@@ -887,36 +910,6 @@ def _add_months_clamped(ts: pd.Timestamp, k: int) -> pd.Timestamp:
     d1 = min(d0, last_day.day)
     return pd.Timestamp(year=y1, month=m1, day=d1, hour=ts.hour,
                         minute=ts.minute, second=ts.second)
-
-
-def _forecast_udf(df: DataFrame, group_col: str, ds_col: str, y_col: str,
-                  spec: ForecastSpec) -> DataFrame:
-    """Model-library path.
-
-    Physical strategy: ``repartition(group) + sortWithinPartitions(group, ds)
-    + mapInPandas`` rather than ``groupBy().applyInPandas``. Both shuffle
-    once on the series key; the difference is per-series overhead — grouped
-    map crosses the JVM↔Python boundary once PER SERIES, while this path
-    crosses once per Arrow batch and walks series boundaries inside pandas.
-    At 10M series that is the difference between 10M Python roundtrips and
-    ~10k. A series split across adjacent Arrow batches is handled with a
-    carry buffer (sort guarantees contiguity within the partition).
-    """
-    is_int_ds = isinstance(df.schema[ds_col].dataType,
-                           (T.IntegerType, T.LongType))
-
-    def one_series(key, pdf: pd.DataFrame):
-        r = fit_one(spec, pdf[y_col].to_numpy(dtype=float))
-        if r is None:
-            return None
-        # columnar return (see batched_grouped_map)
-        return forecast_block(spec, key, pdf[ds_col].iloc[-1], r, is_int_ds)
-
-    base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col)) \
-             .filter(F.col(ds_col).isNotNull())
-    return batched_grouped_map(base, [group_col], ds_col,
-                               forecast_schema(df.schema, group_col, ds_col),
-                               lambda kt, g: one_series(kt[0], g))
 
 
 # ---------------------------------------------------------------------------
@@ -945,7 +938,7 @@ def ts_forecast_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                 and p.get("beta") is not None)):
         return _forecast_sql(df, group_col, ds_col, y_col, model,
                              spec.horizon, spec.freq, spec.level, p)
-    return _forecast_udf(df, group_col, ds_col, y_col, spec)
+    return series_map(df, group_col, ds_col, y_col, FORECAST, spec)
 
 
 def ts_forecast(df: DataFrame, ds_col: str, y_col: str, method: str,

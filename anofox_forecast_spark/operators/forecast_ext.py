@@ -70,8 +70,9 @@ def ts_forecast_exog_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                      fut[list(future_xreg_cols)].astype(float).to_numpy()))
         if r is None:
             return empty
-        return pd.DataFrame(dict(zip(schema.names, forecast_block(
-            spec, key[0], hist[ds_col].iloc[-1], r, is_int_ds))))
+        block = forecast_block(spec, hist[ds_col].iloc[-1], r, is_int_ds)
+        return pd.DataFrame(dict(zip(schema.names,
+                                     ([key[0]] * len(r.point), *block))))
 
     hist = df.select(group_col, ds_col,
                      F.col(y_col).cast("double").alias(y_col),
@@ -191,9 +192,8 @@ def ts_forecast_inspect_by(df: DataFrame, group_col: str, ds_col: str,
             [T.StructField(n, t) for n, t in _INSPECT_SCHEMA_FIELDS])),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> tuple | None:
-        r = fit_one(spec, pdf[y_col].astype(float).to_numpy())
-        # columnar return (see batched_grouped_map)
+    def fn(key: tuple, cols: dict) -> tuple | None:
+        r = fit_one(spec, cols[y_col])
         return None if r is None else ([key[0]], [inspect_result(r)])
 
     base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col)) \
@@ -286,12 +286,11 @@ def ts_forecast_explain_by(df: DataFrame, group_col: str, ds_col: str,
         ])),
     ])
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> tuple | None:
-        yv = pdf[y_col].astype(float).to_numpy()
+    def fn(key: tuple, cols: dict) -> tuple | None:
+        yv = cols[y_col]
         r = fit_one(spec, yv)
         if r is None:
             return None
-        # columnar return (see batched_grouped_map)
         return ([key[0]],
                 [explain_decompose(yv, r, spec.horizon, spec.season)])
 

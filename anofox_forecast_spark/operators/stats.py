@@ -11,12 +11,12 @@ Parity targets:
   (``quality.rs:66-280``; macro ``ts_macros.cpp:124-173``).
 
 ``ts_stats_by`` and its SQL form run one per-series kernel,
-``series_stats``: every statistic of a series in one pass over its arrays,
-as the reference computes them. The DataFrame operator runs it through
-``batched_grouped_map``; the rollups are plain Spark aggregations. The
-numpy helpers below re-derive the reference formulas — bias-corrected
-G1/G2 moments, Hill tail index with k=√n, histogram entropy, rolling-mean
-stability — from the cited lines.
+``series_stats`` (the ``STATS`` op): every statistic of a series in one
+pass over its arrays, as the reference computes them. ``ts_data_quality``
+and its SQL form share ``DATA_QUALITY`` the same way; the rollups are
+plain Spark aggregations. The numpy helpers below re-derive the reference
+formulas — bias-corrected G1/G2 moments, Hill tail index with k=√n,
+histogram entropy, rolling-mean stability — from the cited lines.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..frequency import Frequency, parse_frequency
+from ..functions.batched import SeriesOp, series_map
 
 EPS = 2.220446049250313e-16
 
@@ -317,37 +318,35 @@ def series_stats(ds, y: np.ndarray, freq: Frequency | None) -> tuple:
 # Operators
 # ---------------------------------------------------------------------------
 
+STATS = SeriesOp(
+    lambda ds, dt, y, *_: [T.StructField(n, t, n not in ("length", "n_nulls",
+                                                          "n_nan"))
+                           for n, t in STATS_FIELDS],
+    series_stats)
+
+
 def ts_stats_by(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                 frequency=None) -> DataFrame:
     """Per-series 36-column statistics table. Output: (<group>, 36 stats).
 
-    One ``batched_grouped_map`` stage over ``series_stats``, the kernel
-    the SQL form ``ts_stats_by(TABLE(...))`` runs too: one pass over each
-    series' arrays, as the reference computes them (stats.rs:106-312).
-    A non-integer ``ds`` is cast to TIMESTAMP, so dates reach the kernel
-    as datetime64. ``length``, ``n_nulls`` and ``n_nan`` are
-    non-nullable; an undefined statistic (a tail index of fewer than 10
-    points, say) is NaN, as in the reference and the SQL form."""
-    from ..functions.batched import batched_grouped_map
+    ``series_map`` over ``STATS``, the op the SQL form
+    ``ts_stats_by(TABLE(...))`` runs too: one pass over each series'
+    arrays, as the reference computes them (stats.rs:106-312). A
+    non-integer ``ds`` is cast to TIMESTAMP, so dates reach the kernel as
+    datetime64. The group column keeps the input's nullability;
+    ``length``, ``n_nulls`` and ``n_nan`` are non-nullable; an undefined
+    statistic (a tail index of fewer than 10 points, say) is NaN, as in
+    the reference and the SQL form."""
     freq = parse_frequency(frequency) if frequency is not None else None
-    key = df.schema[group_col]
-    schema = T.StructType(
-        [T.StructField(group_col, key.dataType, key.nullable)]
-        + [T.StructField(n, t, n not in ("length", "n_nulls", "n_nan"))
-           for n, t in STATS_FIELDS])
     ds = f"`{ds_col}`"
     if not isinstance(df.schema[ds_col].dataType,
                       (T.IntegerType, T.LongType)):
         ds = f"CAST({ds} AS TIMESTAMP)"
-
-    def one(kt, pdf):
-        return ([kt[0]], *series_stats(pdf[ds_col].to_numpy(),
-                                        pdf[y_col].to_numpy(dtype=float),
-                                        freq))
-
     base = df.selectExpr(f"`{group_col}`", f"{ds} AS `{ds_col}`",
-                         f"CAST(`{y_col}` AS DOUBLE) AS `{y_col}`")
-    out = batched_grouped_map(base, [group_col], ds_col, schema, one)
+                         f"`{y_col}`")
+    key = df.schema[group_col]
+    out = series_map(base, group_col, ds_col, y_col, STATS, freq,
+                     lead=T.StructField(group_col, key.dataType, key.nullable))
     # Arrow turns the kernel's NaN into NULL; only a series without a
     # valid value has NULL statistics, so give the others their NaN back
     nan = "IF(length > n_nulls, CAST('NaN' AS DOUBLE), NULL)"
@@ -466,21 +465,17 @@ def data_quality(ds, y) -> tuple:
     return tuple([s[n]] for n, _ in DQ_FIELDS)
 
 
+DATA_QUALITY = SeriesOp(
+    lambda ds, dt, y, *_: [T.StructField(n, t) for n, t in DQ_FIELDS],
+    data_quality)
+
+
 def ts_data_quality(df: DataFrame, group_col: str, ds_col: str, y_col: str,
                     n_short: int = 10, frequency=None) -> DataFrame:
     """Per-series quality verdicts: (<group> as unique_id, 4 scores, overall,
     n_gaps, n_missing, is_constant) — ref macro ``ts_macros.cpp:124-148``."""
-    from ..functions.batched import batched_grouped_map
-    schema = T.StructType(
-        [T.StructField("unique_id", df.schema[group_col].dataType)]
-        + [T.StructField(n, t) for n, t in DQ_FIELDS])
-
-    def one(kt, pdf):
-        return ([kt[0]], *data_quality(pdf[ds_col].to_numpy(),
-                                        pdf[y_col].to_numpy(dtype=float)))
-
-    base = df.select(group_col, ds_col, F.col(y_col).cast("double").alias(y_col))
-    return batched_grouped_map(base, [group_col], ds_col, schema, one)
+    lead = T.StructField("unique_id", df.schema[group_col].dataType)
+    return series_map(df, group_col, ds_col, y_col, DATA_QUALITY, lead=lead)
 
 
 ts_data_quality_by = ts_data_quality

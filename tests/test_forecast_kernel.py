@@ -186,17 +186,17 @@ def test_fit_one_isolates_a_failed_fit():
 
 def test_forecast_block_steps_future_dates():
     r = fit(forecast_spec("Naive", 3), [1.0, 2.0, 3.0])
-    fixed = forecast_block(forecast_spec("Naive", 3, "1h"), "k",
+    fixed = forecast_block(forecast_spec("Naive", 3, "1h"),
                            pd.Timestamp("2024-01-31 05:00"), r, False)
-    assert fixed[0] == ["k"] * 3 and fixed[1] == [1, 2, 3]
-    assert fixed[2] == [pd.Timestamp("2024-01-31 05:00") + pd.Timedelta(hours=k)
+    assert fixed[0] == [1, 2, 3]
+    assert fixed[1] == [pd.Timestamp("2024-01-31 05:00") + pd.Timedelta(hours=k)
                         for k in (1, 2, 3)]
-    month = forecast_block(forecast_spec("Naive", 3, "1mo"), "k",
-                           pd.Timestamp("2024-01-31"), r, False)[2]
+    month = forecast_block(forecast_spec("Naive", 3, "1mo"),
+                           pd.Timestamp("2024-01-31"), r, False)[1]
     assert month == [pd.Timestamp(d) for d in
                      ("2024-02-29", "2024-03-31", "2024-04-30")]
-    assert forecast_block(forecast_spec("Naive", 3, "1d"), "k", 10, r,
-                          True)[2] == [11, 12, 13]
+    assert forecast_block(forecast_spec("Naive", 3, "1d"), 10, r,
+                          True)[1] == [11, 12, 13]
 
 
 def test_fit_with_regressors_is_ols_plus_model_on_residuals():
@@ -215,11 +215,21 @@ def test_fit_with_regressors_is_ols_plus_model_on_residuals():
 
 def test_sql_forecast_matches_dataframe_path(spark, kpanel):
     """The SQL table function and the DataFrame operator fit through the
-    same kernel: same rows for a Python-path model."""
-    sql = spark.sql("SELECT * FROM ts_forecast_by(TABLE(kpanel), 'id', 'ds', "
-                    "'y', 'Theta', 4, '1d', 0.8)").toPandas()
-    df = ts_forecast_by(kpanel, "id", "ds", "y", "Theta", 4, "1d",
+    same kernel: same rows for a Python-path model. A row with a NULL ds
+    is not part of its series on either surface (series ``c``)."""
+    start = dt.datetime(2024, 1, 1)
+    extra = spark.createDataFrame(
+        [("c", start + dt.timedelta(days=i), float(i)) for i in range(10)]
+        + [("c", None, 1000.0)], kpanel.schema)
+    panel = kpanel.unionByName(extra)
+    panel.createOrReplaceTempView("kpanel_null_ds")
+    sql = spark.sql("SELECT * FROM ts_forecast_by(TABLE(kpanel_null_ds), "
+                    "'id', 'ds', 'y', 'Theta', 4, '1d', 0.8)").toPandas()
+    df = ts_forecast_by(panel, "id", "ds", "y", "Theta", 4, "1d",
                         {"confidence_level": 0.8}).toPandas()
+    assert sorted(set(sql["id"])) == ["a", "b", "c"]
+    c = df[df["id"] == "c"].sort_values("forecast_step")
+    assert (c["yhat"] < 20).all(), "the NULL-ds row entered the fit"
     key = ["id", "forecast_step"]
     pd.testing.assert_frame_equal(
         sql.sort_values(key).reset_index(drop=True),

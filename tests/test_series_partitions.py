@@ -22,6 +22,8 @@ from anofox_forecast_spark.operators.conformal import (ts_bootstrap_quantiles,
                                                        ts_conformal_by)
 from anofox_forecast_spark.operators.cv import (ts_cv_folds_by,
                                                 ts_cv_forecast_by)
+from anofox_forecast_spark.operators.detect import ts_detect_changepoints_by
+from anofox_forecast_spark.operators.features import ts_features_by
 from anofox_forecast_spark.operators.forecast import ts_forecast_by
 from anofox_forecast_spark.operators.stats import (ts_data_quality,
                                                    ts_stats_by)
@@ -147,6 +149,11 @@ _SWEEP = {
     "stats": (lambda p: ts_stats_by(p, "id", "ds", "y", "1d"), ["id"], True),
     "data_quality": (lambda p: ts_data_quality(p, "id", "ds", "y"),
                      ["unique_id"], True),
+    "features": (lambda p: ts_features_by(
+        p, "id", "ds", "y", ["mean", "skewness", "autocorrelation_lag1"]),
+        ["id"], True),
+    "changepoints": (lambda p: ts_detect_changepoints_by(
+        p, "id", "ds", "y"), ["id", "ds"], True),
     "conformal": (_conformal, ["id"], False),
     "bootstrap": (_bootstrap, ["id", "quantile"], True),
 }
